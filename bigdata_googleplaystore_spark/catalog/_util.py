@@ -79,8 +79,3 @@ def money_sum_sql(dec_expr_sql: str, scale: int = 2) -> str:
 def revenue_dec(ep: str = "l_extendedprice", disc: str = "l_discount") -> Column:
     """(extendedprice * (1 - discount)) as exact decimal."""
     return dec2(F.col(ep)) * dec2(F.lit(1) - F.col(disc), 4)
-
-
-def charge_dec() -> Column:
-    """(extendedprice * (1 - discount) * (1 + tax)) as exact decimal."""
-    return revenue_dec() * dec2(F.lit(1) + F.col("l_tax"), 4)

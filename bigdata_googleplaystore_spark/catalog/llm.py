@@ -32,7 +32,7 @@ from ..functions.text import (
 )
 from ..functions.vectors import cosine_similarity
 from ..operators import dedup, similarity
-from ..sources import load_table
+from ..sources import load_table, scratch_dir
 from .registry import register
 
 # DuckDB fragments mirroring functions/text.py exactly.
@@ -257,13 +257,12 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     increments), or a verify miss all change the pair set and
     hash-fail. Incremental ≡ full-recompute-restricted is additionally
     asserted in tests/test_llm.py."""
-    from .ops import _stream_src_dir
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     delta = d.filter(F.col("doc_id") % 20 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"), "text"
     )
-    idx = _stream_src_dir("lsh_index", sf_dir)
+    idx = scratch_dir("lsh_index", sf_dir)
     dedup.write_lsh_index(d, idx, "doc_id", "text", n=3)
     buckets, hashed = dedup.read_lsh_index(spark, idx)
     return dedup.minhash_lsh_pairs_incremental(
@@ -951,10 +950,9 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "similarity", "ann", "eval"),
 )
 def sim_ann_ivf_full_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF's deterministic recall ENDPOINT as an oracle gate (r07
-    verdict item 5a, promoted from an assert inside
-    tools/ann_recall_probe_r07.py the way the Lloyd invariant was in
-    r06): with n_probe = n_cells, probing every cell IS exact search,
+    """IVF's deterministic recall ENDPOINT as an oracle gate (promoted
+    from an assert in the r07 recall probe, as the Lloyd invariant was
+    in r06): with n_probe = n_cells, probing every cell IS exact search,
     so the full IVF pipeline — deterministic Lloyd k-means training,
     cell assignment, probe-cell selection, candidate generation, exact
     cosine rank — must reproduce the brute-force top-5 VALUE-FOR-VALUE
@@ -1008,7 +1006,7 @@ def sim_ann_ivf_index_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STORED-INDEX contract of ivf_topk (the `centroids=` /
     `assigned=` parameters, the deployment shape where an index is
     trained once per corpus version and amortized across query
-    batches — tools/ann_cost_probe_r08.py measures why: rebuilding the
+    batches — COVERAGE.md records why: rebuilding the
     O(N x n_cells) assignment per batch inverts the cost advantage
     once n_cells > |queries|): k-means centroids and the corpus-to-cell
     assignment are built ONCE, then TWO disjoint query batches (ids
@@ -1092,12 +1090,11 @@ def sim_ann_ivf_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     serving the same rows it was handed. The stored-index consistency
     check (assigned cids must fit the centroid count, r08 advice) is
     unit-tested in tests/test_llm_batch2.py."""
-    from .ops import _stream_src_dir
 
     e = load_table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
-    idx = _stream_src_dir("ivf_index", sf_dir)
+    idx = scratch_dir("ivf_index", sf_dir)
     similarity.write_ivf_index(
         e, idx, "vec_id", "embedding", n_cells=8, iters=2
     )
@@ -1206,7 +1203,7 @@ def sim_ann_multitable_recall_bound(
       (losing the multi-table union collapses keep-rate to ~p^b =
       0.54 per pair at the threshold).
     The real-corpus recall CURVE vs table count (0.16 -> 0.938 at
-    L=1 -> 16, threshold 0.45) stays in near_dup_recall_probe_r07;
+    L=1 -> 16, threshold 0.45) stays in COVERAGE.md;
     this gate pins the production threshold's floor as driver-checked
     evidence. Scale: O(N) planted diagonal + the linear LSH path —
     no all-pairs truth scan (unlike sim_ann_recall_eval's exact-tier
@@ -5274,10 +5271,9 @@ def sketch_cms_merge_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .. import streaming
     from ..operators import sketches
-    from .ops import _stream_src_dir
 
     d = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    state = _stream_src_dir("cmsstate", sf_dir)
+    state = scratch_dir("cmsstate", sf_dir)
     shutil.rmtree(state, ignore_errors=True)
     for b in range(4):
         batch = d.where(F.pmod(F.col("doc_id"), F.lit(4)) == b)
@@ -5532,10 +5528,9 @@ def sketch_kmv_merge_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .. import streaming
     from ..operators import sketches
-    from .ops import _stream_src_dir
 
     d = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    state = _stream_src_dir("kmvstate", sf_dir)
+    state = scratch_dir("kmvstate", sf_dir)
     shutil.rmtree(state, ignore_errors=True)
     for b in range(4):
         batch = d.where(F.pmod(F.col("doc_id"), F.lit(4)) == b)
@@ -5596,14 +5591,13 @@ def sim_ann_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(|delta| x n_cells) — the daily-increment shape, never a corpus
     rescan; at n_probe < n_cells the probe cost model is unchanged,
     cells just hold more candidates."""
-    from .ops import _stream_src_dir
 
     e = load_table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
     base = e.filter(F.col("vec_id") % 3 != 0)
     delta = e.filter(F.col("vec_id") % 3 == 0)
-    idx = _stream_src_dir("ivf_index_append", sf_dir)
+    idx = scratch_dir("ivf_index_append", sf_dir)
     import shutil
 
     shutil.rmtree(idx, ignore_errors=True)
@@ -5673,13 +5667,12 @@ def dedup_ngram_jaccard_incremental(spark: SparkSession, sf_dir: str) -> DataFra
     and hash-fail. Incremental == full-recompute-restricted and
     pruned == full-scan are additionally asserted in
     tests/test_llm.py."""
-    from .ops import _stream_src_dir
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     delta = d.filter(F.col("doc_id") % 20 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"), "text"
     )
-    idx = _stream_src_dir("jac_index", sf_dir)
+    idx = scratch_dir("jac_index", sf_dir)
     # buckets=16 (explicit) so the gate's small corpus still exercises
     # real multi-bucket pruning, not the auto-sized single bucket
     dedup.write_jaccard_index(d, idx, "doc_id", "text", n=3, buckets=16)
@@ -5847,8 +5840,6 @@ def dedup_ingest_on_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-shingled, the index append is O(|survivors|), and the admission
     decision reads only the buckets the batch touches."""
     import shutil
-
-    from .ops import _stream_src_dir
     from ..streaming import manifest
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -5867,8 +5858,9 @@ def dedup_ingest_on_write(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).select((F.col("doc_id") + 20_000_000).alias("doc_id"), "text")
         )
     )
-    idx = _stream_src_dir("ingest_idx", sf_dir)
-    table = _stream_src_dir("ingest_tbl", sf_dir)
+
+    idx = scratch_dir("ingest_idx", sf_dir)
+    table = scratch_dir("ingest_tbl", sf_dir)
     for p in (idx, table):
         shutil.rmtree(p, ignore_errors=True)
     dedup.write_jaccard_index(base, idx, "doc_id", "text", n=3, buckets=8)

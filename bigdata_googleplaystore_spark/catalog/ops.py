@@ -14,7 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources import load_table
+from ..sources import load_table, manifest_log, scratch_dir
+from ..sources.storage import HadoopBackend
 from ._util import REVENUE_DEC_SQL, dec2, money_sum, money_sum_sql, revenue_dec
 from .registry import register
 
@@ -38,24 +39,6 @@ def _restore_confs(spark: SparkSession, saved: dict[str, str | None]) -> None:
             spark.conf.unset(k)
         else:
             spark.conf.set(k, v)
-
-
-def _stream_src_dir(tag: str, sf_dir: str) -> str:
-    """Deterministic scratch dir for the streaming gate queries' file
-    sources, keyed by (tag, sf_dir): repeated gate/bench runs re-write
-    the SAME path with mode=overwrite instead of leaking a fresh
-    mkdtemp copy of the events table per invocation (round-3 advice).
-    Lives under the system temp root so the OS/driver cleanup policies
-    apply; one copy per (query, SF) is the steady-state footprint."""
-    import hashlib
-    import os
-    import tempfile
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_stream_src")
-    path = os.path.join(root, f"{tag}_{key}")
-    os.makedirs(path, exist_ok=True)
-    return path
 
 
 # --------------------------------------------------------------------------
@@ -108,7 +91,7 @@ def partitioned_scan_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned write -> prune -> read round-trip is value-checked, not
     just plan-checked. Scratch copy goes to a deterministic overwrite
     path (sources.scratch_dir), one copy per SF on disk."""
-    from ..sources import scratch_dir, write_parquet
+    from ..sources import write_parquet
 
     l = load_table(spark, sf_dir, "lineitem").withColumn(
         "ship_year", F.year("l_shipdate")
@@ -155,7 +138,7 @@ def json_sink_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet/ORC (the other queries' layout), but log INGEST is
     JSON-shaped and this is that path. Explicit-schema read is the
     scale posture: inference would scan the input twice."""
-    from ..sources import read_json, scratch_dir, write_json
+    from ..sources import read_json, write_json
 
     o = load_table(spark, sf_dir, "orders")
     path = scratch_dir("orders_json", sf_dir)
@@ -194,7 +177,7 @@ def orc_sink_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py) and ORC's min/max stripe statistics skip
     non-matching stripes at scale — same pushdown story as the parquet
     S5/S6 rows, different at-rest format."""
-    from ..sources import read_orc, scratch_dir, write_orc
+    from ..sources import read_orc, write_orc
 
     l = load_table(spark, sf_dir, "lineitem")
     path = scratch_dir("lineitem_orc", sf_dir)
@@ -239,7 +222,7 @@ def text_sink_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     beneath CSV/JSON — web dumps and log files before any schema — and
     the bounds check means a truncated line, an encoding slip, or a
     partial file surfaces as a hash mismatch, not a plausible count."""
-    from ..sources import read_text, scratch_dir, write_text
+    from ..sources import read_text, write_text
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     lines = d.select(
@@ -508,7 +491,7 @@ def pydatasource_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     pydatasource.register(spark)
     # (tag, sf)-keyed scratch dir; cleared so a re-run can't read stale
     # part files from a previous layout
-    out = _stream_src_dir("pydsw", sf_dir)
+    out = scratch_dir("pydsw", sf_dir)
     shutil.rmtree(out, ignore_errors=True)
     src = (
         spark.read.format("docgen")
@@ -562,7 +545,7 @@ def bucketed_join_no_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes the query re-runnable."""
     import hashlib
 
-    from ..sources import scratch_dir, write_parquet
+    from ..sources import write_parquet
 
     key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     o = load_table(spark, sf_dir, "orders")
@@ -630,8 +613,6 @@ def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     same either way. Footer-only merge also means the per-file reader
     projects absent columns as nulls, which is what the n_evolved /
     min_year pair verifies."""
-    from ..sources import scratch_dir
-
     o = load_table(spark, sf_dir, "orders")
     base_cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"]
     path = scratch_dir("orders_evolving", sf_dir)
@@ -677,7 +658,7 @@ def compaction_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     follow file count, not byte count — compaction is the maintenance
     op that keeps a streaming-fed table scannable; fidelity is the
     property that makes it safe to run automatically."""
-    from ..sources import compact_parquet, scratch_dir
+    from ..sources import compact_parquet
 
     l = load_table(spark, sf_dir, "lineitem")
     frag = scratch_dir("lineitem_fragmented", sf_dir)
@@ -760,8 +741,6 @@ def dpp_partition_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     returned frame is driver-constructed from the probe's 2 collected
     rows (advisor r07: re-executing build() under session conf doubled
     the gate's cost for identical values)."""
-    from ..sources import scratch_dir
-
     ev = load_table(spark, sf_dir, "events")
     path = scratch_dir("events_by_type_dpp", sf_dir)
     ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
@@ -991,7 +970,6 @@ def zorder_pruning_payoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.parquet as papq
 
     from ..operators import layout
-    from ..sources import scratch_dir
 
     o = load_table(spark, sf_dir, "orders")
     cols = ["o_custkey", "o_totalprice"]
@@ -2026,7 +2004,7 @@ def stream_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .. import streaming
 
     batch = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    src = _stream_src_dir("sess", sf_dir)
+    src = scratch_dir("sess", sf_dir)
     batch.repartition(4).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(src)
@@ -2430,8 +2408,6 @@ def analyze_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduces to a few bytes of metadata per column; the harvested values
     are model-sized driver state, never data rows."""
     import hashlib
-
-    from ..sources import scratch_dir
 
     key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     tname = f"stats_orders_{key}"
@@ -3029,7 +3005,7 @@ def incremental_join_view_retractions(
     Scale posture: identical to the insert-only gate — history is only
     ever the probe side of a broadcast join against a batch-sized
     delta (no history shuffle, verified structurally by
-    tools/scale_probe_r08.py), the cross term is batch × batch, and
+    COVERAGE.md), the cross term is batch × batch, and
     the fold shuffles |keys| signed partial rows. l_quantity is
     integer-valued so signed double sums are exact under any
     accumulation order; avg is derived sum/count, rounded identically
@@ -5386,7 +5362,7 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .. import streaming
 
     batch = load_table(spark, sf_dir, "events")
-    src = _stream_src_dir("tumbling", sf_dir)
+    src = scratch_dir("tumbling", sf_dir)
     batch.repartition(4).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(src)
@@ -5430,8 +5406,8 @@ def stream_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     batch = load_table(spark, sf_dir, "events").select("event_type")
-    src = _stream_src_dir("statestore_src", sf_dir)
-    ckpt = _stream_src_dir("statestore_ckpt", sf_dir)
+    src = scratch_dir("statestore_src", sf_dir)
+    ckpt = scratch_dir("statestore_ckpt", sf_dir)
     # a reused checkpoint pins the OLD run's offsets/state; the gate
     # measures a fresh drain
     shutil.rmtree(ckpt, ignore_errors=True)
@@ -5540,7 +5516,7 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             "assumption is violated (not an engine bug)"
         )
 
-    src = _stream_src_dir("wmlate", sf_dir)
+    src = scratch_dir("wmlate", sf_dir)
     shutil.rmtree(src, ignore_errors=True)
     # micro-batch 1: day-one events + the newest event (advances the
     # watermark to mx - 1h once the batch commits)
@@ -6492,7 +6468,7 @@ def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type"
     )
-    src = _stream_src_dir("dedup", sf_dir)
+    src = scratch_dir("dedup", sf_dir)
     batch.unionByName(batch).repartition(4).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(src)
@@ -6564,7 +6540,7 @@ def stream_stateful_topk_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .. import streaming
 
     batch = load_table(spark, sf_dir, "events").select("user_id", "event_type")
-    src = _stream_src_dir("topk", sf_dir)
+    src = scratch_dir("topk", sf_dir)
     batch.repartition(4).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
     stream = (
@@ -6624,10 +6600,10 @@ def stream_incremental_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = load_table(spark, sf_dir, "events").select(
         "event_type", dec2(F.col("value")).alias("v")
     )
-    src = _stream_src_dir("incrview", sf_dir)
+    src = scratch_dir("incrview", sf_dir)
     batch.repartition(4).write.mode("overwrite").parquet(src)
-    state = _stream_src_dir("incrview_state", sf_dir)
-    ckpt = _stream_src_dir("incrview_ckpt", sf_dir)
+    state = scratch_dir("incrview_state", sf_dir)
+    ckpt = scratch_dir("incrview_ckpt", sf_dir)
     # fresh state/checkpoint per invocation: a stale checkpoint against a
     # rewritten source would mark every file already-committed
     shutil.rmtree(state, ignore_errors=True)
@@ -6696,7 +6672,7 @@ def mv_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", dec2(F.col("value")).alias("v")
     )
-    state = _stream_src_dir("ttravel_state", sf_dir)
+    state = scratch_dir("ttravel_state", sf_dir)
     shutil.rmtree(state, ignore_errors=True)
     # Backfill: each batch commits its own immutable partition through
     # the SAME writer the streaming MVs use (streaming.
@@ -6769,10 +6745,10 @@ def stream_cdc_signed_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         "_mult", F.lit(-1)
     )
     feed = inserts.unionByName(deletes).drop("user_id")
-    src = _stream_src_dir("cdcview", sf_dir)
+    src = scratch_dir("cdcview", sf_dir)
     feed.repartition(4).write.mode("overwrite").parquet(src)
-    state = _stream_src_dir("cdcview_state", sf_dir)
-    ckpt = _stream_src_dir("cdcview_ckpt", sf_dir)
+    state = scratch_dir("cdcview_state", sf_dir)
+    ckpt = scratch_dir("cdcview_ckpt", sf_dir)
     # fresh state/checkpoint per invocation: a stale checkpoint against a
     # rewritten source would mark every file already-committed
     shutil.rmtree(state, ignore_errors=True)
@@ -6849,10 +6825,10 @@ def stream_cdc_minmax_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         "_mult", F.lit(-1)
     )
     feed = inserts.unionByName(deletes)
-    src = _stream_src_dir("cdcminmax", sf_dir)
+    src = scratch_dir("cdcminmax", sf_dir)
     feed.repartition(4).write.mode("overwrite").parquet(src)
-    state = _stream_src_dir("cdcminmax_state", sf_dir)
-    ckpt = _stream_src_dir("cdcminmax_ckpt", sf_dir)
+    state = scratch_dir("cdcminmax_state", sf_dir)
+    ckpt = scratch_dir("cdcminmax_ckpt", sf_dir)
     shutil.rmtree(state, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     schema = spark.read.parquet(src).schema
@@ -6930,7 +6906,7 @@ def mv_state_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    state = _stream_src_dir("compactstate", sf_dir)
+    state = scratch_dir("compactstate", sf_dir)
     shutil.rmtree(state, ignore_errors=True)
     for b in range(4):
         batch = o.filter(F.col("o_orderkey") % 4 == b).drop("o_orderkey")
@@ -6990,7 +6966,7 @@ def stream_static_enrich_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("user_id") % 4 == 0, "gold").otherwise("basic"),
         )
     )
-    src = _stream_src_dir("enrich", sf_dir)
+    src = scratch_dir("enrich", sf_dir)
     e.repartition(4).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(src)
@@ -7095,7 +7071,7 @@ def stream_stream_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    src = _stream_src_dir("ssj", sf_dir)
+    src = scratch_dir("ssj", sf_dir)
     ev.repartition(4).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
 
@@ -7481,7 +7457,7 @@ def range_join_bucket_decomposed(spark: SparkSession, sf_dir: str) -> DataFrame:
     degrades gracefully to a shuffled hash join on bucket — the point
     of the pattern. The events scan reads only [value].
 
-    Measured (tools/scale_probe_r08c.py, sf0.1, 100k points, interval
+    Measured (COVERAGE.md, sf0.1, 100k points, interval
     count swept 512→2048→8192, median-of-3, equal match counts
     asserted): the naive NLJ goes 0.43s → 1.17s → 29.6s while the
     decomposed join goes 0.28s → 0.50s → 2.9s — the speedup widens
@@ -7806,7 +7782,7 @@ def mv_manifest_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = _stream_src_dir("manifeststate", sf_dir)
+    table = scratch_dir("manifeststate", sf_dir)
     shutil.rmtree(table, ignore_errors=True)
     for b in range(4):
         batch = o.filter(F.col("o_orderkey") % 4 == b).drop("o_orderkey")
@@ -7903,10 +7879,10 @@ def stream_manifest_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = load_table(spark, sf_dir, "events").select(
         "event_type", dec2(F.col("value")).alias("v")
     )
-    src = _stream_src_dir("manifeststream", sf_dir)
+    src = scratch_dir("manifeststream", sf_dir)
     batch.repartition(4).write.mode("overwrite").parquet(src)
-    table = _stream_src_dir("manifeststream_state", sf_dir)
-    ckpt = _stream_src_dir("manifeststream_ckpt", sf_dir)
+    table = scratch_dir("manifeststream_state", sf_dir)
+    ckpt = scratch_dir("manifeststream_ckpt", sf_dir)
     shutil.rmtree(table, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     schema = spark.read.parquet(src).schema
@@ -7989,7 +7965,7 @@ def mv_manifest_row_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = _stream_src_dir("mordeletes", sf_dir)
+    table = scratch_dir("mordeletes", sf_dir)
     shutil.rmtree(table, ignore_errors=True)
     for b in range(3):
         streaming.write_batch_partition(
@@ -8008,7 +7984,7 @@ def mv_manifest_row_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # data partitions untouched by the delete: raw union still has them
     raw_rows = spark.read.parquet(
-        *[f"{table}/_batch_id={b}" for b in range(3)]
+        *[manifest_log.batch_path(table, b) for b in range(3)]
     ).count()
     masked_rows = pre.agg(F.sum("n1")).collect()[0][0]
     manifest.compact_rows_apply_deletes(spark, table, upto_batch=1)
@@ -8018,7 +7994,7 @@ def mv_manifest_row_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the rewritten base physically dropped the deleted keys
     base = spark.read.parquet(
-        f"{table}/_batch_id={streaming.compact_base_id(1)}"
+        manifest_log.batch_path(table, manifest_log.compact_base_id(1))
     )
     leaked = base.filter(F.col("o_orderkey") % 10 == 3).count()
     mismatches = (
@@ -8091,7 +8067,7 @@ def mv_manifest_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
-    table = _stream_src_dir("changefeed", sf_dir)
+    table = scratch_dir("changefeed", sf_dir)
     shutil.rmtree(table, ignore_errors=True)
     for b in range(2):
         streaming.write_batch_partition(
@@ -8162,7 +8138,7 @@ def mv_manifest_zone_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderdate", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = _stream_src_dir("zoneskip", sf_dir)
+    table = scratch_dir("zoneskip", sf_dir)
     shutil.rmtree(table, ignore_errors=True)
     bounds = ["1997-01-01", "1999-01-01", "2000-07-01"]
     conds = [
@@ -8239,7 +8215,7 @@ def mv_manifest_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = _stream_src_dir("morupsert", sf_dir)
+    table = scratch_dir("morupsert", sf_dir)
     shutil.rmtree(table, ignore_errors=True)
     for b in range(2):
         streaming.write_batch_partition(
@@ -8324,7 +8300,7 @@ def mv_manifest_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = _stream_src_dir("bloomlookup", sf_dir)
+    table = scratch_dir("bloomlookup", sf_dir)
     shutil.rmtree(table, ignore_errors=True)
     for b in range(8):
         manifest.write_and_commit_batch_with_bloom(
@@ -8389,7 +8365,7 @@ def mv_manifest_metadata_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = _stream_src_dir("metacount", sf_dir)
+    table = scratch_dir("metacount", sf_dir)
     shutil.rmtree(table, ignore_errors=True)
     for b in range(4):
         manifest.write_and_commit_batch(
@@ -8411,7 +8387,7 @@ def mv_manifest_metadata_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # second table: the UPSERT path (finite cutoff) + compaction DOES
     # restore metadata-exactness
-    table2 = _stream_src_dir("metacount2", sf_dir)
+    table2 = scratch_dir("metacount2", sf_dir)
     shutil.rmtree(table2, ignore_errors=True)
     for b in range(2):
         manifest.write_and_commit_batch(
@@ -8483,7 +8459,7 @@ def mv_manifest_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = _stream_src_dir("rollback", sf_dir)
+    table = scratch_dir("rollback", sf_dir)
     shutil.rmtree(table, ignore_errors=True)
     for b in range(2):
         streaming.write_batch_partition(
@@ -8562,7 +8538,7 @@ def mv_manifest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
-    table = _stream_src_dir("schemaevo", sf_dir)
+    table = scratch_dir("schemaevo", sf_dir)
     shutil.rmtree(table, ignore_errors=True)
     streaming.write_batch_partition(
         o.filter(F.col("o_orderkey") % 2 == 0), table, 0
@@ -8638,7 +8614,7 @@ def mv_manifest_forget_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = _stream_src_dir("forget", sf_dir)
+    table = scratch_dir("forget", sf_dir)
     shutil.rmtree(table, ignore_errors=True)
     for b in range(3):
         streaming.write_batch_partition(
@@ -8656,18 +8632,16 @@ def mv_manifest_forget_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def raw_forgotten_rows() -> int:
         # erasure audit over EVERYTHING left on disk that can hold the
-        # keys: the data partitions AND the _deletes key files (the
+        # keys: the data partitions AND the delete-key files (the
         # forget request itself is PII — masking semantics aside, the
         # key bytes must not survive the flow either)
-        import glob as _glob
-
         ids = streaming.list_batch_partitions(spark, table)
         raw = spark.read.parquet(
-            *[f"{table}/_batch_id={b}" for b in ids]
+            *[manifest_log.batch_path(table, b) for b in ids]
         )
         n = raw.filter(F.col("o_orderkey") % 100 == 42).count()
-        for dpath in _glob.glob(f"{table}/_deletes/d*"):
-            keys = spark.read.parquet(dpath)
+        for d in manifest_log.list_delete_ids(HadoopBackend(spark), table):
+            keys = spark.read.parquet(manifest_log.delete_path(table, d))
             n += keys.filter(F.col("o_orderkey") % 100 == 42).count()
         return n
 
@@ -8734,9 +8708,9 @@ def stream_from_manifest_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = _stream_src_dir("msrc", sf_dir)
-    sink = _stream_src_dir("msrc_sink", sf_dir)
-    ckpt = _stream_src_dir("msrc_ckpt", sf_dir)
+    table = scratch_dir("msrc", sf_dir)
+    sink = scratch_dir("msrc_sink", sf_dir)
+    ckpt = scratch_dir("msrc_ckpt", sf_dir)
     for d in (table, sink, ckpt):
         shutil.rmtree(d, ignore_errors=True)
     for b in range(3):
@@ -8822,9 +8796,9 @@ def stream_cdf_from_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = _stream_src_dir("mcdf", sf_dir)
-    sink = _stream_src_dir("mcdf_sink", sf_dir)
-    ckpt = _stream_src_dir("mcdf_ckpt", sf_dir)
+    table = scratch_dir("mcdf", sf_dir)
+    sink = scratch_dir("mcdf_sink", sf_dir)
+    ckpt = scratch_dir("mcdf_ckpt", sf_dir)
     for d in (table, sink, ckpt):
         shutil.rmtree(d, ignore_errors=True)
     for b in range(2):
@@ -8938,9 +8912,9 @@ def stream_cdf_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("k"),
         dec2(F.col("o_totalprice")).alias("v"),
     )
-    table = _stream_src_dir("scd2", sf_dir)
-    sink = _stream_src_dir("scd2_sink", sf_dir)
-    ckpt = _stream_src_dir("scd2_ckpt", sf_dir)
+    table = scratch_dir("scd2", sf_dir)
+    sink = scratch_dir("scd2_sink", sf_dir)
+    ckpt = scratch_dir("scd2_ckpt", sf_dir)
     for d in (table, sink, ckpt):
         shutil.rmtree(d, ignore_errors=True)
     streaming.write_batch_partition(o.filter(F.col("k") % 3 == 0), table, 0)
@@ -9043,7 +9017,7 @@ def batch_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = _stream_src_dir("btc", sf_dir)
+    table = scratch_dir("btc", sf_dir)
     shutil.rmtree(table, ignore_errors=True)
     for b in range(2):
         streaming.write_batch_partition(
@@ -9121,7 +9095,7 @@ def mv_manifest_timestamp_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = _stream_src_dir("tstravel", sf_dir)
+    table = scratch_dir("tstravel", sf_dir)
     shutil.rmtree(table, ignore_errors=True)
     manifest.write_and_commit_batch(
         spark, o.filter(F.col("o_orderkey") % 2 == 0), table, 0
@@ -9188,7 +9162,7 @@ def mv_manifest_conditional_put(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = _stream_src_dir("cput", sf_dir)
+    table = scratch_dir("cput", sf_dir)
     shutil.rmtree(table, ignore_errors=True)
     store = manifest.MockObjectStore()
     backend = manifest.ConditionalPutCommitBackend(store)
@@ -9290,9 +9264,9 @@ def stream_cdf_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = _stream_src_dir("cdfmv", sf_dir)
-    state = _stream_src_dir("cdfmv_state", sf_dir)
-    ckpt = _stream_src_dir("cdfmv_ckpt", sf_dir)
+    table = scratch_dir("cdfmv", sf_dir)
+    state = scratch_dir("cdfmv_state", sf_dir)
+    ckpt = scratch_dir("cdfmv_ckpt", sf_dir)
     for d in (table, state, ckpt):
         shutil.rmtree(d, ignore_errors=True)
     for b in range(2):
@@ -9398,9 +9372,9 @@ def stream_cdf_table_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = _stream_src_dir("cdfrep_src", sf_dir)
-    replica = _stream_src_dir("cdfrep_dst", sf_dir)
-    ckpt = _stream_src_dir("cdfrep_ckpt", sf_dir)
+    table = scratch_dir("cdfrep_src", sf_dir)
+    replica = scratch_dir("cdfrep_dst", sf_dir)
+    ckpt = scratch_dir("cdfrep_ckpt", sf_dir)
     for d in (table, replica, ckpt):
         shutil.rmtree(d, ignore_errors=True)
     for b in range(2):
@@ -9539,9 +9513,9 @@ def stream_cdf_update_pairing(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = _stream_src_dir("cdfpair", sf_dir)
-    sink = _stream_src_dir("cdfpair_sink", sf_dir)
-    ckpt = _stream_src_dir("cdfpair_ckpt", sf_dir)
+    table = scratch_dir("cdfpair", sf_dir)
+    sink = scratch_dir("cdfpair_sink", sf_dir)
+    ckpt = scratch_dir("cdfpair_ckpt", sf_dir)
     for d in (table, sink, ckpt):
         shutil.rmtree(d, ignore_errors=True)
     streaming.write_batch_partition(
@@ -9624,7 +9598,7 @@ def mv_manifest_schema_enforcement(spark: SparkSession, sf_dir: str) -> DataFram
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = _stream_src_dir("schenf", sf_dir)
+    table = scratch_dir("schenf", sf_dir)
     shutil.rmtree(table, ignore_errors=True)
     manifest.write_and_commit_batch(
         spark, o.filter(F.col("o_orderkey") % 2 == 0), table, 0,

@@ -478,7 +478,7 @@ def lsh_candidate_pairs(
     """LSH banding: signature frame (doc, signature) -> distinct candidate
     pairs (doc_a, doc_b) sharing at least one (band, bucket). Split out of
     minhash_lsh_pairs so scale probes can measure the candidate count the
-    verify stage actually pays for (tools/scale_probe_r06.py)."""
+    verify stage actually pays for (COVERAGE.md)."""
     buckets = band_buckets(sig, bands, rows_per_band)
     left = buckets.select(F.col("doc").alias("doc_a"), "band", "bucket")
     right = buckets.select(F.col("doc").alias("doc_b"), "band", "bucket")

@@ -98,7 +98,7 @@ def triangle_count(
        OUT-degree is capped at O(sqrt(|E|)) (a hub of degree > sqrt(2E)
        cannot point at that many higher-degree neighbors), which is
        what tames the skewed hubs every real graph has. Measured, not
-       just asserted (tools/scale_probe_r07b.py): planting 8 super-hubs
+       just asserted (COVERAGE.md): planting 8 super-hubs
        spikes max RAW degree 8.1x (185 -> 1,507) while max ORIENTED
        out-degree moves only 106 -> 114 (+7.5%) — the cap absorbing
        exactly the skew a naive wedge join would pay quadratically.

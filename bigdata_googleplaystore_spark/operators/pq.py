@@ -203,7 +203,7 @@ def adc_topk(
     (model-sized); ranking is the standard per-query top-k window over
     candidate rows. Recall < 1 by design (quantization coarseness) —
     bounded against exact L2 in tests, and measured on the real corpus
-    (tools/ann_recall_probe_r07.py, sf0.1): recall@10 vs exact L2 is
+    (COVERAGE.md, sf0.1): recall@10 vs exact L2 is
     0.185/0.240/0.355 at M=4/8/16 subspaces (64x/32x/16x compression) —
     the numbers that make ADC the CANDIDATE stage of a two-stage
     retrieve-then-rerank pipeline (shortlist at 8-32x compression,
@@ -292,11 +292,11 @@ def ivf_pq_topk(
     sim_ann_ivf_pq_rerank hash-checks against a pure-SQL oracle (any
     candidate lost or duplicated anywhere in the cell -> code -> ADC ->
     rerank chain breaks the equality). At production knobs the recall
-    knobs are n_probe (measured curve: tools/ann_recall_probe_r07.py,
+    knobs are n_probe (measured curve: COVERAGE.md,
     0.82 -> 1.00) and shortlist/M (ADC recall@10 0.185-0.355 at
     M=4-16 — why ADC is the candidate stage, and why the rerank is
     exact). The COMPOSED pipeline's end-to-end curve is measured on
-    the real sf0.1 corpus (tools/ivf_pq_recall_probe_r08.py, 16
+    the real sf0.1 corpus (COVERAGE.md, 16
     cells, M=8): recall@5 vs exact = 0.460 (probe 2/16, shortlist
     20) / 0.608 (4/16, 50) / 0.636 (8/16, 50) / 0.900 (8/16,
     rerank-all-probed) / 1.000 (full probe, asserted) — the ADC

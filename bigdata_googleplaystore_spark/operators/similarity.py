@@ -246,7 +246,7 @@ def embedding_near_pairs_ann(
     CORPUS: buckets per table = 2^n_planes, so a fixed plane count lets
     bucket occupancy — and the bucketed self-join's
     sum-of-bucket-sizes-squared cost — grow quadratically. Measured
-    (tools/scale_probe_r08e.py, 2k->32k vectors, replica families so
+    (COVERAGE.md, 2k->32k vectors, replica families so
     true pairs grow quadratically): with n_planes ~ log2(N/250)
     (occupancy pinned ~250) wall grows 1.0x/2.2x/15.5x at 1x/4x/16x —
     linear — at 99.93% recall of the 240k planted pairs; with
@@ -364,7 +364,7 @@ def ivf_topk(
     (cluster-prunable at rest), and query cost is |probed cells| not |N|
     — with n_cells scaled ~sqrt(N) (cell size held constant), per-query
     candidates grow O(n_probe * sqrt(N)) vs brute force's O(N)
-    (measured across two corpus octaves in tools/ann_cost_probe_r08.py).
+    (measured across two corpus octaves in COVERAGE.md).
     Pass pre-trained `centroids` (a kmeans_centroids result) to reuse an
     index across query batches — production trains once per corpus
     version and amortizes; omitting it trains inline. When `centroids`
@@ -376,10 +376,10 @@ def ivf_topk(
     e.g. the corpus stored partitioned by cell) to skip the per-call
     corpus assignment too — that O(N x n_cells) pass is INDEX BUILD
     work, and rebuilding it per query batch inverts the cost advantage
-    once n_cells > |queries| (measured in tools/ann_cost_probe_r08.py:
+    once n_cells > |queries| (measured in COVERAGE.md:
     the stored-index query path is what scales O(n_probe * sqrt(N))).
     Recall < 1 by design: measured on the real sf0.1 corpus
-    (tools/ann_recall_probe_r07.py) recall@10 sweeps 0.82 -> 1.00 as
+    (COVERAGE.md) recall@10 sweeps 0.82 -> 1.00 as
     n_probe goes 1 -> n_cells, and the deterministic endpoint — at
     n_probe = n_cells the ranking EQUALS brute force — is hash-gated
     against a pure-SQL exact oracle (sim_ann_ivf_full_probe,
@@ -470,7 +470,7 @@ def write_ivf_index(
     single file); assignments are corpus-sized but written once per
     corpus version — the O(N x n_cells) assignment pass is index-BUILD
     cost, amortized over every future query batch
-    (tools/ann_cost_probe_r08.py measures the inversion when it is
+    (COVERAGE.md records the inversion when it is
     paid per batch instead). Returns the trained centroids."""
     spark = corpus.sparkSession
     root = path.rstrip("/")
@@ -552,7 +552,7 @@ def lsh_ann_topk(
     since round 4 the registered query (sim_ann_lsh, catalog/llm.py)
     hash-gates it via a planted-exact-duplicate construction, and the
     measured real-corpus recall curve lives in
-    tools/ann_recall_probe_r07.py / COVERAGE.md."""
+    COVERAGE.md."""
     csig = hyperplane_signatures(corpus, id_col, vec_col, n_planes, dim)
     qsig = hyperplane_signatures(queries, id_col, vec_col, n_planes, dim).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), "bucket"

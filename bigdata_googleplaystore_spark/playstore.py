@@ -276,31 +276,3 @@ def get_google_play_store_metrics_by_genre(
         "overwrite"
     ).parquet(out_dir)
     return spark.read.parquet(out_dir)
-
-
-# ---------------------------------------------------------------------------
-# main-equivalent orchestration (C:13-47)
-# ---------------------------------------------------------------------------
-
-
-def run_pipeline(
-    spark: SparkSession,
-    play_store_csv: str,
-    user_reviews_csv: str,
-    out_root: str,
-) -> dict[str, DataFrame]:
-    """The reference's `main`: five Parts in dependency order, three sinks
-    under `out_root`. Returns every intermediate frame keyed df_1..df_5."""
-    play_store = read_playstore_csv(spark, play_store_csv)
-    user_reviews = read_playstore_csv(spark, user_reviews_csv)
-
-    df_1 = average_sentiment_polarity_by_app(user_reviews)
-    df_2 = generate_best_apps_csv(spark, play_store, f"{out_root}/best_apps.csv")
-    df_3 = group_by_app_and_standardize(play_store)
-    df_4 = clean_google_play_store_data(
-        spark, df_1, df_3, f"{out_root}/googleplaystore_cleaned.gz"
-    )
-    df_5 = get_google_play_store_metrics_by_genre(
-        spark, df_4, f"{out_root}/googleplaystore_metrics.gz"
-    )
-    return {"df_1": df_1, "df_2": df_2, "df_3": df_3, "df_4": df_4, "df_5": df_5}

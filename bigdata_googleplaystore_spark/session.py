@@ -70,30 +70,38 @@ def get_spark(
     ``master=None`` means: respect an externally-provided master (cluster
     deploy, or the driver's own session); otherwise fall back to
     ``local[$SPARK_GRAFT_CPUS]``.
-    """
-    builder = SparkSession.builder.appName(app_name)
-    if master is not None:
-        builder = builder.master(master)
-    else:
-        # Respect an externally-configured master (spark-submit --master
-        # lands in spark.master via system properties, visible through a
-        # fresh SparkConf). Only default to local[N] when nothing chose a
-        # master — unconditionally forcing local would silently turn a
-        # cluster submit into a single-node run.
-        from pyspark import SparkConf
 
-        if not SparkConf().contains("spark.master") and "SPARK_MASTER" not in os.environ:
-            builder = builder.master(f"local[{default_parallelism()}]")
-            # In local mode the whole engine (driver + all executor threads)
-            # shares ONE JVM heap, and Spark's default is ~1g — a probe at
-            # 4x sf0.1 OOM'd the inverted-index join there while the machine
-            # had >100 GiB free. Only set when WE choose the master (a
-            # cluster submit sizes executors itself); only effective before
-            # the JVM launches (getOrCreate on a live session ignores it).
-            builder = builder.config(
-                "spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-            )
+    Whenever the resolved master is local — passed explicitly
+    (``local[N]``, ``local[*]``) or defaulted — the JVM heap defaults to
+    ``$SPARK_GRAFT_DRIVER_MEM`` (16g): in local mode the driver and every
+    executor thread share ONE heap, and Spark's ~1g default OOM'd an
+    inverted-index join at 4x sf0.1 on a machine with >100 GiB free. A
+    cluster master sizes its executors itself, and a heap set at launch
+    (``--driver-memory``) is kept. The setting only takes effect before
+    the JVM launches (getOrCreate on a live session ignores it).
+    """
+    from pyspark import SparkConf
+
+    launch_conf = SparkConf()
+    builder = SparkSession.builder.appName(app_name)
+    if master is None:
+        # spark-submit --master lands in spark.master via system
+        # properties, visible through a fresh SparkConf. Only default to
+        # local[N] when nothing chose a master — unconditionally forcing
+        # local would silently turn a cluster submit into a single-node run.
+        master = launch_conf.get("spark.master", None) or os.environ.get(
+            "SPARK_MASTER"
+        )
+        if master is None:
+            master = f"local[{default_parallelism()}]"
+            builder = builder.master(master)
+    else:
+        builder = builder.master(master)
+    is_local = master == "local" or master.startswith("local[")
+    if is_local and not launch_conf.contains("spark.driver.memory"):
+        builder = builder.config(
+            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+        )
 
     conf = dict(_BASE_CONF)
     # Initial shuffle partition count: AQE coalesces down from here, so err

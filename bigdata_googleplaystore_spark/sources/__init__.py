@@ -108,26 +108,6 @@ def read_csv(
     return reader.csv(path)
 
 
-def write_csv(
-    df: DataFrame,
-    path: str,
-    *,
-    header: bool = True,
-    sep: str = ",",
-    mode: str = "overwrite",
-    single_file: bool = False,
-) -> None:
-    """CSV sink with custom delimiter (S3; reference uses sep='§',
-    challenge.scala:104-107).
-
-    ``single_file`` coalesces to one part file -- fine for small exports,
-    never for large data (it serializes the write through one task); the
-    reference's single-part outputs come from its single-threaded master.
-    """
-    out = df.coalesce(1) if single_file else df
-    out.write.option("header", header).option("sep", sep).mode(mode).csv(path)
-
-
 # --- JSON (lines) ---------------------------------------------------------
 
 

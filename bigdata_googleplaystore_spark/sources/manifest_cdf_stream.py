@@ -16,7 +16,7 @@ per-version-step logic, evaluated at PLANNING time):
     v-1's VISIBLE snapshot (each prior batch, minus v-1's applicable
     masks) that match the new group's keys.
 - Delete applicability is BATCH-level, because a row's `_seq` is its
-  batch's ingestion sequence (`manifest._effective_seq`) — so every
+  batch's ingestion sequence (`manifest_log.effective_seq`) — so every
   mask decision resolves at planning time from two manifest JSONs,
   and executors only ever see (file, key-set) pairs. Key files ride
   the partition objects; they are broadcast-small by the same design
@@ -115,12 +115,11 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from . import manifest_log
 from .manifest_stream import (
     _byte_capped_end,
-    _latest_version,
     _parse_timestamp,
     _read_evolved_batches,
-    _read_manifest_json,
     resolve_starting_timestamp,
     validate_declared_columns,
 )
@@ -128,21 +127,9 @@ from .storage import StorageBackend, get_backend
 
 CHANGE_COL = "_change_type"
 VERSION_COL = "_commit_version"
-DELETE_DIR = "_deletes"
 
 # default cumulative cap on partition-riding key-frame bytes per plan
 DEFAULT_MAX_KEY_FRAME_BYTES = 64 << 20
-
-
-def _effective_seq(batch_id: int) -> int:
-    # manifest._effective_seq, restated here so the connector tier has
-    # no operator-tier (JVM/Hadoop-FS) import
-    return batch_id if batch_id >= 0 else -batch_id - 1
-
-
-def _applies(cutoff, batch_id: int) -> bool:
-    """Does a delete group with this cutoff mask rows of `batch_id`?"""
-    return cutoff is None or _effective_seq(batch_id) <= int(cutoff)
 
 
 def _load_keys(fs: StorageBackend, table_dir: str, delete_ids: list[int]):
@@ -152,11 +139,7 @@ def _load_keys(fs: StorageBackend, table_dir: str, delete_ids: list[int]):
 
     frames = []
     for d in sorted(delete_ids):
-        ddir = f"{table_dir}/{DELETE_DIR}/d{d:08d}"
-        for n in fs.listdir(ddir):
-            if not n.endswith(".parquet"):
-                continue
-            path = f"{ddir}/{n}"
+        for path in manifest_log.delete_files(fs, table_dir, d):
             local = fs.local_path(path)
             src = local if local is not None else fs.open(path, "rb")
             frames.append(pq.read_table(src).to_pandas())
@@ -279,7 +262,7 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
         return {"version": self.starting}
 
     def latestOffset(self) -> dict:
-        v = _latest_version(self.fs, self.table_dir)
+        v = manifest_log.latest_version(self.fs, self.table_dir)
         if v is None:
             return {"version": self.starting}
         if self._floor is None:
@@ -302,7 +285,7 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
     # ---- planning (driver, metadata + key files only) ------------------
     def _manifest(self, version: int) -> dict:
         try:
-            return _read_manifest_json(self.fs, self.table_dir, version)
+            return manifest_log.read_manifest(self.fs, self.table_dir, version)
         except FileNotFoundError:
             raise ValueError(
                 f"manifest_cdf_stream: manifest v{version} of "
@@ -311,24 +294,8 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
                 "or restart from a fresh checkpoint."
             ) from None
 
-    def _groups(self, m: dict) -> list[tuple[object, list[int]]]:
-        """(cutoff, delete_ids) groups of a manifest, snapshot_diff's
-        grouping restated metadata-side."""
-        from collections import defaultdict
-
-        cutoffs = m.get("delete_cutoffs") or {}
-        groups: dict[object, list[int]] = defaultdict(list)
-        for d in m.get("delete_ids") or []:
-            groups[cutoffs.get(str(d))].append(d)
-        return list(groups.items())
-
     def _data_files(self, batch_id: int) -> list[str]:
-        bdir = f"{self.table_dir}/_batch_id={batch_id}"
-        files = sorted(
-            f"{bdir}/{n}"
-            for n in self.fs.listdir(bdir)
-            if n.endswith(".parquet")
-        )
+        files = manifest_log.batch_files(self.fs, self.table_dir, batch_id)
         if not files:
             raise ValueError(
                 f"manifest_cdf_stream: batch {batch_id} of "
@@ -351,8 +318,8 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
         """Key frames of m's delete groups applicable to `batch_id`."""
         return [
             self._keys_cached(ds, memo)
-            for cutoff, ds in self._groups(m)
-            if _applies(cutoff, batch_id)
+            for cutoff, ds in manifest_log.delete_groups(m)
+            if manifest_log.applies(cutoff, batch_id)
         ]
 
     def _insert_step(
@@ -454,14 +421,10 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
                 # versions) — no change data; skip and keep streaming
                 m_prev = m_v
                 continue
-            ngroups: dict[object, list[int]] = {}
-            if new_dels:
-                from collections import defaultdict
-
-                cutoffs_v = m_v.get("delete_cutoffs") or {}
-                ngroups = defaultdict(list)
-                for d in sorted(new_dels):
-                    ngroups[cutoffs_v.get(str(d))].append(d)
+            ngroups = dict(manifest_log.delete_groups({
+                "delete_ids": sorted(new_dels),
+                "delete_cutoffs": m_v.get("delete_cutoffs"),
+            }))
             # UPDATE-IMAGE PAIRING (keyColumns option): a version is
             # the commit_upsert shape iff it commits BOTH inserts and
             # delete groups keyed exactly on keyColumns whose cutoffs
@@ -495,7 +458,7 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
                 and bool(ngroups)
                 and all(
                     cutoff is not None
-                    and all(not _applies(cutoff, b) for b in new_ids)
+                    and all(not manifest_log.applies(cutoff, b) for b in new_ids)
                     and sorted(self._keys_cached(ds, memo).columns)
                     == sorted(self.key_columns)
                     for cutoff, ds in ngroups.items()
@@ -509,7 +472,7 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
                     match = [
                         self._keys_cached(ds, memo)
                         for cutoff, ds in ngroups.items()
-                        if _applies(cutoff, b)
+                        if manifest_log.applies(cutoff, b)
                     ]
                     if not match:
                         continue
@@ -703,7 +666,7 @@ class ManifestCDFBatchReader(DataSourceReader):
             )
         self._inner = ManifestCDFStreamReader(schema, options)
         ev_opt = options.get("endingversion")
-        latest = _latest_version(self._inner.fs, self._inner.table_dir)
+        latest = manifest_log.latest_version(self._inner.fs, self._inner.table_dir)
         if latest is None:
             raise ValueError(
                 f"manifest_cdf_stream batch read: no committed snapshot "

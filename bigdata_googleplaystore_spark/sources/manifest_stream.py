@@ -67,11 +67,12 @@ Option contract (Delta-parity where Delta has the option):
   version is always admitted, so a single over-cap commit cannot
   stall the stream.
 
-Storage: all file access routes through `sources/storage.py`'s
-pluggable backend (local paths by default, `memory://` for unit tests,
-fsspec schemes when that package exists), so this connector tier is
-storage-agnostic; the operator-tier write paths (streaming/manifest.py)
-go through the Hadoop FS API.
+Storage: the log is read through the format module
+(`sources/manifest_log.py`) and all file access routes through
+`sources/storage.py`'s pluggable backend (local paths by default,
+`memory://` for unit tests, fsspec schemes when that package exists),
+so this connector tier is storage-agnostic; the operator tier reads the
+same log through the same module over the session's Hadoop FileSystem.
 
 Schema: additive evolution is READ-TOLERANT — a batch file written
 before a column was added is read with the declared columns it has,
@@ -96,8 +97,6 @@ output (challenge.scala C:26-44); this source is part of the engine's
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
@@ -105,41 +104,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from . import manifest_log
 from .storage import StorageBackend, get_backend
-
-MANIFEST_DIR = "_manifests"
-
-
-def _read_manifest_json(
-    fs: StorageBackend, table_dir: str, version: int
-) -> dict:
-    p = f"{table_dir}/{MANIFEST_DIR}/v{version:012d}.json"
-    with fs.open(p, "rb") as f:
-        return json.loads(f.read().decode("utf-8"))
-
-
-def _latest_version(fs: StorageBackend, table_dir: str) -> int | None:
-    """Newest committed version: checkpoint-pointer forward probes when
-    the advisory pointer exists (O(commits since checkpoint)), else a
-    directory listing — the same ladder as manifest.latest_version."""
-    mdir = f"{table_dir}/{MANIFEST_DIR}"
-    ckpt = f"{mdir}/_last_checkpoint.json"
-    if fs.exists(ckpt):
-        try:
-            with fs.open(ckpt, "rb") as f:
-                v = int(json.loads(f.read())["version"])
-            if fs.exists(f"{mdir}/v{v:012d}.json"):
-                while fs.exists(f"{mdir}/v{v + 1:012d}.json"):
-                    v += 1
-                return v
-        except (ValueError, KeyError, TypeError):
-            pass
-    vs = [
-        int(n[1:-5])
-        for n in fs.listdir(mdir)
-        if n.startswith("v") and n.endswith(".json")
-    ]
-    return max(vs) if vs else None
 
 
 def _byte_capped_end(
@@ -156,7 +122,7 @@ def _byte_capped_end(
     (progress guarantee)."""
     try:
         seen = set(
-            _read_manifest_json(fs, table_dir, floor)["batch_ids"]
+            manifest_log.read_manifest(fs, table_dir, floor)["batch_ids"]
         ) if floor >= 0 else set()
     except FileNotFoundError:
         return latest  # retention edge: let planning raise the loud error
@@ -164,7 +130,7 @@ def _byte_capped_end(
     spent = 0
     for cand in range(floor + 1, latest + 1):
         try:
-            m = _read_manifest_json(fs, table_dir, cand)
+            m = manifest_log.read_manifest(fs, table_dir, cand)
         except FileNotFoundError:
             # vacuum removed a manifest in (floor, latest] mid-walk —
             # same retention edge as the floor read above: return the
@@ -230,51 +196,6 @@ def _parse_timestamp(v) -> float:
     return ts
 
 
-def min_version_at_or_after(mt, latest: int, ts: float) -> int:
-    """The smallest v in [0, latest] with mt(v) >= ts, else latest+1 —
-    binary search over a monotone mtime sequence. `mt(v)` returns
-    epoch seconds or None meaning DEFINITELY-OLDER (a vacuumed
-    prefix); `mt` itself must raise for anomalies (an existing file
-    whose mtime the backend cannot give), so a probe failure never
-    silently classifies a commit as old. Shared by the stream
-    sources' startingTimestamp and, mirrored (`max_version_at_or_
-    before`), by the operator tier's timestampAsOf. None at `latest`
-    is handled HERE (definitely-older -> latest+1), not left to the
-    caller: the helper is shared/exported and a raw TypeError from the
-    first probe would betray the documented mt contract."""
-    m_latest = mt(latest)
-    if m_latest is None or m_latest < ts:
-        return latest + 1
-    lo, hi = 0, latest  # invariant: mt(hi) >= ts
-    while lo < hi:
-        mid = (lo + hi) // 2
-        m = mt(mid)
-        if m is None or m < ts:
-            lo = mid + 1
-        else:
-            hi = mid
-    return lo
-
-
-def max_version_at_or_before(mt, latest: int, ts: float):
-    """The largest v in [0, latest] whose mtime is KNOWN and <= ts,
-    else None (every retained commit is newer, or the as-of version
-    was vacuumed). Same `mt` contract as min_version_at_or_after."""
-    m_latest = mt(latest)
-    if m_latest is not None and m_latest <= ts:
-        return latest
-    lo, hi = 0, latest  # invariant: predicate(hi) is False
-    while lo < hi:
-        mid = (lo + hi + 1) // 2
-        m = mt(mid)
-        if m is None or m <= ts:
-            lo = mid
-        else:
-            hi = mid - 1
-    m_lo = mt(lo)
-    return lo if (m_lo is not None and m_lo <= ts) else None
-
-
 def resolve_starting_timestamp(
     fs: StorageBackend, table_dir: str, ts: float, now: float | None = None
 ) -> int:
@@ -305,7 +226,7 @@ def resolve_starting_timestamp(
 
     if now is None:
         now = time.time()
-    latest = _latest_version(fs, table_dir)
+    latest = manifest_log.latest_version(fs, table_dir)
     if latest is None:
         if ts > now:
             raise ValueError(
@@ -322,9 +243,8 @@ def resolve_starting_timestamp(
     def mt(v: int) -> float | None:
         if v in _mt_cache:
             return _mt_cache[v]
-        p = f"{table_dir}/{MANIFEST_DIR}/v{v:012d}.json"
-        m = fs.mtime(p)
-        if m is None and fs.exists(p):
+        m = manifest_log.manifest_mtime(fs, table_dir, v)
+        if m is None and fs.exists(manifest_log.version_path(table_dir, v)):
             raise ValueError(
                 f"manifest stream source: the storage backend returned "
                 f"no modification time for EXISTING manifest v{v} of "
@@ -341,7 +261,7 @@ def resolve_starting_timestamp(
             "startingTimestamp cannot resolve against a moving log; "
             "retry, or use startingVersion"
         )
-    resolved = min_version_at_or_after(mt, latest, ts)
+    resolved = manifest_log.min_version_at_or_after(mt, latest, ts)
     if resolved > latest and ts > now:
         raise ValueError(
             f"manifest stream source: startingTimestamp {ts} is in the "
@@ -383,13 +303,10 @@ def validate_declared_columns(
         return
     seen: set = set()
     for b in manifest["batch_ids"]:
-        bdir = f"{table_dir}/_batch_id={b}"
-        names = sorted(
-            n for n in fs.listdir(bdir) if n.endswith(".parquet")
-        )
-        if not names:
+        files = manifest_log.batch_files(fs, table_dir, b)
+        if not files:
             continue
-        path = f"{bdir}/{names[0]}"
+        path = files[0]
         local = fs.local_path(path)
         src = local if local is not None else fs.open(path, "rb")
         seen |= set(pq.read_schema(src).names)
@@ -488,7 +405,7 @@ class ManifestStreamReader(DataSourceStreamReader):
         return {"version": self.starting}
 
     def latestOffset(self) -> dict:
-        v = _latest_version(self.fs, self.table_dir)
+        v = manifest_log.latest_version(self.fs, self.table_dir)
         if v is None:
             return {"version": self.starting}
         if self._floor is None:
@@ -504,7 +421,7 @@ class ManifestStreamReader(DataSourceStreamReader):
     # ---- planning (driver, metadata-only) -----------------------------
     def _manifest_loud(self, version: int) -> dict:
         try:
-            return _read_manifest_json(self.fs, self.table_dir, version)
+            return manifest_log.read_manifest(self.fs, self.table_dir, version)
         except FileNotFoundError:
             raise ValueError(
                 f"manifest_stream: manifest v{version} of "
@@ -590,12 +507,7 @@ class ManifestStreamReader(DataSourceStreamReader):
     def _parts_for(self, ids: list[int]) -> list[InputPartition]:
         parts: list[InputPartition] = []
         for b in ids:
-            bdir = f"{self.table_dir}/_batch_id={b}"
-            files = sorted(
-                f"{bdir}/{n}"
-                for n in self.fs.listdir(bdir)
-                if n.endswith(".parquet")
-            )
+            files = manifest_log.batch_files(self.fs, self.table_dir, b)
             if not files:
                 raise ValueError(
                     f"manifest_stream: batch {b} of {self.table_dir} has "

@@ -1,14 +1,19 @@
-"""Pluggable storage seam for the Python-DataSource connector tier.
+"""Pluggable read-side storage seam for the manifest lakehouse layer.
 
-The connector modules (`manifest_stream`, `manifest_cdf_stream`) plan
-micro-batches from manifest JSONs and read parquet bytes on executors.
-Both kinds of I/O go through the tiny `StorageBackend` interface below
-instead of bare `open()`/`os.listdir()`, so the connector tier is
-storage-agnostic the way its module docs promise:
+Every read of a manifest-committed table — manifest JSONs, the
+checkpoint pointer, batch and delete-key listings, manifest mtimes, and
+the parquet bytes the Python DataSource readers decode on executors —
+goes through the tiny `StorageBackend` interface below, by way of the
+format module `manifest_log`. Both lakehouse tiers use it:
 
-- `LocalBackend` — plain local paths (and `file://`); the default, and
-  the fast path (parquet reads hand pyarrow the path itself so it can
-  memory-map instead of streaming through a file object).
+- `HadoopBackend(spark)` — the operator tier (streaming/manifest.py,
+  streaming/__init__.py): the session's Hadoop FileSystem, so every
+  scheme the session can reach (local, hdfs://, s3a://, ...) works.
+  Driver-only: it holds a py4j handle and never ships to workers.
+- `LocalBackend` — plain local paths (and `file://`); the connector
+  tier's default, and the fast path (parquet reads hand pyarrow the
+  path itself so it can memory-map instead of streaming through a file
+  object).
 - `MemoryBackend` — an in-process `memory://` filesystem for unit
   tests. The store travels WITH the backend when a reader is pickled,
   so executor-side reads observe a snapshot taken at plan-serialization
@@ -25,10 +30,10 @@ storage-agnostic the way its module docs promise:
 Only five operations exist because only five are needed: `open` (read a
 manifest / parquet bytes), `exists` (checkpoint + version probes),
 `listdir` (manifest listing, batch-dir file listing), `isdir`, and
-`mtime` (startingTimestamp resolution; optional — None means "unknown",
-and the resolution degrades gracefully). Write paths stay in the
-operator tier (streaming/manifest.py, Hadoop FS API); this seam is the
-READ half by design — the Python DataSource API only reads.
+`mtime` (timestamp resolution and age-based retention; optional — None
+means "unknown", and the resolution degrades gracefully). Writes stay
+outside the seam: the operator tier commits through its CommitBackend
+and Spark writers.
 """
 
 from __future__ import annotations
@@ -229,6 +234,60 @@ class FsspecBackend(StorageBackend):
                 m = m.replace(tzinfo=timezone.utc)
             return m.timestamp()
         return float(m)
+
+
+class HadoopBackend(StorageBackend):
+    """The session's Hadoop FileSystem behind the read seam — how the
+    operator tier reads the manifest log on the driver. `open` drains
+    the whole file, which suits the small metadata files it serves."""
+
+    def __init__(self, spark):
+        self._jvm = spark.sparkContext._jvm
+        self._conf = spark.sparkContext._jsc.hadoopConfiguration()
+        self._Path = self._jvm.org.apache.hadoop.fs.Path
+
+    def _resolve(self, path: str):
+        jpath = self._Path(path)
+        return jpath.getFileSystem(self._conf), jpath
+
+    def open(self, path: str, mode: str = "rb"):
+        if mode != "rb":
+            raise ValueError(f"HadoopBackend reads only ('rb'), not {mode!r}")
+        from py4j.protocol import Py4JJavaError
+
+        fs, jpath = self._resolve(path)
+        try:
+            stream = fs.open(jpath)
+        except Py4JJavaError as e:
+            if not fs.exists(jpath):
+                raise FileNotFoundError(path) from e
+            raise
+        # Hadoop IOUtils drains the stream into a Java buffer; py4j hands
+        # byte[] back as Python bytes (a py4j-side new_array + readFully
+        # round trip would NOT see the Java mutation)
+        bos = self._jvm.java.io.ByteArrayOutputStream()
+        self._jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, bos, 4096, True)
+        return io.BytesIO(bytes(bos.toByteArray()))
+
+    def exists(self, path: str) -> bool:
+        fs, jpath = self._resolve(path)
+        return bool(fs.exists(jpath))
+
+    def isdir(self, path: str) -> bool:
+        fs, jpath = self._resolve(path)
+        return bool(fs.isDirectory(jpath))
+
+    def listdir(self, path: str) -> list[str]:
+        fs, jpath = self._resolve(path)
+        if not fs.isDirectory(jpath):
+            return []
+        return sorted(st.getPath().getName() for st in fs.listStatus(jpath))
+
+    def mtime(self, path: str) -> float | None:
+        fs, jpath = self._resolve(path)
+        if not fs.exists(jpath):
+            return None
+        return fs.getFileStatus(jpath).getModificationTime() / 1000.0
 
 
 def get_backend(path: str) -> StorageBackend:

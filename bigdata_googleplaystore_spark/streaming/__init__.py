@@ -21,6 +21,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..sources import manifest_log
+from ..sources.manifest_log import compact_base_id  # noqa: F401  (public name)
+from ..sources.storage import HadoopBackend
+
 
 def read_event_stream(
     spark: SparkSession, path: str, schema: StructType | str
@@ -422,29 +426,10 @@ def read_multiset_minmax(
 
 def list_batch_partitions(spark: SparkSession, state_dir: str) -> list[int]:
     """The `_batch_id=<n>` partition ids present in a state table,
-    sorted, via the Hadoop FileSystem API (works on hdfs://s3a: paths).
-    Single definition shared by compaction and its gate so the listing
-    route cannot drift from the operator it verifies."""
-    jvm = spark.sparkContext._jvm
-    hroot = jvm.org.apache.hadoop.fs.Path(state_dir)
-    fs = hroot.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return sorted(
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(hroot)
-        if st.isDirectory() and st.getPath().getName().startswith("_batch_id=")
-    )
-
-
-def compact_base_id(upto_batch: int) -> int:
-    """The RESERVED partition id a compacted base lands at:
-    -(upto_batch + 1). Streaming micro-batch ids are always >= 0, so a
-    batch replayed after compaction can never overwrite the base with
-    its own partial (write_batch_partition's idempotent overwrite
-    targets the replayed id's own directory) — at worst a replay of an
-    already-compacted id double-counts that ONE batch, it cannot
-    destroy the merged history. Negative and bijective in the horizon,
-    so the horizon stays readable off the directory name."""
-    return -(upto_batch + 1)
+    sorted, via the session's Hadoop FileSystem (works on hdfs://s3a:
+    paths). Single definition shared by compaction and its gate so the
+    listing route cannot drift from the operator it verifies."""
+    return manifest_log.list_batch_ids(HadoopBackend(spark), state_dir)
 
 
 def compact_state_partials(
@@ -487,7 +472,7 @@ def compact_state_partials(
     through the Hadoop FileSystem API, so the table may live on
     hdfs:// or s3a:// paths, not only local disk.
 
-    Measured (tools/scale_probe_r08d.py, sf0.1 orders, 64 batches
+    Measured (COVERAGE.md, sf0.1 orders, 64 batches
     compacted to 1 base + 7 recent): file fan-in 64 -> 8 and the
     latest-view fold 0.515s -> 0.273s with the folded values asserted
     identical; the 0.96s compaction amortizes over every future read.
@@ -503,7 +488,9 @@ def compact_state_partials(
     # the horizon can only move FORWARD: an existing base at horizon H
     # (id -(H+1)) folded batches through H, so "compacting" to an
     # earlier upto would relabel version-H data as an older version
-    prev_horizon = max((-(b) - 1 for b in listed if b < 0), default=-1)
+    prev_horizon = max(
+        (manifest_log.effective_seq(b) for b in listed if b < 0), default=-1
+    )
     if upto_batch < prev_horizon:
         raise ValueError(
             f"compact_state_partials: upto_batch={upto_batch} is behind "
@@ -546,7 +533,9 @@ def compact_state_partials(
         write_batch_partition(spark.read.parquet(tmp), state_dir, base_id)
     # base is durable in-table; the deletes are idempotent from here
     for b in old_ids:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(state_dir, f"_batch_id={b}"), True)
+        fs.delete(
+            jvm.org.apache.hadoop.fs.Path(manifest_log.batch_path(state_dir, b)), True
+        )
     fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), True)
     return len(old_ids)
 

@@ -10,7 +10,8 @@ format (Delta's _delta_log, Iceberg's metadata tree — both public
 designs) is built on: **readers never list directories; they read a
 MANIFEST, and the manifest is replaced atomically.**
 
-Layout (beside the existing partition dirs, which are unchanged):
+Layout (beside the existing partition dirs, which are unchanged; the
+format module sources/manifest_log.py owns it and every read rule):
 
     <table>/_batch_id=<n>/part-*.parquet     immutable once committed
     <table>/_manifests/v000000000042.json    immutable, create-only
@@ -59,7 +60,8 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
-MANIFEST_DIR = "_manifests"
+from ..sources import manifest_log
+from ..sources.storage import HadoopBackend
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -223,21 +225,6 @@ def _fs(spark: SparkSession, path: str):
     return jvm, fs, jpath
 
 
-def _version_path(table_dir: str, version: int) -> str:
-    return f"{table_dir.rstrip('/')}/{MANIFEST_DIR}/v{version:012d}.json"
-
-
-def _read_small_file(spark: SparkSession, path: str) -> bytes:
-    # Hadoop IOUtils (always on Spark's classpath) drains the stream into
-    # a Java buffer; py4j hands byte[] back as Python bytes. A py4j-side
-    # new_array + readFully round trip does NOT see the Java mutation.
-    jvm, fs, jpath = _fs(spark, path)
-    stream = fs.open(jpath)
-    bos = jvm.java.io.ByteArrayOutputStream()
-    jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, bos, 4096, True)
-    return bytes(bos.toByteArray())
-
-
 def _write_small_file(spark: SparkSession, path: str, data: bytes) -> None:
     jvm, fs, jpath = _fs(spark, path)
     out = fs.create(jpath, True)
@@ -247,26 +234,24 @@ def _write_small_file(spark: SparkSession, path: str, data: bytes) -> None:
         out.close()
 
 
+def _batch_paths(table_dir: str, ids) -> list[str]:
+    return [manifest_log.batch_path(table_dir, b) for b in ids]
+
+
+def _batch_written(spark: SparkSession, table_dir: str, batch_id: int) -> bool:
+    """Did write_batch_partition land a directory for this batch? An
+    EMPTY batch writes none (dynamic partition overwrite has nothing to
+    overwrite), and committing its id would point every later snapshot
+    read at a path that does not exist."""
+    return HadoopBackend(spark).exists(manifest_log.batch_path(table_dir, batch_id))
+
+
 def list_versions(spark: SparkSession, table_dir: str) -> list[int]:
     """All committed manifest versions, ascending."""
-    jvm, fs, _ = _fs(spark, table_dir)
-    mdir = jvm.org.apache.hadoop.fs.Path(table_dir.rstrip("/") + "/" + MANIFEST_DIR)
-    if not fs.exists(mdir):
-        return []
-    out = []
-    for st in fs.listStatus(mdir):
-        name = st.getPath().getName()
-        if name.startswith("v") and name.endswith(".json"):
-            out.append(int(name[1:-5]))
-    return sorted(out)
+    return manifest_log.list_versions(HadoopBackend(spark), table_dir)
 
 
 CHECKPOINT_INTERVAL = 10
-CHECKPOINT_FILE = "_last_checkpoint.json"
-
-
-def _checkpoint_path(table_dir: str) -> str:
-    return f"{table_dir.rstrip('/')}/{MANIFEST_DIR}/{CHECKPOINT_FILE}"
 
 
 def write_checkpoint(spark: SparkSession, table_dir: str, version: int) -> None:
@@ -280,7 +265,7 @@ def write_checkpoint(spark: SparkSession, table_dir: str, version: int) -> None:
     wrong answer."""
     _write_small_file(
         spark,
-        _checkpoint_path(table_dir),
+        manifest_log.checkpoint_path(table_dir),
         json.dumps({"version": int(version)}).encode("utf-8"),
     )
 
@@ -288,45 +273,16 @@ def write_checkpoint(spark: SparkSession, table_dir: str, version: int) -> None:
 def read_checkpoint(spark: SparkSession, table_dir: str) -> int | None:
     """The pointer's version, or None when absent/unreadable (both mean
     'fall back to listing', never an error)."""
-    jvm, fs, _ = _fs(spark, table_dir)
-    p = jvm.org.apache.hadoop.fs.Path(_checkpoint_path(table_dir))
-    if not fs.exists(p):
-        return None
-    try:
-        return int(
-            json.loads(
-                _read_small_file(spark, _checkpoint_path(table_dir)).decode(
-                    "utf-8"
-                )
-            )["version"]
-        )
-    except (ValueError, KeyError, TypeError):
-        return None
+    return manifest_log.read_checkpoint(HadoopBackend(spark), table_dir)
 
 
 def latest_version(spark: SparkSession, table_dir: str) -> int | None:
-    """Newest committed version. Fast path: start from the checkpoint
-    pointer and probe FORWARD (versions are dense integers — each
-    commit is prev+1 and vacuum only removes a prefix, so from any
-    existing version upward the files are contiguous); cost is
-    O(commits since the last checkpoint) exists-checks, not an
-    O(all versions) listing — the difference between a 10^5-commit
-    table planning from ~10 metadata probes vs a paged object-store
-    LIST. Falls back to the full listing whenever the pointer is
-    absent or points at a vacuumed version."""
-    jvm, fs, _ = _fs(spark, table_dir)
-    ckpt = read_checkpoint(spark, table_dir)
-    if ckpt is not None and fs.exists(
-        jvm.org.apache.hadoop.fs.Path(_version_path(table_dir, ckpt))
-    ):
-        v = ckpt
-        while fs.exists(
-            jvm.org.apache.hadoop.fs.Path(_version_path(table_dir, v + 1))
-        ):
-            v += 1
-        return v
-    vs = list_versions(spark, table_dir)
-    return vs[-1] if vs else None
+    """Newest committed version: checkpoint pointer plus forward probes,
+    O(commits since the last checkpoint) exists-checks — the difference
+    between a 10^5-commit table planning from ~10 metadata probes vs a
+    paged object-store LIST — else the full listing
+    (manifest_log.latest_version)."""
+    return manifest_log.latest_version(HadoopBackend(spark), table_dir)
 
 
 def version_as_of_timestamp(
@@ -341,23 +297,16 @@ def version_as_of_timestamp(
     RESOLVED version itself was vacuumed, or every retained commit is
     newer than ts, the read refuses with a retention error rather than
     silently answering from the wrong snapshot."""
-    from ..sources.manifest_stream import max_version_at_or_before
-
-    jvm, fs, _ = _fs(spark, table_dir)
-    latest = latest_version(spark, table_dir)
+    fs = HadoopBackend(spark)
+    latest = manifest_log.latest_version(fs, table_dir)
     if latest is None:
         raise ValueError(f"no committed snapshot in {table_dir}")
-
-    def mt(v: int) -> float | None:
-        # Hadoop FS probe: exists-check distinguishes vacuumed (None,
-        # definitely-older) from an existing file, whose status always
-        # carries a modification time — the shared search's contract
-        p = jvm.org.apache.hadoop.fs.Path(_version_path(table_dir, v))
-        if not fs.exists(p):
-            return None
-        return fs.getFileStatus(p).getModificationTime() / 1000.0
-
-    resolved = max_version_at_or_before(mt, latest, ts)
+    # a vacuumed version probes as None (definitely-older); an existing
+    # file's Hadoop status always carries a modification time — the
+    # shared search's contract
+    resolved = manifest_log.max_version_at_or_before(
+        lambda v: manifest_log.manifest_mtime(fs, table_dir, v), latest, ts
+    )
     if resolved is None:
         raise ValueError(
             f"timestampAsOf {ts}: every retained manifest of "
@@ -372,12 +321,7 @@ def read_manifest(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> dict:
     """Load a manifest (latest if version is None)."""
-    if version is None:
-        version = latest_version(spark, table_dir)
-        if version is None:
-            return {"version": -1, "batch_ids": [], "horizon": None}
-    raw = _read_small_file(spark, _version_path(table_dir, version))
-    return json.loads(raw.decode("utf-8"))
+    return manifest_log.read_manifest(HadoopBackend(spark), table_dir, version)
 
 
 def commit_version(
@@ -419,7 +363,7 @@ def commit_version(
     }
     data = json.dumps(manifest, sort_keys=True).encode("utf-8")
     (backend or _DEFAULT_BACKEND).publish(
-        spark, data, _version_path(table_dir, next_v)
+        spark, data, manifest_log.version_path(table_dir, next_v)
     )
     if next_v % CHECKPOINT_INTERVAL == 0:
         write_checkpoint(spark, table_dir, next_v)
@@ -468,10 +412,7 @@ def snapshot_partials(
     m = read_manifest(spark, table_dir, version)
     if not m["batch_ids"]:
         raise ValueError(f"no committed snapshot in {table_dir}")
-    paths = [
-        f"{table_dir.rstrip('/')}/_batch_id={b}" for b in m["batch_ids"]
-    ]
-    return spark.read.parquet(*paths)
+    return spark.read.parquet(*_batch_paths(table_dir, m["batch_ids"]))
 
 
 def read_snapshot_agg(
@@ -491,7 +432,7 @@ def compact_snapshot(
 ) -> int:
     """ATOMIC compaction: merge every committed partial with
     `_batch_id <= upto_batch` into a base partition at the reserved
-    negative id (streaming.compact_base_id), then commit a manifest
+    negative id (manifest_log.compact_base_id), then commit a manifest
     that swaps the subsumed ids for the base id. The base directory is
     written while unreferenced, so readers see the old snapshot until
     the single manifest rename, then the new one — no interleaving, no
@@ -515,14 +456,13 @@ def compact_snapshot(
             f"committed horizon {prev_horizon} — the horizon only moves "
             "forward"
         )
-    base_id = streaming.compact_base_id(upto_batch)
+    base_id = manifest_log.compact_base_id(upto_batch)
     subsumed = [b for b in cur["batch_ids"] if b <= upto_batch]
     keep = [b for b in cur["batch_ids"] if b > upto_batch]
     if not subsumed:
         return cur["version"]
     # merge ONLY the committed subsumed partials (manifest-planned read)
-    paths = [f"{table_dir.rstrip('/')}/_batch_id={b}" for b in subsumed]
-    partials = spark.read.parquet(*paths)
+    partials = spark.read.parquet(*_batch_paths(table_dir, subsumed))
     if "_cnt" in partials.columns:
         base = incremental.merge_multisets(partials)
     elif "_min" in partials.columns:
@@ -592,97 +532,73 @@ def vacuum(
     Returns (dirs_deleted, manifests_deleted) where dirs_deleted counts
     data partitions plus delete-key dirs (would-be counts under
     dry_run)."""
-    from .. import streaming
-
     if keep_versions < 1:
         raise ValueError(
             f"vacuum: keep_versions={keep_versions} would retain no "
             "manifest and delete every referenced partition — at least "
             "the current snapshot must survive"
         )
-    versions = list_versions(spark, table_dir)
+    hfs = HadoopBackend(spark)
+    versions = manifest_log.list_versions(hfs, table_dir)
     if not versions:
         return (0, 0)
     jvm, fs, _ = _fs(spark, table_dir)
+
+    def rm(path: str, recursive: bool) -> None:
+        if not dry_run:
+            fs.delete(jvm.org.apache.hadoop.fs.Path(path), recursive)
+
     import time as _time
 
-    now_ms = _time.time() * 1000.0
+    now = _time.time()
     cut = versions[-keep_versions:][0]
     if keep_hours is not None:
-        window_ms = float(keep_hours) * 3600.0 * 1000.0
         for v in versions:
             if v >= cut:
                 break
-            st = fs.getFileStatus(
-                jvm.org.apache.hadoop.fs.Path(_version_path(table_dir, v))
-            )
-            if now_ms - st.getModificationTime() <= window_ms:
+            mt = manifest_log.manifest_mtime(hfs, table_dir, v)
+            if mt is not None and now - mt <= float(keep_hours) * 3600.0:
                 cut = v
                 break
     retained = [v for v in versions if v >= cut]
     keep_ids: set[int] = set()
     keep_dids: set[int] = set()
     for v in retained:
-        m = read_manifest(spark, table_dir, v)
+        m = manifest_log.read_manifest(hfs, table_dir, v)
         keep_ids |= set(m["batch_ids"])
         keep_dids |= set(m.get("delete_ids") or [])
     dirs_deleted = 0
-    for b in streaming.list_batch_partitions(spark, table_dir):
+    for b in manifest_log.list_batch_ids(hfs, table_dir):
         if b not in keep_ids:
-            if not dry_run:
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(
-                        table_dir.rstrip("/"), f"_batch_id={b}"
-                    ),
-                    True,
-                )
-                # the batch's bloom sidecar ages out with it
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(_bloom_path(table_dir, b)),
-                    False,
-                )
+            rm(manifest_log.batch_path(table_dir, b), True)
+            # the batch's bloom sidecar ages out with it
+            rm(manifest_log.bloom_path(table_dir, b), False)
             dirs_deleted += 1
     # delete-key files referenced by NO retained manifest age out too —
     # for right-to-be-forgotten flows the keys themselves are PII, so
-    # physical erasure must cover _deletes, not just data partitions
-    ddir = jvm.org.apache.hadoop.fs.Path(
-        table_dir.rstrip("/") + "/" + DELETE_DIR
-    )
-    if fs.exists(ddir):
-        for st in fs.listStatus(ddir):
-            name = st.getPath().getName()
-            if name.startswith("d") and name[1:].isdigit():
-                if int(name[1:]) not in keep_dids:
-                    if not dry_run:
-                        fs.delete(st.getPath(), True)
-                    dirs_deleted += 1
+    # physical erasure must cover the key files, not just data partitions
+    for d in manifest_log.list_delete_ids(hfs, table_dir):
+        if d not in keep_dids:
+            rm(manifest_log.delete_path(table_dir, d), True)
+            dirs_deleted += 1
     man_deleted = 0
     for v in versions:
         if v not in retained:
-            if not dry_run:
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(
-                        _version_path(table_dir, v)
-                    ),
-                    False,
-                )
+            rm(manifest_log.version_path(table_dir, v), False)
             man_deleted += 1
     # crashed committers leave behind uniquely-named *.tmp staging files
-    # in _manifests that no rename ever consumed — reclaim those as
+    # in the manifest dir that no rename ever consumed — reclaim those as
     # well, but only past a grace period: a young .tmp may belong to a
     # LIVE committer between RenameCommitBackend's write and rename,
     # and deleting it there forces a spurious ConcurrentCommitError.
     # tmp_grace_seconds=0 reclaims unconditionally (tests / known-quiet
     # tables).
-    mdir = jvm.org.apache.hadoop.fs.Path(
-        table_dir.rstrip("/") + "/" + MANIFEST_DIR
-    )
-    if fs.exists(mdir):
-        for st in fs.listStatus(mdir):
-            if st.getPath().getName().endswith(".tmp"):
-                age_ms = now_ms - st.getModificationTime()
-                if age_ms >= tmp_grace_seconds * 1000.0 and not dry_run:
-                    fs.delete(st.getPath(), False)
+    mdir = manifest_log.manifest_dir(table_dir)
+    for name in hfs.listdir(mdir):
+        if name.endswith(".tmp"):
+            mt = hfs.mtime(f"{mdir}/{name}")
+            if mt is not None and now - mt >= tmp_grace_seconds:
+                rm(f"{mdir}/{name}", False)
     # keep the advisory pointer inside the retained window so the fast
     # path stays fast (a stale pointer would fall back to listing)
     if not dry_run:
@@ -719,16 +635,7 @@ def run_stream_manifest_agg(
             table_dir,
             batch_id,
         )
-        # an EMPTY micro-batch writes no partition directory (dynamic
-        # partition overwrite has nothing to overwrite) — committing its
-        # id would point every later snapshot read at a path that does
-        # not exist. Same guard write_and_commit_batch applies.
-        jvm, fs, _ = _fs(spark, table_dir)
-        if fs.exists(
-            jvm.org.apache.hadoop.fs.Path(
-                table_dir.rstrip("/"), f"_batch_id={batch_id}"
-            )
-        ):
+        if _batch_written(spark, table_dir, batch_id):
             commit_batch(spark, table_dir, batch_id)
 
     q = (
@@ -743,12 +650,6 @@ def run_stream_manifest_agg(
 # --------------------------------------------------------------------------
 # Merge-on-read row-level deletes (Iceberg-v2-style equality deletes)
 # --------------------------------------------------------------------------
-
-DELETE_DIR = "_deletes"
-
-
-def _delete_path(table_dir: str, delete_id: int) -> str:
-    return f"{table_dir.rstrip('/')}/{DELETE_DIR}/d{delete_id:08d}"
 
 
 def commit_deletes(
@@ -780,7 +681,9 @@ def commit_deletes(
     themselves are PII). `cutoff=None` is the legacy unbounded DELETE:
     it masks future re-inserts of the key too, and therefore must be
     retained in the manifest forever."""
-    delete_keys.write.mode("overwrite").parquet(_delete_path(table_dir, delete_id))
+    delete_keys.write.mode("overwrite").parquet(
+        manifest_log.delete_path(table_dir, delete_id)
+    )
     last: ConcurrentCommitError | None = None
     for _ in range(5):
         cur = read_manifest(spark, table_dir)
@@ -854,7 +757,7 @@ def read_snapshot_rows(
     if not ids:
         # every batch pruned: an empty frame with the table's schema
         rows = spark.read.parquet(
-            f"{table_dir.rstrip('/')}/_batch_id={m['batch_ids'][0]}"
+            manifest_log.batch_path(table_dir, m["batch_ids"][0])
         ).limit(0)
         if needs_seq:
             from pyspark.sql import functions as F
@@ -864,12 +767,10 @@ def read_snapshot_rows(
         rows = _rows_with_seq(spark, table_dir, ids, merge_schema)
     elif merge_schema:
         rows = spark.read.option("mergeSchema", "true").parquet(
-            *[f"{table_dir.rstrip('/')}/_batch_id={b}" for b in ids]
+            *_batch_paths(table_dir, ids)
         )
     else:
-        rows = spark.read.parquet(
-            *[f"{table_dir.rstrip('/')}/_batch_id={b}" for b in ids]
-        )
+        rows = spark.read.parquet(*_batch_paths(table_dir, ids))
     if where_between is not None:
         from pyspark.sql import functions as F
 
@@ -879,13 +780,6 @@ def read_snapshot_rows(
         spark, table_dir, m, rows, seq_col="_seq" if needs_seq else None
     )
     return rows.drop("_seq") if needs_seq else rows
-
-
-def _effective_seq(batch_id: int) -> int:
-    """The ingestion-order sequence a batch represents: its own id for
-    stream/backfill batches, the folded horizon for a compacted base
-    (id -(h+1) stands for everything through h)."""
-    return batch_id if batch_id >= 0 else -batch_id - 1
 
 
 def _rows_with_seq(
@@ -901,8 +795,8 @@ def _rows_with_seq(
     from pyspark.sql import functions as F
 
     parts = [
-        spark.read.parquet(f"{table_dir.rstrip('/')}/_batch_id={b}").withColumn(
-            "_seq", F.lit(_effective_seq(b))
+        spark.read.parquet(manifest_log.batch_path(table_dir, b)).withColumn(
+            "_seq", F.lit(manifest_log.effective_seq(b))
         )
         for b in ids
     ]
@@ -910,18 +804,6 @@ def _rows_with_seq(
     for p in parts[1:]:
         out = out.unionByName(p, allowMissingColumns=merge_schema)
     return out
-
-
-def _delete_groups(m: dict) -> list[tuple[int | None, list[int]]]:
-    """Delete files grouped by cutoff sequence (None = applies to every
-    batch, the plain-DELETE legacy semantics)."""
-    from collections import defaultdict
-
-    cutoffs = m.get("delete_cutoffs", {})
-    groups: dict[int | None, list[int]] = defaultdict(list)
-    for d in m.get("delete_ids", []):
-        groups[cutoffs.get(str(d))].append(d)
-    return sorted(groups.items(), key=lambda kv: (kv[0] is not None, kv[0] or 0))
 
 
 def _apply_delete_groups(
@@ -938,9 +820,9 @@ def _apply_delete_groups(
     the NEW rows committed alongside it."""
     from pyspark.sql import functions as F
 
-    for cutoff, ds in _delete_groups(m):
+    for cutoff, ds in manifest_log.delete_groups(m):
         dels = spark.read.parquet(
-            *[_delete_path(table_dir, d) for d in ds]
+            *[manifest_log.delete_path(table_dir, d) for d in ds]
         ).distinct()
         keys = list(dels.columns)
         if cutoff is None or seq_col is None:
@@ -978,7 +860,7 @@ def compact_rows_apply_deletes(
             f"behind the committed horizon {prev_horizon} — the horizon "
             "only moves forward"
         )
-    base_id = streaming.compact_base_id(upto_batch)
+    base_id = manifest_log.compact_base_id(upto_batch)
     subsumed = [b for b in cur["batch_ids"] if b <= upto_batch]
     keep = [b for b in cur["batch_ids"] if b > upto_batch]
     if not subsumed:
@@ -996,9 +878,7 @@ def compact_rows_apply_deletes(
             seq_col="_seq",
         ).drop("_seq")
     else:
-        rows = spark.read.parquet(
-            *[f"{table_dir.rstrip('/')}/_batch_id={b}" for b in subsumed]
-        )
+        rows = spark.read.parquet(*_batch_paths(table_dir, subsumed))
     tmp = table_dir.rstrip("/") + "__compact_tmp"
     rows.write.mode("overwrite").parquet(tmp)
     streaming.write_batch_partition(spark.read.parquet(tmp), table_dir, base_id)
@@ -1025,7 +905,7 @@ def compact_rows_apply_deletes(
     # metadata-only COUNT(*) path exact through compaction; same for
     # the on-disk bytes the streaming source's byte admission reads
     merged_cols["_rows"] = spark.read.parquet(
-        f"{table_dir.rstrip('/')}/_batch_id={base_id}"
+        manifest_log.batch_path(table_dir, base_id)
     ).count()
     merged_cols["_bytes"] = _partition_bytes(spark, table_dir, base_id)
     stats[str(base_id)] = merged_cols
@@ -1036,13 +916,12 @@ def compact_rows_apply_deletes(
     # could ever mask (seq <= cutoff <= upto_batch) was just rewritten out
     # of the base, and the kept batches all sit above it. Dropping it from
     # the manifest lets vacuum physically erase the key file — without
-    # this, a right-to-be-forgotten key would live in _deletes forever.
-    # Unbounded (cutoff=None) deletes mask future inserts too: retained.
+    # this, a right-to-be-forgotten key would live on disk forever. A
+    # delete survives iff it still applies to a batch past the horizon —
+    # unbounded (cutoff=None) deletes mask future inserts too: retained.
     cutoffs = dict(cur.get("delete_cutoffs") or {})
     kept_dids = [
-        d
-        for d in dids
-        if cutoffs.get(str(d)) is None or cutoffs[str(d)] > upto_batch
+        d for d in dids if manifest_log.applies(cutoffs.get(str(d)), upto_batch + 1)
     ]
     kept_cutoffs = {k: v for k, v in cutoffs.items() if int(k) in set(kept_dids)}
     return commit_version(
@@ -1128,16 +1007,13 @@ def snapshot_diff(
             _rows_with_seq(spark, table_dir, m_from["batch_ids"]),
             seq_col="_seq",
         )
-        cutoffs = m_to.get("delete_cutoffs", {})
-        from collections import defaultdict
-
-        groups: dict[int | None, list[int]] = defaultdict(list)
-        for d in new_deletes:
-            groups[cutoffs.get(str(d))].append(d)
+        groups = manifest_log.delete_groups(
+            {"delete_ids": new_deletes, "delete_cutoffs": m_to.get("delete_cutoffs")}
+        )
         del_parts = []
-        for cutoff, ds in groups.items():
+        for cutoff, ds in groups:
             dels_new = spark.read.parquet(
-                *[_delete_path(table_dir, d) for d in ds]
+                *[manifest_log.delete_path(table_dir, d) for d in ds]
             ).distinct()
             keys = list(dels_new.columns)
             if cutoff is None:
@@ -1220,7 +1096,7 @@ def check_batch_schema(
     if not ids:
         return
     table_schema = spark.read.option("mergeSchema", "true").parquet(
-        *[f"{table_dir.rstrip('/')}/_batch_id={b}" for b in ids]
+        *_batch_paths(table_dir, ids)
     ).schema
     batch = {f.name: f.dataType for f in df.schema.fields}
     table = {f.name: f.dataType for f in table_schema.fields}
@@ -1247,10 +1123,7 @@ def check_batch_schema(
 def _partition_bytes(spark: SparkSession, table_dir: str, batch_id: int) -> int:
     """Sum of data-file lengths under `_batch_id=<id>` — filesystem
     metadata only."""
-    jvm, fs, _ = _fs(spark, table_dir)
-    pdir = jvm.org.apache.hadoop.fs.Path(
-        table_dir.rstrip("/"), f"_batch_id={batch_id}"
-    )
+    jvm, fs, pdir = _fs(spark, manifest_log.batch_path(table_dir, batch_id))
     if not fs.exists(pdir):
         return 0
     return sum(
@@ -1290,17 +1163,9 @@ def write_and_commit_batch(
         check_batch_schema(spark, table_dir, df, manifest=cur0)
         validated_version = cur0["version"]
     streaming.write_batch_partition(df, table_dir, batch_id)
-    # an EMPTY batch writes no partition directory (dynamic partition
-    # overwrite has nothing to overwrite) — committing its id would
-    # point readers at a path that does not exist. Commit a version
-    # bump with the id set unchanged instead: the publish is still
-    # observable, the snapshot still consistent.
-    jvm, fs, _ = _fs(spark, table_dir)
-    wrote = fs.exists(
-        jvm.org.apache.hadoop.fs.Path(
-            table_dir.rstrip("/"), f"_batch_id={batch_id}"
-        )
-    )
+    # an EMPTY batch commits a version bump with the id set unchanged:
+    # the publish is still observable, the snapshot still consistent
+    wrote = _batch_written(spark, table_dir, batch_id)
     stats_entry = None
     if wrote:
         aggs = [F.count("*").alias("_rc")]
@@ -1427,9 +1292,9 @@ def commit_upsert(
 
     cur0 = read_manifest(spark, table_dir)
     cur_max = max(
-        (_effective_seq(b) for b in cur0["batch_ids"]), default=-1
+        (manifest_log.effective_seq(b) for b in cur0["batch_ids"]), default=-1
     )
-    if _effective_seq(batch_id) <= cur_max:
+    if manifest_log.effective_seq(batch_id) <= cur_max:
         raise ValueError(
             f"commit_upsert: batch_id={batch_id} does not exceed the "
             f"highest committed sequence {cur_max} — upserts append at "
@@ -1438,17 +1303,11 @@ def commit_upsert(
     from .. import streaming
 
     streaming.write_batch_partition(updates, table_dir, batch_id)
-    jvm, fs, _ = _fs(spark, table_dir)
-    if not fs.exists(
-        jvm.org.apache.hadoop.fs.Path(
-            table_dir.rstrip("/"), f"_batch_id={batch_id}"
-        )
-    ):
-        # empty MERGE: nothing matched, nothing to publish — committing
-        # the ids would point readers at a nonexistent partition
+    if not _batch_written(spark, table_dir, batch_id):
+        # empty MERGE: nothing matched, nothing to publish
         return cur0["version"]
     updates.select(*key_cols).distinct().write.mode("overwrite").parquet(
-        _delete_path(table_dir, delete_id)
+        manifest_log.delete_path(table_dir, delete_id)
     )
     stats_entry = None
     if stats_cols:
@@ -1491,12 +1350,6 @@ def commit_upsert(
 # --------------------------------------------------------------------------
 # Bloom-filter point-lookup skipping (sidecar filters, manifest-referenced)
 # --------------------------------------------------------------------------
-
-BLOOM_DIR = "_blooms"
-
-
-def _bloom_path(table_dir: str, batch_id: int) -> str:
-    return f"{table_dir.rstrip('/')}/{BLOOM_DIR}/b{batch_id:08d}.bin"
 
 
 def _bloom_size_bits(n_keys: int, bits_per_key: int = 10) -> int:
@@ -1583,16 +1436,19 @@ def write_batch_bloom(
     acc = np.zeros(n_bytes, dtype=np.uint8)
     for r in partials:
         acc |= np.frombuffer(r["bm"], dtype=np.uint8)
-    _write_small_file(spark, _bloom_path(table_dir, batch_id), acc.tobytes())
+    _write_small_file(
+        spark, manifest_log.bloom_path(table_dir, batch_id), acc.tobytes()
+    )
     return {"col": col, "m": m, "k": k_hashes}
 
 
 def _bloom_might_contain(
-    spark: SparkSession, table_dir: str, batch_id: int, entry: dict, value
+    fs: HadoopBackend, table_dir: str, batch_id: int, entry: dict, value
 ) -> bool:
     import hashlib
 
-    bits = _read_small_file(spark, _bloom_path(table_dir, batch_id))
+    with fs.open(manifest_log.bloom_path(table_dir, batch_id)) as f:
+        bits = f.read()
     m, k = entry["m"], entry["k"]
     for i in range(k):
         p = int(
@@ -1611,12 +1467,13 @@ def plan_point_lookup(
     column are ALWAYS kept — like zone maps, skipping optimizes, never
     filters."""
     blooms = m.get("blooms", {})
+    fs = HadoopBackend(spark)
     out = []
     for b in m["batch_ids"]:
         entry = blooms.get(str(b))
         if entry is None or entry.get("col") != col:
             out.append(b)
-        elif _bloom_might_contain(spark, table_dir, b, entry, value):
+        elif _bloom_might_contain(fs, table_dir, b, entry, value):
             out.append(b)
     return out
 
@@ -1644,16 +1501,14 @@ def read_point_lookup(
     )
     if not ids:
         rows = spark.read.parquet(
-            f"{table_dir.rstrip('/')}/_batch_id={m['batch_ids'][0]}"
+            manifest_log.batch_path(table_dir, m["batch_ids"][0])
         ).limit(0)
         if needs_seq:
             rows = rows.withColumn("_seq", F.lit(0))
     elif needs_seq:
         rows = _rows_with_seq(spark, table_dir, ids)
     else:
-        rows = spark.read.parquet(
-            *[f"{table_dir.rstrip('/')}/_batch_id={b}" for b in ids]
-        )
+        rows = spark.read.parquet(*_batch_paths(table_dir, ids))
     rows = rows.where(F.col(col) == F.lit(value))
     rows = _apply_delete_groups(
         spark, table_dir, m, rows, seq_col="_seq" if needs_seq else None
@@ -1677,12 +1532,7 @@ def write_and_commit_batch_with_bloom(
     from .. import streaming
 
     streaming.write_batch_partition(df, table_dir, batch_id)
-    jvm, fs, _ = _fs(spark, table_dir)
-    wrote = fs.exists(
-        jvm.org.apache.hadoop.fs.Path(
-            table_dir.rstrip("/"), f"_batch_id={batch_id}"
-        )
-    )
+    wrote = _batch_written(spark, table_dir, batch_id)
     bloom_entry = None
     stats_entry = None
     if wrote:
@@ -1742,11 +1592,8 @@ def snapshot_row_count(
     m = read_manifest(spark, table_dir, version)
     if not m["batch_ids"]:
         return (0, True)
-    cutoffs = m.get("delete_cutoffs", {})
-    min_seq = min(_effective_seq(b) for b in m["batch_ids"])
-    for d in m.get("delete_ids", []):
-        cut = cutoffs.get(str(d))
-        if cut is None or cut >= min_seq:
+    for cutoff, _ in manifest_log.delete_groups(m):
+        if any(manifest_log.applies(cutoff, b) for b in m["batch_ids"]):
             return (None, False)
     total = 0
     stats = m.get("stats", {})

@@ -27,19 +27,10 @@ TEST_CPUS = os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")
 def spark():
     from bigdata_googleplaystore_spark.session import get_spark
 
-    # get_spark only sizes the local-mode JVM heap on its master=None
-    # branch; with an explicit master we must pass it ourselves or the
-    # session falls back to Spark's ~1g default (the window spill-stress
-    # test OOMs there).
+    # get_spark sizes the local-mode JVM heap for an explicit local
+    # master too (the window spill-stress test OOMs at Spark's ~1g)
     spark = get_spark(
-        app_name="bgps-tests",
-        master=f"local[{TEST_CPUS}]",
-        shuffle_partitions=8,
-        extra_conf={
-            "spark.driver.memory": os.environ.get(
-                "SPARK_GRAFT_DRIVER_MEM", "16g"
-            )
-        },
+        app_name="bgps-tests", master=f"local[{TEST_CPUS}]", shuffle_partitions=8
     )
     yield spark
 

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from bigdata_googleplaystore_spark import streaming
 from bigdata_googleplaystore_spark.operators import incremental
+from bigdata_googleplaystore_spark.sources import manifest_log
 from bigdata_googleplaystore_spark.streaming import manifest
 
 
@@ -196,7 +197,7 @@ def test_merge_on_read_deletes_and_compaction(spark, tmp_path):
     assert spark.read.parquet(*[f"{table}/_batch_id={b}" for b in range(3)]).count() == 200
     # uncommitted delete file invisible
     extra = raw.where(F.col("id") % 10 == 1).select("id")
-    extra.write.mode("overwrite").parquet(manifest._delete_path(table, 7))
+    extra.write.mode("overwrite").parquet(manifest_log.delete_path(table, 7))
     assert manifest.read_snapshot_rows(spark, table).count() == 180
     # copy-on-write catch-up: base holds no deleted keys, values unchanged
     manifest.compact_rows_apply_deletes(spark, table, upto_batch=1)
@@ -470,10 +471,10 @@ def test_blooms_survive_other_commits_and_vacuum_cleans_sidecars(spark, tmp_path
     manifest.vacuum(spark, table, keep_versions=1)
     jvm, fs, _ = manifest._fs(spark, table)
     assert not fs.exists(
-        jvm.org.apache.hadoop.fs.Path(manifest._bloom_path(table, 0))
+        jvm.org.apache.hadoop.fs.Path(manifest_log.bloom_path(table, 0))
     )
     assert fs.exists(
-        jvm.org.apache.hadoop.fs.Path(manifest._bloom_path(table, 2))
+        jvm.org.apache.hadoop.fs.Path(manifest_log.bloom_path(table, 2))
     )
 
 
@@ -569,7 +570,7 @@ def test_point_in_time_delete_erased_after_compaction_and_vacuum(
     manifest.vacuum(spark, table, keep_versions=1)
     jvm, fs, _ = manifest._fs(spark, table)
     assert not fs.exists(
-        jvm.org.apache.hadoop.fs.Path(manifest._delete_path(table, 0))
+        jvm.org.apache.hadoop.fs.Path(manifest_log.delete_path(table, 0))
     )
     assert manifest.read_snapshot_rows(spark, table).count() == 150
 
@@ -590,7 +591,7 @@ def test_unbounded_delete_survives_compaction_and_vacuum(spark, tmp_path):
     manifest.vacuum(spark, table, keep_versions=1)
     jvm, fs, _ = manifest._fs(spark, table)
     assert fs.exists(
-        jvm.org.apache.hadoop.fs.Path(manifest._delete_path(table, 0))
+        jvm.org.apache.hadoop.fs.Path(manifest_log.delete_path(table, 0))
     )
     # a re-insert of a masked key stays masked (unbounded semantics)
     streaming.write_batch_partition(raw.where(F.col("id") == 7), table, 5)
@@ -669,7 +670,7 @@ def test_vacuum_reclaims_orphan_manifest_tmp(spark, tmp_path):
     table = str(tmp_path / "tbl")
     _write_committed_batches(spark, table)
     orphan = (
-        manifest._version_path(table, 99) + ".deadbeefdeadbeef.tmp"
+        manifest_log.version_path(table, 99) + ".deadbeefdeadbeef.tmp"
     )
     manifest._write_small_file(spark, orphan, b"{}")
     manifest.vacuum(spark, table, keep_versions=1, tmp_grace_seconds=0)
@@ -685,7 +686,7 @@ def test_vacuum_spares_young_manifest_tmp(spark, tmp_path):
     # must not yank it out from under that commit (r10 ADVICE)
     table = str(tmp_path / "tbl")
     _write_committed_batches(spark, table)
-    staged = manifest._version_path(table, 99) + ".cafebabecafebabe.tmp"
+    staged = manifest_log.version_path(table, 99) + ".cafebabecafebabe.tmp"
     manifest._write_small_file(spark, staged, b"{}")
     manifest.vacuum(spark, table, keep_versions=1)  # default 1h grace
     jvm, fs, _ = manifest._fs(spark, table)
@@ -718,12 +719,12 @@ def test_checkpoint_pointer_and_forward_probe(spark, tmp_path):
     assert manifest.latest_version(spark, table) == 11
     # corrupt pointer: falls back to listing
     manifest._write_small_file(
-        spark, manifest._checkpoint_path(table), b"not json"
+        spark, manifest_log.checkpoint_path(table), b"not json"
     )
     assert manifest.latest_version(spark, table) == 11
     # absent pointer: listing fallback
     jvm, fs, _ = manifest._fs(spark, table)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(manifest._checkpoint_path(table)), False)
+    fs.delete(jvm.org.apache.hadoop.fs.Path(manifest_log.checkpoint_path(table)), False)
     assert manifest.latest_version(spark, table) == 11
     # vacuum refreshes the pointer into the retained window
     manifest.vacuum(spark, table, keep_versions=2)
@@ -755,7 +756,7 @@ def test_custom_commit_backend_arbitrates(spark, tmp_path):
         spark, table, [0, 1], None, expected_prev=None, backend=rec
     )
     assert v == 0
-    assert rec.calls[0][0] == manifest._version_path(table, 0)
+    assert rec.calls[0][0] == manifest_log.version_path(table, 0)
     assert _json.loads(rec.calls[0][1])["batch_ids"] == [0, 1]
 
     class AlwaysLoses(manifest.CommitBackend):
@@ -768,6 +769,66 @@ def test_custom_commit_backend_arbitrates(spark, tmp_path):
         )
     # the losing publish left no trace: latest is still v0
     assert manifest.latest_version(spark, table) == 0
+
+
+def test_hadoop_backend_matches_local_backend(spark, tmp_path):
+    # the operator tier reads the log through HadoopBackend, the
+    # connector tier through LocalBackend: on a table the operator tier
+    # committed, the five read operations — and so every format read —
+    # must agree
+    from bigdata_googleplaystore_spark.sources.storage import (
+        HadoopBackend,
+        LocalBackend,
+    )
+
+    table = str(tmp_path / "tbl")
+    _write_committed_batches(spark, table)
+    manifest.commit_deletes(
+        spark, table, spark.createDataFrame([("1",)], "k string"), delete_id=0
+    )
+    hfs, lfs = HadoopBackend(spark), LocalBackend()
+
+    def visible(names):
+        # Hadoop's checksummed local filesystem hides its .crc sidecars
+        return [n for n in names if not (n.startswith(".") and n.endswith(".crc"))]
+
+    paths = [
+        table,
+        manifest_log.manifest_dir(table),
+        manifest_log.version_path(table, 0),
+        manifest_log.version_path(table, 4),
+        manifest_log.version_path(table, 99),
+        manifest_log.checkpoint_path(table),
+        manifest_log.batch_path(table, 0),
+        manifest_log.batch_path(table, 42),
+        manifest_log.delete_dir(table),
+        manifest_log.delete_path(table, 0),
+    ]
+    for p in paths:
+        assert hfs.exists(p) == lfs.exists(p), p
+        assert hfs.isdir(p) == lfs.isdir(p), p
+        assert visible(hfs.listdir(p)) == visible(lfs.listdir(p)), p
+        hm, lm = hfs.mtime(p), lfs.mtime(p)
+        if lm is None:
+            assert hm is None, p
+        else:
+            assert abs(hm - lm) < 1e-3, p  # Hadoop reports whole milliseconds
+        if not lfs.exists(p):
+            with pytest.raises(FileNotFoundError):
+                hfs.open(p)
+        elif not lfs.isdir(p):
+            with hfs.open(p) as a, lfs.open(p) as b:
+                assert a.read() == b.read(), p
+    assert manifest_log.latest_version(hfs, table) == 4
+    for read in (
+        manifest_log.list_versions,
+        manifest_log.read_checkpoint,
+        manifest_log.latest_version,
+        manifest_log.read_manifest,
+        manifest_log.list_batch_ids,
+        manifest_log.list_delete_ids,
+    ):
+        assert read(hfs, table) == read(lfs, table), read.__name__
 
 
 def _stream_drain(spark, table, ckpt, sink, schema_ddl, **opts):
@@ -2588,7 +2649,7 @@ def test_starting_timestamp_resolution_and_option_contract():
         R(mem2, "memory://sttsempty", 123.0, now=100.0)
     # the shared helper handles None at `latest` itself (the exported
     # contract: None = definitely-older), no caller pre-guard needed
-    assert ms.min_version_at_or_after(lambda v: None, 4, 10.0) == 5
+    assert manifest_log.min_version_at_or_after(lambda v: None, 4, 10.0) == 5
     mem.clear()
     mem2.clear()
     # parse safety (r12 self-review finding 2): compact ISO parses as a
@@ -2810,7 +2871,7 @@ def test_vacuum_dry_run_and_age_retention(spark, tmp_path):
     # age the old manifests out by backdating their mtimes, then the
     # same call reclaims exactly the pre-compaction history
     for v in before_versions[:-1]:
-        p = manifest._version_path(table, v)
+        p = manifest_log.version_path(table, v)
         os.utime(p, (1_000_000_000, 1_000_000_000))
     dirs, mans = manifest.vacuum(spark, table, keep_versions=1, keep_hours=1.0)
     assert (dirs, mans) == (3, 4)

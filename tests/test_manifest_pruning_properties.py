@@ -1,6 +1,6 @@
 """Property tests for the manifest layer's PURE planning functions —
 the data-skipping decisions that must never lose rows. No Spark
-session needed: prune_snapshot_batches and _delete_groups are pure
+session needed: prune_snapshot_batches and delete_groups are pure
 functions of the manifest dict, so hypothesis can hammer them."""
 
 from __future__ import annotations
@@ -8,6 +8,7 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from bigdata_googleplaystore_spark.sources import manifest_log
 from bigdata_googleplaystore_spark.streaming import manifest
 
 # a manifest with int zone-map stats on column "c"; some batches
@@ -84,7 +85,7 @@ def test_delete_groups_partition_exactly(dids, cutoffs):
         "delete_ids": sorted(dids),
         "delete_cutoffs": {str(k): v for k, v in cutoffs.items()},
     }
-    groups = manifest._delete_groups(m)
+    groups = manifest_log.delete_groups(m)
     flat = [d for _, ds in groups for d in ds]
     # every delete appears exactly once, grouped under its own cutoff
     assert sorted(flat) == sorted(dids)
@@ -99,6 +100,6 @@ def test_effective_seq_round_trips_compact_base_ids():
     for upto in range(0, 100):
         base = streaming.compact_base_id(upto)
         assert base < 0
-        assert manifest._effective_seq(base) == upto
+        assert manifest_log.effective_seq(base) == upto
     for b in range(0, 100):
-        assert manifest._effective_seq(b) == b
+        assert manifest_log.effective_seq(b) == b

@@ -606,7 +606,7 @@ def test_analyze_stats_feed_cbo_join_estimates(spark, sf_dir, tmp_path):
 
 def test_signed_ivm_refresh_plan_structure(spark, sf_dir):
     """The retraction-capable IVM refresh must keep the insert-only
-    path's plan shape (the claim tools/scale_probe_r08.py measures at
+    path's plan shape (the claim COVERAGE.md records at
     runtime, pinned here as a static-plan assertion): all three signed
     delta terms are BroadcastHashJoins with history only ever the probe
     side, and the hash-shuffle exchanges carry only signed

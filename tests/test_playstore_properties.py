@@ -148,10 +148,10 @@ def test_parse_last_updated_total(spark, dates):
 
 def test_coercers_on_canonical_dirty_values(spark):
     """Fast deterministic witness for the HEAVY-gated hypothesis
-    batteries above: one fixed value per FIXTURES.md quirk class per
-    coercer, checked against the same Python references. The golden
-    parity suite (test_playstore_parity.py) additionally exercises the
-    coercers end-to-end on the full reference CSV byte-exactly."""
+    batteries above, on fixed dirty values: sizes and prices equal the
+    Python references; a NaN rating is null and every rating is finite
+    or null; a valid date parses, and the calendar-invalid
+    'February 31, 2018' and two non-dates are null."""
     sizes = ["19M", "3.5M", "201K", "1,000+", "Varies with device", "19k", ""]
     got = _run_column(spark, sizes, playstore.parse_size_mb)
     assert got == pytest.approx([_ref_size(s) for s in sizes])
@@ -174,4 +174,5 @@ def test_coercers_on_canonical_dirty_values(spark):
         ).collect()
     ]
     assert str(out[0]) == "2018-01-07"
+    assert out[1] is None
     assert out[2] is None and out[3] is None

@@ -1,7 +1,10 @@
 """Scale-path operators: salted/split joins must equal their plain
-equivalents, and bucketed tables must join with zero shuffle."""
+equivalents, and bucketed tables must join with zero shuffle; the
+local-mode session gets a heap sized for them."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,6 +16,20 @@ from bigdata_googleplaystore_spark.sources import load_table
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def test_explicit_local_master_gets_heap_default(spark):
+    """The shared test session passes an explicit local[N] master, and
+    get_spark still applies the local-mode heap default instead of
+    Spark's ~1g: the configured value, and a JVM heap that size."""
+    want = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    sc = spark.sparkContext
+    assert sc.master.startswith("local[")
+    assert sc.getConf().get("spark.driver.memory") == want
+    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+    want_bytes = int(want[:-1]) * units[want[-1].lower()]
+    # maxMemory reports the usable heap, a little under -Xmx
+    assert sc._jvm.java.lang.Runtime.getRuntime().maxMemory() > 0.8 * want_bytes
 
 
 def test_salted_join_equals_plain_join(spark, sf_dir):

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from bigdata_googleplaystore_spark import sources
+from bigdata_googleplaystore_spark.sources import manifest_log
 
 
 def _rows(df, cols):
@@ -316,7 +317,7 @@ def test_fsspec_backend_delegations_through_vendored_shim(monkeypatch):
     # end to end: the manifest stream source plans and READS through it
     schema = StructType([StructField("id", LongType())])
     r = ms.ManifestStreamReader(schema, {"path": tbl})
-    assert ms._latest_version(b, tbl) == 0
+    assert manifest_log.latest_version(b, tbl) == 0
     parts = r.partitions({"version": -1}, {"version": 0})
     assert [p.path for p in parts] == [f"{tbl}/_batch_id=0/part-0.parquet"]
     rows = pa.Table.from_batches(list(r.read(parts[0])))
@@ -346,13 +347,13 @@ def test_manifest_stream_plans_through_memory_backend():
         )
     for b in range(3):
         mem.put(f"{tbl}/_batch_id={b}/part-0.parquet", b"PAR1")
-    assert ms._latest_version(mem, tbl) == 2
+    assert manifest_log.latest_version(mem, tbl) == 2
     # checkpoint pointer fast path, including forward probing
     mem.put(
         f"{tbl}/_manifests/_last_checkpoint.json",
         json.dumps({"version": 1}).encode(),
     )
-    assert ms._latest_version(mem, tbl) == 2
+    assert manifest_log.latest_version(mem, tbl) == 2
     r = ms.ManifestStreamReader(StructType([]), {"path": tbl})
     snap = r.partitions({"version": -1}, {"version": 2})
     assert sorted(p.path for p in snap) == [

@@ -20,6 +20,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from bigdata_googleplaystore_spark.catalog import QUERIES
 
@@ -87,6 +88,18 @@ def test_sweep_rows_only_query_runs(spark, name):
     spark.catalog.clearCache()
 
 
+def _synth_vocab(spark, n: int):
+    """n distinct words with a shared prefix and base-8 digit tails."""
+    digits = (
+        "transform(sequence(6, 0, -1),"
+        " p -> chr(97 + (CAST(id / CAST(pow(8, p) AS BIGINT) AS BIGINT) % 8)))"
+    )
+    return spark.range(n).select(
+        F.concat(F.lit("the"), F.expr(f"concat_ws('', {digits})")).alias("word"),
+        (F.lit(1) + (F.col("id") % 97)).cast("bigint").alias("freq"),
+    )
+
+
 def test_sweep_distributed_bpe_above_cutover_matches_reference(spark):
     """Opt-in (slow, ~20 s) regression gate for the DISTRIBUTED BPE merge
     loop ABOVE the 65,536-row driver cutover — the web-scale path the
@@ -94,12 +107,11 @@ def test_sweep_distributed_bpe_above_cutover_matches_reference(spark):
     the scale probe's deterministic synthetic vocab at 2x the cutover and
     asserts merge-for-merge equality with the driver-side reference
     (same argmax tiebreak, same greedy fold). Companion to the wall-clock
-    table in COVERAGE.md (tools/scale_probe_r05.py)."""
+    table in COVERAGE.md."""
     from bigdata_googleplaystore_spark.operators import bpe
-    from tools.scale_probe_r05 import CUTOVER, synth_vocab
 
-    n = 2 * CUTOVER
-    words = synth_vocab(spark, n)
+    n = 2 * bpe.DRIVER_VOCAB_CUTOVER
+    words = _synth_vocab(spark, n)
     wf = {r["word"]: int(r["freq"]) for r in words.collect()}
     want = bpe._learn_merges_local(wf, 8, 2)
     got = [

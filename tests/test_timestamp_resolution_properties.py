@@ -20,6 +20,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from bigdata_googleplaystore_spark.sources import manifest_log
 from bigdata_googleplaystore_spark.sources import manifest_stream as ms
 from bigdata_googleplaystore_spark.sources import storage
 
@@ -56,7 +57,7 @@ def _mtimes(n: int, vac: int, gaps: list[float]) -> list[float | None]:
 def test_min_version_at_or_after_matches_linear_scan(log, ts):
     n, vac, gaps = log
     mts = _mtimes(n, vac, gaps)
-    got = ms.min_version_at_or_after(lambda v: mts[v], n - 1, ts)
+    got = manifest_log.min_version_at_or_after(lambda v: mts[v], n - 1, ts)
     # linear reference: smallest v with a KNOWN mtime >= ts (None =
     # definitely-older by contract), else latest+1
     want = next(
@@ -70,7 +71,7 @@ def test_min_version_at_or_after_matches_linear_scan(log, ts):
 def test_max_version_at_or_before_matches_linear_scan(log, ts):
     n, vac, gaps = log
     mts = _mtimes(n, vac, gaps)
-    got = ms.max_version_at_or_before(lambda v: mts[v], n - 1, ts)
+    got = manifest_log.max_version_at_or_before(lambda v: mts[v], n - 1, ts)
     want = next(
         (v for v in range(n - 1, -1, -1) if mts[v] is not None and mts[v] <= ts),
         None,
@@ -81,8 +82,8 @@ def test_max_version_at_or_before_matches_linear_scan(log, ts):
 def test_helpers_handle_none_at_latest_internally():
     # the exported contract (r12 advice): None = definitely-older, even
     # when the FIRST probe (latest) hits it — no caller pre-guard
-    assert ms.min_version_at_or_after(lambda v: None, 7, 1.0) == 8
-    assert ms.max_version_at_or_before(lambda v: None, 7, 1.0) is None
+    assert manifest_log.min_version_at_or_after(lambda v: None, 7, 1.0) == 8
+    assert manifest_log.max_version_at_or_before(lambda v: None, 7, 1.0) is None
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""CDF masked-path EXECUTOR cost probe (round 12).
+"""CDF masked-path EXECUTOR cost probe.
 
 The claim to measure: after the r12 arrow rewrite, the masked read
 paths (excluded inserts, delete partitions) scale LINEARLY in file
@@ -28,6 +28,7 @@ import pyarrow.parquet as pq
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bigdata_googleplaystore_spark.sources import manifest_cdf_stream as mc  # noqa: E402
+from bigdata_googleplaystore_spark.sources import manifest_log  # noqa: E402
 from bigdata_googleplaystore_spark.sources import storage  # noqa: E402
 
 from pyspark.sql.types import (  # noqa: E402
@@ -59,17 +60,17 @@ def build(mem, tbl: str, n_rows: int) -> None:
     buf = io.BytesIO()
     # many row groups so the per-batch path actually iterates
     pq.write_table(data, buf, row_group_size=max(1024, n_rows // 32))
-    mem.put(f"{tbl}/_batch_id=0/part-0.parquet", buf.getvalue())
+    mem.put(f"{manifest_log.batch_path(tbl, 0)}/part-0.parquet", buf.getvalue())
     keys = ids[:: int(1 / DELETE_FRACTION)]
     kbuf = io.BytesIO()
     pq.write_table(pa.table({"id": pa.array(keys)}), kbuf)
-    mem.put(f"{tbl}/_deletes/d00000000/part-0.parquet", kbuf.getvalue())
+    mem.put(f"{manifest_log.delete_path(tbl, 0)}/part-0.parquet", kbuf.getvalue())
     mem.put(
-        f"{tbl}/_manifests/v000000000000.json",
+        manifest_log.version_path(tbl, 0),
         json.dumps({"version": 0, "batch_ids": [0], "delete_ids": []}).encode(),
     )
     mem.put(
-        f"{tbl}/_manifests/v000000000001.json",
+        manifest_log.version_path(tbl, 1),
         json.dumps(
             {"version": 1, "batch_ids": [0], "delete_ids": [0]}
         ).encode(),

@@ -1,4 +1,4 @@
-"""CDF streaming-source PLANNING cost probe (round 11).
+"""CDF streaming-source PLANNING cost probe.
 
 The claim to measure: a running manifest_cdf_stream's per-trigger
 planning cost is DELTA-sized, not history-sized — one step reads two
@@ -29,6 +29,7 @@ import pyarrow.parquet as pq
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bigdata_googleplaystore_spark.sources import manifest_cdf_stream as mc  # noqa: E402
+from bigdata_googleplaystore_spark.sources import manifest_log  # noqa: E402
 
 from pyspark.sql.types import (  # noqa: E402
     LongType,
@@ -48,11 +49,11 @@ SCHEMA = StructType(
 
 def build_table(root: str, versions: int, rows_per_batch: int = 100) -> None:
     shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(os.path.join(root, "_manifests"))
+    os.makedirs(manifest_log.manifest_dir(root))
     ids: list[int] = []
     for v in range(versions):
         b = v
-        bdir = os.path.join(root, f"_batch_id={b}")
+        bdir = manifest_log.batch_path(root, b)
         os.makedirs(bdir)
         lo = b * rows_per_batch
         t = pa.table(
@@ -63,7 +64,7 @@ def build_table(root: str, versions: int, rows_per_batch: int = 100) -> None:
         )
         pq.write_table(t, os.path.join(bdir, "part-0.parquet"))
         ids.append(b)
-        with open(os.path.join(root, "_manifests", f"v{v:012d}.json"), "w") as f:
+        with open(manifest_log.version_path(root, v), "w") as f:
             json.dump(
                 {"version": v, "batch_ids": sorted(ids), "delete_ids": []}, f
             )
@@ -71,14 +72,14 @@ def build_table(root: str, versions: int, rows_per_batch: int = 100) -> None:
 
 def add_delete_version(root: str, versions: int, keys: list[int]) -> int:
     """Commit version `versions` = prior ids + one delete group d0."""
-    ddir = os.path.join(root, "_deletes", "d00000000")
+    ddir = manifest_log.delete_path(root, 0)
     os.makedirs(ddir, exist_ok=True)
     pq.write_table(
         pa.table({"id": pa.array(keys, pa.int64())}),
         os.path.join(ddir, "part-0.parquet"),
     )
     v = versions
-    with open(os.path.join(root, "_manifests", f"v{v:012d}.json"), "w") as f:
+    with open(manifest_log.version_path(root, v), "w") as f:
         json.dump(
             {
                 "version": v,

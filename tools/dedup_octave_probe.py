@@ -1,6 +1,5 @@
-"""Parameterized dedup-linearity octave probe (r09: supersedes the
-fixed-K tools/scale_probe_r06/r07/r07d chain per VERDICT r08 item 6,
-and adds the 64x octave per item 4).
+"""Parameterized dedup-linearity octave probe (supersedes the fixed-K
+scale probes r06/r07/r07d, now in git history, and adds the 64x octave).
 
 The claim under test: dedup_minhash_lsh and dedup_ngram_jaccard are
 LINEAR in corpus size in the distinct regime — candidates and
@@ -19,8 +18,8 @@ from the 12 residues coprime to 26 and b from all 26 shifts there are
 cross-copy shingle collisions stay negligible ("the corpus simply
 grew"). Copy 0 is (a=1, b=0) = identity, so the 1x base rows appear
 verbatim and the K=1/4/16 rows replicate the committed r06/r07/r07d
-tables (same measure() functions, imported verbatim — same
-pruning-proof noop-write action, same candidate accounting).
+tables (the same measure functions, moved here from those probes —
+same pruning-proof noop-write action, same candidate accounting).
 
 Usage: python tools/dedup_octave_probe.py [K ...]   (default: 1 4 16 64)
 Run on an otherwise-idle host; prints markdown tables for COVERAGE.md.
@@ -30,17 +29,17 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bigdata_googleplaystore_spark.operators import dedup
 from bigdata_googleplaystore_spark.session import get_spark
 from bigdata_googleplaystore_spark.sources import load_table
-from tools import scale_probe_r06 as p6
-from tools import scale_probe_r07 as p7
-from tools.scale_probe_r03 import SF
 
+SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 LOWER = "abcdefghijklmnopqrstuvwxyz"
 COPRIME = [1, 3, 5, 7, 9, 11, 15, 17, 19, 21, 23, 25]
 
@@ -80,6 +79,69 @@ def build_kx_distinct(spark, out_dir: str, k: int) -> int:
     return n_doc * k
 
 
+def measure_minhash(spark, sf_dir: str, n_runs: int = 3) -> tuple[float, int, int]:
+    """(best wall-clock via noop write, candidate pairs, output pairs)
+    for minhash_lsh_pairs at threshold 0.5 / 3-shingles."""
+    best = float("inf")
+    out_rows = 0
+    for _ in range(n_runs):
+        d = load_table(spark, sf_dir, "documents")
+        out = dedup.minhash_lsh_pairs(d, "doc_id", "text", n=3, threshold=0.5)
+        t0 = time.perf_counter()
+        out.write.format("noop").mode("overwrite").save()
+        best = min(best, time.perf_counter() - t0)
+        out_rows = out.count()
+        spark.catalog.clearCache()
+    d = load_table(spark, sf_dir, "documents")
+    arrs = dedup.shingle_arrays(d, "doc_id", "text", 3)
+    sig = dedup.minhash_signatures(d, "doc_id", "text", 3, 64, shingle_arrs=arrs)
+    n_cands = dedup.lsh_candidate_pairs(sig, 16, 4).count()
+    spark.catalog.clearCache()
+    return best, n_cands, out_rows
+
+
+def _exploded_index(d):
+    """(doc, set_size, shingle) — jaccard_pairs' inverted index, kept in
+    lockstep with the operator (xxhash64 keys, distinct per doc)."""
+    sh = dedup.shingle_arrays(d, "doc_id", "text", 3)
+    hashed = sh.select(
+        "doc",
+        F.array_distinct(
+            F.transform("shingles", lambda x: F.xxhash64(x))
+        ).alias("hs"),
+    )
+    return (
+        hashed.select(
+            "doc", F.size("hs").alias("set_size"), F.explode_outer("hs").alias("shingle")
+        )
+        .filter(F.col("shingle").isNotNull())
+    )
+
+
+def measure_jaccard(spark, sf_dir: str, n_runs: int = 3):
+    """(best wall-clock via noop write, joined rows, candidate pairs,
+    output pairs) for jaccard_pairs at threshold 0.5 / 3-shingles."""
+    best = float("inf")
+    out_rows = 0
+    for _ in range(n_runs):
+        d = load_table(spark, sf_dir, "documents")
+        out = dedup.jaccard_pairs(d, "doc_id", "text", n=3, threshold=0.5)
+        t0 = time.perf_counter()
+        out.write.format("noop").mode("overwrite").save()
+        best = min(best, time.perf_counter() - t0)
+        out_rows = out.count()
+        spark.catalog.clearCache()
+    d = load_table(spark, sf_dir, "documents")
+    s = _exploded_index(d)
+    a = s.select(F.col("doc").alias("doc_a"), "shingle")
+    b = s.select(F.col("doc").alias("doc_b"), "shingle")
+    joined = a.join(b, "shingle").filter(F.col("doc_a") < F.col("doc_b"))
+    n_joined = joined.count()
+    n_cands = joined.select("doc_a", "doc_b").distinct().count()
+    spark.catalog.clearCache()
+    return best, n_joined, n_cands, out_rows
+
+
 def main() -> None:
     octaves = [int(a) for a in sys.argv[1:]] or [1, 4, 16, 64]
     spark = get_spark(app_name="dedup-octave-probe")
@@ -100,7 +162,7 @@ def main() -> None:
     print("|---|---|---|---|---|---|---|")
     base = None
     for k in octaves:
-        t, c, o = p6.measure(spark, dirs[k])
+        t, c, o = measure_minhash(spark, dirs[k])
         if base is None:
             base = (t, c, o)
         print(
@@ -115,7 +177,7 @@ def main() -> None:
     print("|---|---|---|---|---|---|---|---|")
     base = None
     for k in octaves:
-        t, j, c, o = p7.measure(spark, dirs[k])
+        t, j, c, o = measure_jaccard(spark, dirs[k])
         if base is None:
             base = (t, j, c, o)
         print(

@@ -32,7 +32,8 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from bigdata_googleplaystore_spark import streaming  # noqa: E402
 from bigdata_googleplaystore_spark.session import get_spark  # noqa: E402
-from bigdata_googleplaystore_spark.sources import load_table  # noqa: E402
+from bigdata_googleplaystore_spark.sources import load_table, manifest_log  # noqa: E402
+from bigdata_googleplaystore_spark.sources.storage import HadoopBackend  # noqa: E402
 from bigdata_googleplaystore_spark.streaming import manifest  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -125,8 +126,9 @@ def main() -> None:
     out["latest_version_with_pointer_s"] = timed(
         lambda: manifest.latest_version(spark, hist_table), reps=5
     )
-    ckpt = manifest._checkpoint_path(hist_table)
-    ckpt_bak = manifest._read_small_file(spark, ckpt)
+    ckpt = manifest_log.checkpoint_path(hist_table)
+    with HadoopBackend(spark).open(ckpt) as f:
+        ckpt_bak = f.read()
     fs.delete(jvm.org.apache.hadoop.fs.Path(ckpt), False)
     out["latest_version_listing_fallback_s"] = timed(
         lambda: manifest.latest_version(spark, hist_table), reps=5

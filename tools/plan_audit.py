@@ -72,7 +72,7 @@ NOTES: dict[str, str] = {
         "BroadcastHashJoins (batch side broadcast, history only ever the "
         "map-side probe); the only hash-shuffle exchanges carry "
         "batch-bounded partial-aggregate rows and the |keys|-sized state "
-        "fold — never a base table (cf. tools/scale_probe_r07c.py: the "
+        "fold — never a base table (cf. COVERAGE.md: the "
         "large-large recompute shuffles both full tables)."
     ),
 }
