@@ -8273,7 +8273,7 @@ def mv_manifest_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mv_manifest_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BLOOM-FILTER point-lookup skipping over a manifest row table
-    (streaming/manifest.write_and_commit_batch_with_bloom /
+    (streaming/manifest.write_and_commit_batch(bloom_col=...) /
     read_point_lookup): zone maps answer RANGE predicates, but a point
     lookup on a high-cardinality key scattered across hash batches has
     no useful [min, max] — the second skipping axis is a per-batch
@@ -8303,7 +8303,7 @@ def mv_manifest_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     table = scratch_dir("bloomlookup", sf_dir)
     shutil.rmtree(table, ignore_errors=True)
     for b in range(8):
-        manifest.write_and_commit_batch_with_bloom(
+        manifest.write_and_commit_batch(
             spark,
             o.filter(F.col("o_orderkey") % 8 == b),
             table,
@@ -9186,16 +9186,7 @@ def mv_manifest_conditional_put(spark: SparkSession, sf_dir: str) -> DataFrame:
                 store.interpose = None
                 try:
                     cur = manifest.read_manifest(spark, table)
-                    # carry EVERY manifest field through so the rival
-                    # commit is a genuine no-op version bump — dropping
-                    # delete_ids/stats/delete_cutoffs/blooms here would
-                    # silently erase them on a table that had any
-                    manifest.commit_version(
-                        spark, table, cur["batch_ids"], cur.get("horizon"),
-                        cur["version"], cur.get("delete_ids"),
-                        cur.get("stats"), cur.get("delete_cutoffs"),
-                        cur.get("blooms"), backend=rival,
-                    )
+                    manifest.commit_version(spark, table, cur, backend=rival)
                 finally:
                     store.interpose = rival_commits_first
 

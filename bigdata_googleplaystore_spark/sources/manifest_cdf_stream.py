@@ -405,9 +405,7 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
             m = m_end if m_end is not None else self._manifest(ev)
             self._insert_step(parts_by_file, m, m["batch_ids"], memo, ev)
             return self._guard_key_bytes(list(parts_by_file.values()))
-        m_prev = self._manifest(sv) if sv >= 0 else {
-            "version": -1, "batch_ids": [], "delete_ids": [],
-        }
+        m_prev = self._manifest(sv) if sv >= 0 else manifest_log.EMPTY_MANIFEST
         for v in range(max(sv + 1, 0), ev + 1):
             m_v = self._manifest(v)
             prev_ids = set(m_prev["batch_ids"])

@@ -10,9 +10,8 @@ Layout of a manifest-committed table:
     <table>/_deletes/d00000007/part-*.parquet equality-delete key file 7
     <table>/_blooms/b00000003.bin             bloom sidecar of batch 3
 
-A manifest is the complete snapshot definition: `version`, `batch_ids`,
-`horizon`, `delete_ids`, `delete_cutoffs`, `stats`, `blooms` (written by
-streaming/manifest.commit_version).
+A manifest is the complete snapshot definition: the seven fields of
+EMPTY_MANIFEST (written by streaming/manifest.commit_version).
 
 Both lakehouse tiers read the log through this module: the operator tier
 (streaming/manifest.py, streaming/__init__.py) over the session's Hadoop
@@ -24,6 +23,7 @@ this module imports only the stdlib and `storage` — never pyspark.
 
 from __future__ import annotations
 
+import copy
 import json
 
 from .storage import StorageBackend
@@ -34,7 +34,16 @@ BLOOM_DIR = "_blooms"
 CHECKPOINT_FILE = "_last_checkpoint.json"
 BATCH_PREFIX = "_batch_id="
 
-EMPTY_MANIFEST = {"version": -1, "batch_ids": [], "horizon": None}
+# the manifest record's fields, as an empty table reads (version -1)
+EMPTY_MANIFEST = {
+    "version": -1,
+    "batch_ids": [],
+    "horizon": None,
+    "delete_ids": [],
+    "delete_cutoffs": {},
+    "stats": {},
+    "blooms": {},
+}
 
 
 # --------------------------------------------------------------------------
@@ -160,7 +169,7 @@ def read_manifest(
     if version is None:
         version = latest_version(fs, table_dir)
         if version is None:
-            return dict(EMPTY_MANIFEST)
+            return copy.deepcopy(EMPTY_MANIFEST)
     return _read_json(fs, version_path(table_dir, version))
 
 

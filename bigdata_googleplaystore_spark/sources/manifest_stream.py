@@ -112,12 +112,14 @@ def _byte_capped_end(
     fs: StorageBackend, table_dir: str, floor: int, latest: int, max_bytes: int
 ) -> int:
     """The farthest version <= `latest` whose cumulative NEW
-    non-negative batches' recorded `_bytes` (manifest stats, written by
-    manifest.write_and_commit_batch) stay within `max_bytes` past
-    `floor` — the maxBytesPerTrigger admission decision, shared by the
-    append-only and CDF stream readers. Walks O(admitted backlog)
-    manifest JSONs, which the cap itself bounds after the first
-    trigger; batches without the stat count 0 (admission is backlog
+    non-negative batches' recorded `_bytes` (manifest stats, recorded
+    by every row-batch commit — write_and_commit_batch with or without
+    a bloom, and commit_upsert — through manifest._batch_stats) stay
+    within `max_bytes` past `floor` — the maxBytesPerTrigger admission
+    decision, shared by the append-only and CDF stream readers. Walks
+    O(admitted backlog) manifest JSONs, which the cap itself bounds
+    after the first trigger; batches without the stat (aggregate-state
+    partials published by commit_batch) count 0 (admission is backlog
     PACING, never a correctness input). Always admits >= 1 version
     (progress guarantee)."""
     try:

@@ -444,10 +444,8 @@ def compact_state_partials(
     partitions. Readers are untouched — the fold operators are
     associative, so (merged base) ⊕ (newer partials) equals the
     original chain; `read_incremental_state` and friends work unchanged
-    on the compacted table. Works on any of the three state schemas,
-    dispatching on the columns: multiset partials (`_cnt`) merge with
-    merge_multisets, scalar partials (`_min`/`_max` present) with
-    merge_partials, signed partials with merge_partials_signed.
+    on the compacted table. Works on any of the three state schemas
+    (merge_state_partials).
 
     Replay contract: compact only behind the stream's COMMITTED
     checkpoint offset. A replay of an id <= the horizon (possible only
@@ -481,63 +479,90 @@ def compact_state_partials(
     data volume does.
 
     Returns the number of old partitions removed."""
-    from ..operators import incremental
-
     base_id = compact_base_id(upto_batch)
     listed = list_batch_partitions(spark, state_dir)
-    # the horizon can only move FORWARD: an existing base at horizon H
-    # (id -(H+1)) folded batches through H, so "compacting" to an
-    # earlier upto would relabel version-H data as an older version
-    prev_horizon = max(
-        (manifest_log.effective_seq(b) for b in listed if b < 0), default=-1
+    # an existing base at horizon H (id -(H+1)) folded batches through
+    # H, so "compacting" to an earlier upto would relabel version-H data
+    # as an older version
+    check_horizon(
+        "compact_state_partials",
+        upto_batch,
+        max((manifest_log.effective_seq(b) for b in listed if b < 0), default=None),
     )
-    if upto_batch < prev_horizon:
-        raise ValueError(
-            f"compact_state_partials: upto_batch={upto_batch} is behind "
-            f"the existing compaction horizon {prev_horizon} — the "
-            "horizon only moves forward"
-        )
     # every partition the merged base subsumes: ids <= upto_batch,
     # including any earlier (more-negative-than-new) compacted base
     old_ids = [b for b in listed if b <= upto_batch and b != base_id]
-    # Swap protocol (WRITE-BEFORE-DELETE): stage the merged base OUTSIDE
-    # the table (the merge plan reads the very partitions being
-    # subsumed, so it must materialize before anything in the table
-    # moves), write the base INTO the table at its reserved negative id,
-    # and only then delete the subsumed partitions. The swap is still
-    # not atomic, but every crash window now errs toward DUPLICATION,
-    # never loss: a crash before the base write leaves the table
-    # untouched (re-run recomputes the merge from the intact partials);
-    # a crash after the base write but mid-delete leaves base + some
-    # subsumed partials coexisting — reads double-count those batches
-    # (detectable) until the re-run below notices the base partition
-    # already exists, SKIPS the merge (re-merging partials that include
-    # the base would fold it twice), and finishes the deletes. A
-    # production deployment wraps this in a manifest commit (or a
-    # transactional table format); the operator keeps the merge /
-    # retention semantics and the FS mechanics, which is what the gate
-    # checks.
-    jvm = spark.sparkContext._jvm
-    hroot = jvm.org.apache.hadoop.fs.Path(state_dir)
-    fs = hroot.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    tmp = state_dir.rstrip("/") + "__compact_tmp"
+    # Swap protocol (WRITE-BEFORE-DELETE): write the merged base INTO
+    # the table at its reserved negative id, and only then delete the
+    # subsumed partitions. The swap is still not atomic, but every crash
+    # window now errs toward DUPLICATION, never loss: a crash before the
+    # base write leaves the table untouched (re-run recomputes the merge
+    # from the intact partials); a crash after the base write but
+    # mid-delete leaves base + some subsumed partials coexisting — reads
+    # double-count those batches (detectable) until the re-run below
+    # notices the base partition already exists, SKIPS the merge
+    # (re-merging partials that include the base would fold it twice),
+    # and finishes the deletes. A production deployment wraps this in a
+    # manifest commit (streaming/manifest.compact_snapshot); the
+    # operator keeps the merge / retention semantics and the FS
+    # mechanics, which is what the gate checks.
     if base_id not in listed:
-        partials = _read_state_partials(spark, state_dir, upto_batch)
-        if "_cnt" in partials.columns:
-            base = incremental.merge_multisets(partials)
-        elif "_min" in partials.columns:
-            base = incremental.merge_partials(partials)
-        else:
-            base = incremental.merge_partials_signed(partials)
-        base.write.mode("overwrite").parquet(tmp)
-        write_batch_partition(spark.read.parquet(tmp), state_dir, base_id)
+        write_compacted_base(
+            spark,
+            merge_state_partials(_read_state_partials(spark, state_dir, upto_batch)),
+            state_dir,
+            base_id,
+        )
     # base is durable in-table; the deletes are idempotent from here
     for b in old_ids:
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(manifest_log.batch_path(state_dir, b)), True
-        )
-    fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), True)
+        _delete_path(spark, manifest_log.batch_path(state_dir, b))
     return len(old_ids)
+
+
+def check_horizon(op: str, upto_batch: int, horizon: int | None) -> None:
+    """A compaction's horizon only moves forward: refuse `upto_batch`
+    behind the table's current `horizon` (None: never compacted)."""
+    if horizon is not None and upto_batch < horizon:
+        raise ValueError(
+            f"{op}: upto_batch={upto_batch} is behind the compaction "
+            f"horizon {horizon} — the horizon only moves forward"
+        )
+
+
+def merge_state_partials(partials: DataFrame) -> DataFrame:
+    """Fold partial-state rows of any of the three state schemas,
+    dispatching on the columns: multiset partials (`_cnt`) with
+    merge_multisets, scalar partials (`_min`/`_max`) with
+    merge_partials, signed partials with merge_partials_signed."""
+    from ..operators import incremental
+
+    if "_cnt" in partials.columns:
+        return incremental.merge_multisets(partials)
+    if "_min" in partials.columns:
+        return incremental.merge_partials(partials)
+    return incremental.merge_partials_signed(partials)
+
+
+def write_compacted_base(
+    spark: SparkSession, base: DataFrame, table_dir: str, base_id: int
+) -> None:
+    """Land a compaction's merged `base` at its reserved partition. The
+    merge plan reads the very partitions the base subsumes, so it is
+    materialized OUTSIDE the table first (`<table>__compact_tmp`) and
+    only then written in; the staging copy is removed afterwards."""
+    tmp = table_dir.rstrip("/") + "__compact_tmp"
+    base.write.mode("overwrite").parquet(tmp)
+    write_batch_partition(spark.read.parquet(tmp), table_dir, base_id)
+    _delete_path(spark, tmp)
+
+
+def _delete_path(spark: SparkSession, path: str) -> None:
+    """Recursive delete through the session's Hadoop FileSystem (works
+    on hdfs:// and s3a:// paths, not only local disk)."""
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).delete(
+        jpath, True
+    )
 
 
 def run_stream_to_memory(

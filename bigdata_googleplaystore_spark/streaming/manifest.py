@@ -16,17 +16,26 @@ format module sources/manifest_log.py owns it and every read rule):
     <table>/_batch_id=<n>/part-*.parquet     immutable once committed
     <table>/_manifests/v000000000042.json    immutable, create-only
 
-A manifest is the complete snapshot definition:
-``{"version": N, "batch_ids": [...], "horizon": h|null}``. The current
-snapshot is the highest version file. Commit = write a temp file, then
-a single filesystem RENAME onto the next version path — on HDFS a
-namespace-atomic operation that fails if the destination exists, which
-is exactly optimistic concurrency (the losing committer re-reads the
-new latest and retries). On the local filesystem rename(2) would
-silently replace, so commit_version pre-checks existence — a small
-TOCTOU window acceptable for single-writer deployments; S3 needs a
-conditional-put or an external catalog, same as every manifest-based
-format.
+A manifest is the complete snapshot definition, a record of the seven
+fields of manifest_log.EMPTY_MANIFEST: version, batch_ids, horizon,
+delete_ids, delete_cutoffs, stats (per batch: `_rows`, `_bytes` and the
+zone map, see _batch_stats) and blooms. The current snapshot is the
+highest version file.
+
+One write path: commit_version is the only code that builds the record.
+It takes the manifest the commit was planned against with the changed
+fields replaced, so a field no caller names carries forward. Commit =
+write a temp file, then a single filesystem RENAME onto the next
+version path — on HDFS a namespace-atomic operation that fails if the
+destination exists, which is exactly optimistic concurrency. On the
+local filesystem rename(2) would silently replace, so the rename
+backend pre-checks existence — a small TOCTOU window acceptable for
+single-writer deployments; S3 needs a conditional-put or an external
+catalog, same as every manifest-based format. Writers whose change
+commutes with any concurrent commit (appends, deletes, upserts) go
+through _commit_on_latest, the one loop that re-reads the new latest
+and retries after a lost race; compaction and rollback plan against
+one specific version and commit once.
 
 What the manifest buys, concretely:
 - **Atomic compaction.** The merged base partition is written FIRST,
@@ -327,41 +336,33 @@ def read_manifest(
 def commit_version(
     spark: SparkSession,
     table_dir: str,
-    batch_ids: list[int],
-    horizon: int | None,
-    expected_prev: int | None,
-    delete_ids: list[int] | None = None,
-    stats: dict | None = None,
-    delete_cutoffs: dict | None = None,
-    blooms: dict | None = None,
+    manifest: dict,
     backend: CommitBackend | None = None,
 ) -> int:
-    """Commit the next manifest version via the backend's atomic
+    """Commit `manifest` as the next version via the backend's atomic
     create-if-absent publish (default: unique-temp write + rename, see
     RenameCommitBackend / CommitBackend for the object-store variants).
-    `expected_prev` is the version this commit was planned against
-    (None for the first commit); if someone else committed in between,
-    the version file already exists and ConcurrentCommitError tells the
-    caller to re-plan — optimistic concurrency, no locks.
-    `delete_ids` are the merge-on-read delete files (see commit_deletes)
-    this snapshot applies; `stats` is the zone-map metadata
-    {str(batch_id): {col: [min, max]}} (see write_and_commit_batch).
+    `manifest` is the record this commit was planned against (its
+    `version`; -1 for an empty table) with the changed fields replaced,
+    e.g. `{**cur, "batch_ids": ids}`: every field it does not change
+    carries forward, and a field it lacks takes EMPTY_MANIFEST's value.
+    If someone else committed in between, the version file already
+    exists and ConcurrentCommitError tells the caller to re-plan —
+    optimistic concurrency, no locks.
 
     Every CHECKPOINT_INTERVAL-th commit refreshes the advisory
     `_last_checkpoint.json` pointer so a cold reader finds the latest
     version in O(commits since checkpoint) probes instead of an
     O(all versions) directory listing (see latest_version)."""
-    next_v = (expected_prev if expected_prev is not None else -1) + 1
-    manifest = {
-        "version": next_v,
-        "batch_ids": sorted(batch_ids),
-        "horizon": horizon,
-        "delete_ids": sorted(delete_ids or []),
-        "stats": stats or {},
-        "delete_cutoffs": delete_cutoffs or {},
-        "blooms": blooms or {},
+    record = {
+        k: default if manifest.get(k) is None else manifest[k]
+        for k, default in manifest_log.EMPTY_MANIFEST.items()
     }
-    data = json.dumps(manifest, sort_keys=True).encode("utf-8")
+    next_v = record["version"] + 1
+    record["version"] = next_v
+    record["batch_ids"] = sorted(record["batch_ids"])
+    record["delete_ids"] = sorted(record["delete_ids"])
+    data = json.dumps(record, sort_keys=True).encode("utf-8")
     (backend or _DEFAULT_BACKEND).publish(
         spark, data, manifest_log.version_path(table_dir, next_v)
     )
@@ -370,36 +371,34 @@ def commit_version(
     return next_v
 
 
-def commit_batch(
-    spark: SparkSession, table_dir: str, batch_id: int, retries: int = 5
-) -> int:
+COMMIT_RETRIES = 5
+
+
+def _commit_on_latest(spark: SparkSession, table_dir: str, change) -> int:
+    """Optimistic commit for changes that commute with any concurrent
+    commit (set unions, stats of a new batch): read the latest manifest,
+    commit it with the fields `change(cur)` returns replaced, and after
+    a lost race re-read and re-apply — the happy path every manifest
+    format uses for appends. The last of COMMIT_RETRIES conflicts
+    propagates."""
+    for attempt in range(COMMIT_RETRIES):
+        cur = read_manifest(spark, table_dir)
+        try:
+            return commit_version(spark, table_dir, {**cur, **change(cur)})
+        except ConcurrentCommitError:
+            if attempt == COMMIT_RETRIES - 1:
+                raise
+
+
+def commit_batch(spark: SparkSession, table_dir: str, batch_id: int) -> int:
     """Publish an already-written `_batch_id` partition into the
     snapshot: latest manifest + this id -> next version. The partition
     write (streaming.write_batch_partition) stays idempotent and
-    invisible until this commit lands. A set-union commit commutes
-    with any concurrent commit, so on a version conflict the right
-    move is always re-read-and-retry (bounded) — the optimistic-
-    concurrency happy path every manifest format uses for appends."""
-    last: ConcurrentCommitError | None = None
-    for _ in range(retries):
-        cur = read_manifest(spark, table_dir)
-        ids = set(cur["batch_ids"]) | {batch_id}
-        prev = cur["version"] if cur["version"] >= 0 else None
-        try:
-            return commit_version(
-                spark,
-                table_dir,
-                sorted(ids),
-                cur.get("horizon"),
-                prev,
-                cur.get("delete_ids"),
-                cur.get("stats"),
-                cur.get("delete_cutoffs"),
-                cur.get("blooms"),
-            )
-        except ConcurrentCommitError as e:
-            last = e
-    raise last if last is not None else RuntimeError("retries must be >= 1")
+    invisible until this commit lands. The publish is metadata only:
+    aggregate-state partials carry no stats (see _batch_stats)."""
+    return _commit_on_latest(
+        spark, table_dir, lambda cur: {"batch_ids": {*cur["batch_ids"], batch_id}}
+    )
 
 
 def snapshot_partials(
@@ -444,59 +443,56 @@ def compact_snapshot(
 
     Returns the committed manifest version."""
     from .. import streaming
-    from ..operators import incremental
+
+    cur, subsumed = _compaction_plan(spark, table_dir, upto_batch, "compact_snapshot")
+    if not subsumed:
+        return cur["version"]
+    # merge ONLY the committed subsumed partials (manifest-planned read)
+    streaming.write_compacted_base(
+        spark,
+        streaming.merge_state_partials(
+            spark.read.parquet(*_batch_paths(table_dir, subsumed))
+        ),
+        table_dir,
+        manifest_log.compact_base_id(upto_batch),
+    )
+    # the base gets no stats — conservative: it is always read
+    return commit_version(spark, table_dir, _swap_in_base(cur, upto_batch))
+
+
+def _compaction_plan(
+    spark: SparkSession, table_dir: str, upto_batch: int, op: str
+) -> tuple[dict, list[int]]:
+    """The latest manifest a compaction to `upto_batch` plans against,
+    and the committed ids the base will subsume (none: nothing to do)."""
+    from .. import streaming
 
     cur = read_manifest(spark, table_dir)
     if not cur["batch_ids"]:
         raise ValueError(f"nothing to compact in {table_dir}")
-    prev_horizon = cur.get("horizon")
-    if prev_horizon is not None and upto_batch < prev_horizon:
-        raise ValueError(
-            f"compact_snapshot: upto_batch={upto_batch} is behind the "
-            f"committed horizon {prev_horizon} — the horizon only moves "
-            "forward"
-        )
+    streaming.check_horizon(op, upto_batch, cur["horizon"])
+    return cur, [b for b in cur["batch_ids"] if b <= upto_batch]
+
+
+def _swap_in_base(cur: dict, upto_batch: int, base_stats: dict | None = None) -> dict:
+    """`cur` after a compaction to `upto_batch` — the atomic swap: the
+    subsumed ids leave for the base id, the horizon advances, and the
+    subsumed batches' stats and blooms leave the manifest with them."""
     base_id = manifest_log.compact_base_id(upto_batch)
-    subsumed = [b for b in cur["batch_ids"] if b <= upto_batch]
-    keep = [b for b in cur["batch_ids"] if b > upto_batch]
-    if not subsumed:
-        return cur["version"]
-    # merge ONLY the committed subsumed partials (manifest-planned read)
-    partials = spark.read.parquet(*_batch_paths(table_dir, subsumed))
-    if "_cnt" in partials.columns:
-        base = incremental.merge_multisets(partials)
-    elif "_min" in partials.columns:
-        base = incremental.merge_partials(partials)
-    else:
-        base = incremental.merge_partials_signed(partials)
-    # stage outside the table (the plan reads dirs the base replaces in
-    # the NEXT snapshot — but nothing in the CURRENT one moves, so this
-    # is belt-and-braces against partial in-place overwrites)
-    tmp = table_dir.rstrip("/") + "__compact_tmp"
-    base.write.mode("overwrite").parquet(tmp)
-    streaming.write_batch_partition(spark.read.parquet(tmp), table_dir, base_id)
-    jvm, fs, _ = _fs(spark, table_dir)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), True)
-    # the atomic swap; subsumed ids' zone-map stats leave the manifest
-    # with them (the base gets none — conservative: it is always read)
-    stats = {
-        k: v for k, v in (cur.get("stats") or {}).items() if int(k) > upto_batch
+
+    def above(entries: dict) -> dict:
+        return {k: v for k, v in entries.items() if int(k) > upto_batch}
+
+    stats = above(cur["stats"])
+    if base_stats is not None:
+        stats[str(base_id)] = base_stats
+    return {
+        **cur,
+        "batch_ids": [base_id, *(b for b in cur["batch_ids"] if b > upto_batch)],
+        "horizon": upto_batch,
+        "stats": stats,
+        "blooms": above(cur["blooms"]),
     }
-    blooms = {
-        k: v for k, v in (cur.get("blooms") or {}).items() if int(k) > upto_batch
-    }
-    version = commit_version(
-        spark,
-        table_dir,
-        [base_id, *keep],
-        upto_batch,
-        cur["version"],
-        cur.get("delete_ids"),
-        stats,
-        cur.get("delete_cutoffs"),
-        blooms,
-    )
-    return version
 
 
 def vacuum(
@@ -684,29 +680,17 @@ def commit_deletes(
     delete_keys.write.mode("overwrite").parquet(
         manifest_log.delete_path(table_dir, delete_id)
     )
-    last: ConcurrentCommitError | None = None
-    for _ in range(5):
-        cur = read_manifest(spark, table_dir)
-        dids = set(cur.get("delete_ids", [])) | {delete_id}
-        cutoffs = dict(cur.get("delete_cutoffs") or {})
+
+    def change(cur: dict) -> dict:
+        cutoffs = cur["delete_cutoffs"]
         if cutoff is not None:
-            cutoffs[str(delete_id)] = cutoff
-        prev = cur["version"] if cur["version"] >= 0 else None
-        try:
-            return commit_version(
-                spark,
-                table_dir,
-                cur["batch_ids"],
-                cur.get("horizon"),
-                prev,
-                sorted(dids),
-                cur.get("stats"),
-                cutoffs,
-                cur.get("blooms"),
-            )
-        except ConcurrentCommitError as e:  # set-union commutes: retry
-            last = e
-    raise last if last is not None else RuntimeError("unreachable")
+            cutoffs = {**cutoffs, str(delete_id): cutoff}
+        return {
+            "delete_ids": {*cur["delete_ids"], delete_id},
+            "delete_cutoffs": cutoffs,
+        }
+
+    return _commit_on_latest(spark, table_dir, change)
 
 
 def read_snapshot_rows(
@@ -850,22 +834,13 @@ def compact_rows_apply_deletes(
     than the horizon."""
     from .. import streaming
 
-    cur = read_manifest(spark, table_dir)
-    if not cur["batch_ids"]:
-        raise ValueError(f"nothing to compact in {table_dir}")
-    prev_horizon = cur.get("horizon")
-    if prev_horizon is not None and upto_batch < prev_horizon:
-        raise ValueError(
-            f"compact_rows_apply_deletes: upto_batch={upto_batch} is "
-            f"behind the committed horizon {prev_horizon} — the horizon "
-            "only moves forward"
-        )
-    base_id = manifest_log.compact_base_id(upto_batch)
-    subsumed = [b for b in cur["batch_ids"] if b <= upto_batch]
-    keep = [b for b in cur["batch_ids"] if b > upto_batch]
+    cur, subsumed = _compaction_plan(
+        spark, table_dir, upto_batch, "compact_rows_apply_deletes"
+    )
     if not subsumed:
         return cur["version"]
-    dids = cur.get("delete_ids", [])
+    base_id = manifest_log.compact_base_id(upto_batch)
+    dids = cur["delete_ids"]
     if dids:
         # sequence-aware: a delete masks only rows of batches at or
         # below its cutoff, so the base's surviving rows are exactly
@@ -879,39 +854,31 @@ def compact_rows_apply_deletes(
         ).drop("_seq")
     else:
         rows = spark.read.parquet(*_batch_paths(table_dir, subsumed))
-    tmp = table_dir.rstrip("/") + "__compact_tmp"
-    rows.write.mode("overwrite").parquet(tmp)
-    streaming.write_batch_partition(spark.read.parquet(tmp), table_dir, base_id)
-    jvm, fs, _ = _fs(spark, table_dir)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), True)
+    streaming.write_compacted_base(spark, rows, table_dir, base_id)
     # the base inherits the MERGED zone-map bounds of what it replaced
     # (deletes only shrink the true range — wider bounds stay CORRECT
     # for skipping, just less tight); kept batches keep their own
-    old_stats = cur.get("stats") or {}
-    stats = {k: v for k, v in old_stats.items() if int(k) > upto_batch}
-    merged_cols: dict[str, object] = {}
-    sub_entries = [old_stats.get(str(b)) for b in subsumed]
-    if all(e is not None for e in sub_entries) and sub_entries:
+    sub_entries = [cur["stats"].get(str(b)) for b in subsumed]
+    base_stats: dict[str, object] = {}
+    if all(e is not None for e in sub_entries):
         common = set.intersection(*(set(e) for e in sub_entries))
-        for c in common:
-            if c in ("_rows", "_bytes"):  # remeasured exactly below
-                continue
+        for c in common - {"_rows", "_bytes"}:
             los = [e[c][0] for e in sub_entries]
             his = [e[c][1] for e in sub_entries]
             if all(v is not None for v in los + his):
-                merged_cols[c] = [min(los), max(his)]
+                base_stats[c] = [min(los), max(his)]
     # the rewritten base's EXACT row count (deletes were applied above,
     # so summing subsumed counts would overcount) — keeps the
     # metadata-only COUNT(*) path exact through compaction; same for
-    # the on-disk bytes the streaming source's byte admission reads
-    merged_cols["_rows"] = spark.read.parquet(
-        manifest_log.batch_path(table_dir, base_id)
-    ).count()
-    merged_cols["_bytes"] = _partition_bytes(spark, table_dir, base_id)
-    stats[str(base_id)] = merged_cols
-    blooms = {
-        k: v for k, v in (cur.get("blooms") or {}).items() if int(k) > upto_batch
-    }
+    # the on-disk bytes the stream sources' byte admission reads
+    base_stats.update(
+        _batch_stats(
+            spark,
+            spark.read.parquet(manifest_log.batch_path(table_dir, base_id)),
+            table_dir,
+            base_id,
+        )
+    )
     # a delete whose cutoff the new horizon covers is SPENT: every row it
     # could ever mask (seq <= cutoff <= upto_batch) was just rewritten out
     # of the base, and the kept batches all sit above it. Dropping it from
@@ -919,21 +886,20 @@ def compact_rows_apply_deletes(
     # this, a right-to-be-forgotten key would live on disk forever. A
     # delete survives iff it still applies to a batch past the horizon —
     # unbounded (cutoff=None) deletes mask future inserts too: retained.
-    cutoffs = dict(cur.get("delete_cutoffs") or {})
+    cutoffs = cur["delete_cutoffs"]
     kept_dids = [
         d for d in dids if manifest_log.applies(cutoffs.get(str(d)), upto_batch + 1)
     ]
-    kept_cutoffs = {k: v for k, v in cutoffs.items() if int(k) in set(kept_dids)}
     return commit_version(
         spark,
         table_dir,
-        [base_id, *keep],
-        upto_batch,
-        cur["version"],
-        kept_dids,
-        stats,
-        kept_cutoffs,
-        blooms,
+        {
+            **_swap_in_base(cur, upto_batch, base_stats),
+            "delete_ids": kept_dids,
+            "delete_cutoffs": {
+                k: v for k, v in cutoffs.items() if int(k) in set(kept_dids)
+            },
+        },
     )
 
 
@@ -1133,87 +1099,94 @@ def _partition_bytes(spark: SparkSession, table_dir: str, batch_id: int) -> int:
     )
 
 
+def _batch_stats(
+    spark: SparkSession,
+    df: DataFrame,
+    table_dir: str,
+    batch_id: int,
+    stats_cols: list[str] | None = None,
+) -> dict:
+    """The manifest stats of a batch just written at `batch_id`:
+    `_rows` (the metadata-only COUNT(*) input, snapshot_row_count),
+    `_bytes` (on-disk size, the stream sources' maxBytesPerTrigger
+    input) and the zone map [min, max] of each `stats_cols` column
+    (read_snapshot_rows' skipping input). One map-side-combinable
+    aggregate pass over `df` plus one metadata listing of the partition
+    — never a re-read of the written data."""
+    from pyspark.sql import functions as F
+
+    cols = stats_cols or []
+    aggs = [F.count("*").alias("_rows")]
+    for c in cols:
+        aggs += [F.min(c).alias(f"mn_{c}"), F.max(c).alias(f"mx_{c}")]
+    row = df.agg(*aggs).collect()[0]
+    stats = {
+        c: [_json_scalar(row[f"mn_{c}"]), _json_scalar(row[f"mx_{c}"])]
+        for c in cols
+    }
+    stats["_rows"] = int(row["_rows"])
+    stats["_bytes"] = _partition_bytes(spark, table_dir, batch_id)
+    return stats
+
+
 def write_and_commit_batch(
     spark: SparkSession,
     df: DataFrame,
     table_dir: str,
     batch_id: int,
     stats_cols: list[str] | None = None,
-    retries: int = 5,
     enforce_schema: bool = False,
+    bloom_col: str | None = None,
 ) -> int:
-    """Write a row batch AND publish it with per-batch ZONE-MAP stats:
-    the manifest records each committed batch's [min, max] for
-    `stats_cols`, so later range reads skip non-overlapping batches
-    from METADATA alone — no directory listing, no parquet footers,
-    the Delta/Iceberg data-skipping design one level above parquet's
-    own row-group stats. The stats aggregate is one map-side-combinable
-    min/max pass over the batch being written (it is already in memory
-    of the job that produced it). With `enforce_schema`, the batch is
-    validated against the table BEFORE any bytes land
-    (check_batch_schema — additive columns pass, type flips and
-    dropped columns refuse)."""
-    from pyspark.sql import functions as F
-
+    """Write a row batch AND publish it with its stats (_batch_stats):
+    the manifest records each committed batch's row count, bytes and
+    [min, max] for `stats_cols`, so later range reads skip
+    non-overlapping batches from METADATA alone — no directory listing,
+    no parquet footers, the Delta/Iceberg data-skipping design one level
+    above parquet's own row-group stats. With `bloom_col`, a bloom
+    sidecar over that column (write_batch_bloom) is published in the
+    same commit — the point-lookup skipping axis. With `enforce_schema`,
+    the batch is validated against the table BEFORE any bytes land
+    (check_batch_schema — additive columns pass, type flips and dropped
+    columns refuse)."""
     from .. import streaming
 
-    validated_version: int | None = None
+    validated: int | None = None
     if enforce_schema:
         cur0 = read_manifest(spark, table_dir)
         check_batch_schema(spark, table_dir, df, manifest=cur0)
-        validated_version = cur0["version"]
+        validated = cur0["version"]
     streaming.write_batch_partition(df, table_dir, batch_id)
     # an EMPTY batch commits a version bump with the id set unchanged:
     # the publish is still observable, the snapshot still consistent
     wrote = _batch_written(spark, table_dir, batch_id)
-    stats_entry = None
+    entries = {}  # this batch's per-batch manifest entries, by field
     if wrote:
-        aggs = [F.count("*").alias("_rc")]
-        for c in stats_cols or []:
-            aggs += [F.min(c).alias(f"mn_{c}"), F.max(c).alias(f"mx_{c}")]
-        row = df.agg(*aggs).collect()[0]
-        stats_entry = {
-            c: [_json_scalar(row[f"mn_{c}"]), _json_scalar(row[f"mx_{c}"])]
-            for c in (stats_cols or [])
-        }
-        # per-batch row count: the metadata-only COUNT(*) input
-        stats_entry["_rows"] = int(row["_rc"])
-        # per-batch on-disk bytes: the streaming source's
-        # maxBytesPerTrigger admission input — one O(|files|) metadata
-        # listing of the partition just written, never a data read
-        stats_entry["_bytes"] = _partition_bytes(spark, table_dir, batch_id)
-    last: ConcurrentCommitError | None = None
-    for _ in range(retries):
-        cur = read_manifest(spark, table_dir)
+        entries["stats"] = _batch_stats(spark, df, table_dir, batch_id, stats_cols)
+        if bloom_col is not None:
+            entries["blooms"] = write_batch_bloom(
+                spark, df, table_dir, batch_id, bloom_col
+            )
+
+    def change(cur: dict) -> dict:
+        nonlocal validated
         # re-validate when the table advanced past the version the
         # pre-write check saw — a concurrent schema-evolving commit in
         # the check->publish window must not slip past enforcement
         # (TOCTOU; the batch's data files are already on disk but stay
         # invisible until the manifest commit, so refusing here still
         # leaves the snapshot untouched)
-        if enforce_schema and cur["version"] != validated_version:
+        if enforce_schema and cur["version"] != validated:
             check_batch_schema(spark, table_dir, df, manifest=cur)
-            validated_version = cur["version"]
-        ids = set(cur["batch_ids"]) | ({batch_id} if wrote else set())
-        stats = dict(cur.get("stats", {}))
-        if stats_entry is not None:
-            stats[str(batch_id)] = stats_entry
-        prev = cur["version"] if cur["version"] >= 0 else None
-        try:
-            return commit_version(
-                spark,
-                table_dir,
-                sorted(ids),
-                cur.get("horizon"),
-                prev,
-                cur.get("delete_ids"),
-                stats,
-                cur.get("delete_cutoffs"),
-                cur.get("blooms"),
-            )
-        except ConcurrentCommitError as e:
-            last = e
-    raise last if last is not None else RuntimeError("retries must be >= 1")
+            validated = cur["version"]
+        if not wrote:
+            return {}
+        return {
+            "batch_ids": {*cur["batch_ids"], batch_id},
+            **{f: {**cur[f], str(batch_id): e} for f, e in entries.items()},
+        }
+
+    return _commit_on_latest(spark, table_dir, change)
 
 
 import re as _re
@@ -1269,7 +1242,6 @@ def commit_upsert(
     batch_id: int,
     delete_id: int,
     stats_cols: list[str] | None = None,
-    retries: int = 5,
 ) -> int:
     """MERGE / UPSERT as ONE atomic commit: write the updated rows as a
     new batch partition, write an equality-delete file for their keys,
@@ -1288,8 +1260,6 @@ def commit_upsert(
     commit; the matched rows are masked at read time and physically
     dropped at the next copy-on-write catch-up, vs rewriting every
     file that contains a matched key."""
-    from pyspark.sql import functions as F
-
     cur0 = read_manifest(spark, table_dir)
     cur_max = max(
         (manifest_log.effective_seq(b) for b in cur0["batch_ids"]), default=-1
@@ -1309,42 +1279,17 @@ def commit_upsert(
     updates.select(*key_cols).distinct().write.mode("overwrite").parquet(
         manifest_log.delete_path(table_dir, delete_id)
     )
-    stats_entry = None
-    if stats_cols:
-        aggs = []
-        for c in stats_cols:
-            aggs += [F.min(c).alias(f"mn_{c}"), F.max(c).alias(f"mx_{c}")]
-        row = updates.agg(*aggs).collect()[0]
-        stats_entry = {
-            c: [_json_scalar(row[f"mn_{c}"]), _json_scalar(row[f"mx_{c}"])]
-            for c in stats_cols
-        }
-    last: ConcurrentCommitError | None = None
-    for _ in range(retries):
-        cur = read_manifest(spark, table_dir)
-        ids = sorted(set(cur["batch_ids"]) | {batch_id})
-        dids = sorted(set(cur.get("delete_ids", [])) | {delete_id})
-        cutoffs = dict(cur.get("delete_cutoffs", {}))
-        cutoffs[str(delete_id)] = cur_max
-        stats = dict(cur.get("stats", {}))
-        if stats_entry is not None:
-            stats[str(batch_id)] = stats_entry
-        prev = cur["version"] if cur["version"] >= 0 else None
-        try:
-            return commit_version(
-                spark,
-                table_dir,
-                ids,
-                cur.get("horizon"),
-                prev,
-                dids,
-                stats,
-                cutoffs,
-                cur.get("blooms"),
-            )
-        except ConcurrentCommitError as e:
-            last = e
-    raise last if last is not None else RuntimeError("retries must be >= 1")
+    stats = _batch_stats(spark, updates, table_dir, batch_id, stats_cols)
+    return _commit_on_latest(
+        spark,
+        table_dir,
+        lambda cur: {
+            "batch_ids": {*cur["batch_ids"], batch_id},
+            "delete_ids": {*cur["delete_ids"], delete_id},
+            "delete_cutoffs": {**cur["delete_cutoffs"], str(delete_id): cur_max},
+            "stats": {**cur["stats"], str(batch_id): stats},
+        },
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1516,64 +1461,6 @@ def read_point_lookup(
     return rows.drop("_seq") if needs_seq else rows
 
 
-def write_and_commit_batch_with_bloom(
-    spark: SparkSession,
-    df: DataFrame,
-    table_dir: str,
-    batch_id: int,
-    bloom_col: str,
-    stats_cols: list[str] | None = None,
-    retries: int = 5,
-) -> int:
-    """write_and_commit_batch plus a bloom sidecar on `bloom_col`,
-    published in the same single manifest commit."""
-    from pyspark.sql import functions as F
-
-    from .. import streaming
-
-    streaming.write_batch_partition(df, table_dir, batch_id)
-    wrote = _batch_written(spark, table_dir, batch_id)
-    bloom_entry = None
-    stats_entry = None
-    if wrote:
-        bloom_entry = write_batch_bloom(spark, df, table_dir, batch_id, bloom_col)
-        if stats_cols:
-            aggs = []
-            for c in stats_cols:
-                aggs += [F.min(c).alias(f"mn_{c}"), F.max(c).alias(f"mx_{c}")]
-            row = df.agg(*aggs).collect()[0]
-            stats_entry = {
-                c: [_json_scalar(row[f"mn_{c}"]), _json_scalar(row[f"mx_{c}"])]
-                for c in stats_cols
-            }
-    last: ConcurrentCommitError | None = None
-    for _ in range(retries):
-        cur = read_manifest(spark, table_dir)
-        ids = set(cur["batch_ids"]) | ({batch_id} if wrote else set())
-        stats = dict(cur.get("stats", {}))
-        if stats_entry is not None:
-            stats[str(batch_id)] = stats_entry
-        blooms = dict(cur.get("blooms", {}))
-        if bloom_entry is not None:
-            blooms[str(batch_id)] = bloom_entry
-        prev = cur["version"] if cur["version"] >= 0 else None
-        try:
-            return commit_version(
-                spark,
-                table_dir,
-                sorted(ids),
-                cur.get("horizon"),
-                prev,
-                cur.get("delete_ids"),
-                stats,
-                cur.get("delete_cutoffs"),
-                blooms,
-            )
-        except ConcurrentCommitError as e:
-            last = e
-    raise last if last is not None else RuntimeError("retries must be >= 1")
-
-
 def snapshot_row_count(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> tuple[int | None, bool]:
@@ -1659,14 +1546,5 @@ def rollback(spark: SparkSession, table_dir: str, to_version: int) -> int:
     cur = read_manifest(spark, table_dir)
     if cur["version"] == to_version:
         return cur["version"]
-    return commit_version(
-        spark,
-        table_dir,
-        target["batch_ids"],
-        target.get("horizon"),
-        cur["version"],
-        target.get("delete_ids"),
-        target.get("stats"),
-        target.get("delete_cutoffs"),
-        target.get("blooms"),
-    )
+    # the target's content, planned against the current version
+    return commit_version(spark, table_dir, {**target, "version": cur["version"]})

@@ -116,9 +116,7 @@ def test_concurrent_commit_conflict(spark, tmp_path):
     cur = manifest.read_manifest(spark, table)
     # a committer that planned against version 2 while 3 already landed
     with pytest.raises(manifest.ConcurrentCommitError):
-        manifest.commit_version(
-            spark, table, cur["batch_ids"], None, expected_prev=2
-        )
+        manifest.commit_version(spark, table, {**cur, "version": 2})
 
 
 def test_vacuum_reclaims_unreferenced_and_orphans(spark, tmp_path):
@@ -427,11 +425,29 @@ def test_upsert_then_cdf_and_compaction(spark, tmp_path):
     assert snap.where(F.col("v") == -7.0).count() == 4
 
 
+def test_upsert_batch_keeps_metadata_count_exact_past_compaction(spark, tmp_path):
+    # an upsert batch records `_rows` like any other, so once a
+    # compaction spends the upsert's delete the metadata COUNT(*) is
+    # exact again while the upsert batch itself stays above the horizon
+    table = str(tmp_path / "tbl")
+    raw = _raw(spark)
+    for b in range(2):
+        manifest.write_and_commit_batch(
+            spark, raw.where(F.col("id") % 2 == b), table, b
+        )
+    updates = raw.where(F.col("id") % 10 == 0).withColumn("v", F.lit(-1.0))
+    manifest.commit_upsert(spark, table, updates, ["id"], 2, 0)
+    manifest.compact_rows_apply_deletes(spark, table, upto_batch=1)
+    want = manifest.read_snapshot_rows(spark, table).count()
+    assert want == 200
+    assert manifest.snapshot_row_count(spark, table) == (want, True)
+
+
 def test_bloom_point_lookup_plans_and_reads(spark, tmp_path):
     table = str(tmp_path / "tbl")
     raw = _raw(spark)
     for b in range(4):
-        manifest.write_and_commit_batch_with_bloom(
+        manifest.write_and_commit_batch(
             spark, raw.where(F.col("id") % 4 == b), table, b, bloom_col="id"
         )
     m = manifest.read_manifest(spark, table)
@@ -451,11 +467,27 @@ def test_bloom_point_lookup_plans_and_reads(spark, tmp_path):
     assert manifest.read_point_lookup(spark, table, "id", 42).count() == 0
 
 
+def test_bloom_batches_record_row_and_byte_stats(spark, tmp_path):
+    # a bloom-committed batch records the same stats as a plain one: the
+    # metadata COUNT(*) is exact on a table built only through the bloom
+    # path, and byte admission sees every batch's size
+    table = str(tmp_path / "tbl")
+    raw = _raw(spark)
+    for b in range(3):
+        manifest.write_and_commit_batch(
+            spark, raw.where(F.col("id") % 3 == b), table, b, bloom_col="id"
+        )
+    assert manifest.snapshot_row_count(spark, table) == (200, True)
+    stats = manifest.read_manifest(spark, table)["stats"]
+    assert sorted(stats) == ["0", "1", "2"]
+    assert all(e["_bytes"] > 0 for e in stats.values())
+
+
 def test_blooms_survive_other_commits_and_vacuum_cleans_sidecars(spark, tmp_path):
     table = str(tmp_path / "tbl")
     raw = _raw(spark)
     for b in range(3):
-        manifest.write_and_commit_batch_with_bloom(
+        manifest.write_and_commit_batch(
             spark, raw.where(F.col("id") % 3 == b), table, b, bloom_col="id"
         )
     # a plain delete commit must not drop the bloom entries
@@ -753,7 +785,8 @@ def test_custom_commit_backend_arbitrates(spark, tmp_path):
 
     rec = Recorder()
     v = manifest.commit_version(
-        spark, table, [0, 1], None, expected_prev=None, backend=rec
+        spark, table, {**manifest_log.EMPTY_MANIFEST, "batch_ids": [0, 1]},
+        backend=rec,
     )
     assert v == 0
     assert rec.calls[0][0] == manifest_log.version_path(table, 0)
@@ -765,7 +798,10 @@ def test_custom_commit_backend_arbitrates(spark, tmp_path):
 
     with pytest.raises(manifest.ConcurrentCommitError):
         manifest.commit_version(
-            spark, table, [0, 1, 2], None, expected_prev=0, backend=AlwaysLoses()
+            spark,
+            table,
+            {**manifest_log.EMPTY_MANIFEST, "version": 0, "batch_ids": [0, 1, 2]},
+            backend=AlwaysLoses(),
         )
     # the losing publish left no trace: latest is still v0
     assert manifest.latest_version(spark, table) == 0
@@ -1084,46 +1120,50 @@ def test_manifest_stream_planning_model(spark, tmp_path):
 
 
 def test_manifest_stream_source_max_bytes_per_trigger(spark, tmp_path):
-    # byte-based admission control: write_and_commit_batch records
-    # `_bytes` per batch in the manifest stats; with the cap set below
-    # one batch's size, the post-initial catch-up drains one version
-    # per trigger (>=1 version always admitted), with no loss and no
-    # duplication — the maxBytesPerTrigger analog of the version cap
+    # byte-based admission control: every batch commit records `_bytes`
+    # per batch in the manifest stats (plain and bloom-committed
+    # alike); with the cap set below one batch's size, the post-initial
+    # catch-up drains one version per trigger (>=1 version always
+    # admitted), with no loss and no duplication — the
+    # maxBytesPerTrigger analog of the version cap
     from bigdata_googleplaystore_spark.sources import manifest_stream
 
     manifest_stream.register(spark)
-    table = str(tmp_path / "tbl")
     raw = _raw(spark)
-    manifest.write_and_commit_batch(
-        spark, raw.where(F.col("id") < 50), table, 0
-    )
-    m = manifest.read_manifest(spark, table)
-    assert m["stats"]["0"]["_bytes"] > 0  # recorded at commit
-    q = (
-        spark.readStream.format("manifest_stream")
-        .schema("id long, k string, v double")
-        .option("path", table)
-        .option("maxBytesPerTrigger", 1)  # < any real batch
-        .load()
-        .writeStream.format("parquet")
-        .option("path", str(tmp_path / "sink"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    for b in range(1, 4):
+    for bloom_col in (None, "id"):
+        root = tmp_path / f"bloom_{bloom_col}"
+        table = str(root / "tbl")
         manifest.write_and_commit_batch(
-            spark,
-            raw.where((F.col("id") >= 50 * b) & (F.col("id") < 50 * (b + 1))),
-            table,
-            b,
+            spark, raw.where(F.col("id") < 50), table, 0, bloom_col=bloom_col
         )
-    q.processAllAvailable()
-    q.stop()
-    got = spark.read.parquet(str(tmp_path / "sink"))
-    assert sorted(r["id"] for r in got.collect()) == list(range(200))
-    nonempty = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    assert len(nonempty) >= 4  # 1 initial + 3 byte-capped catch-ups
+        m = manifest.read_manifest(spark, table)
+        assert m["stats"]["0"]["_bytes"] > 0  # recorded at commit
+        q = (
+            spark.readStream.format("manifest_stream")
+            .schema("id long, k string, v double")
+            .option("path", table)
+            .option("maxBytesPerTrigger", 1)  # < any real batch
+            .load()
+            .writeStream.format("parquet")
+            .option("path", str(root / "sink"))
+            .option("checkpointLocation", str(root / "ckpt"))
+            .start()
+        )
+        q.processAllAvailable()
+        for b in range(1, 4):
+            manifest.write_and_commit_batch(
+                spark,
+                raw.where((F.col("id") >= 50 * b) & (F.col("id") < 50 * (b + 1))),
+                table,
+                b,
+                bloom_col=bloom_col,
+            )
+        q.processAllAvailable()
+        q.stop()
+        got = spark.read.parquet(str(root / "sink"))
+        assert sorted(r["id"] for r in got.collect()) == list(range(200))
+        nonempty = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        assert len(nonempty) >= 4  # 1 initial + 3 byte-capped catch-ups
 
 
 def test_manifest_stream_source_reads_pre_evolution_batches(spark, tmp_path):
@@ -1213,7 +1253,9 @@ def test_conditional_put_arbitrates_injected_contention(spark, tmp_path):
                 store.interpose = None
                 try:
                     manifest.commit_version(
-                        spark, table, [0, 7], None, expected_prev=0,
+                        spark, table,
+                        {**manifest_log.EMPTY_MANIFEST, "version": 0,
+                         "batch_ids": [0, 7]},
                         backend=rival_backend,
                     )
                 finally:
@@ -1241,11 +1283,17 @@ def test_conditional_put_adopts_preexisting_objects(spark, tmp_path):
     backend = manifest.ConditionalPutCommitBackend(store)
     with pytest.raises(manifest.ConcurrentCommitError, match="412"):
         manifest.commit_version(
-            spark, table, [0], None, expected_prev=0, backend=backend
+            spark,
+            table,
+            {**manifest_log.EMPTY_MANIFEST, "version": 0, "batch_ids": [0]},
+            backend=backend,
         )
     # and the natural next version still commits fine
     v = manifest.commit_version(
-        spark, table, [0, 1], None, expected_prev=1, backend=backend
+        spark,
+        table,
+        {**manifest_log.EMPTY_MANIFEST, "version": 1, "batch_ids": [0, 1]},
+        backend=backend,
     )
     assert v == 2
     assert manifest.read_manifest(spark, table)["batch_ids"] == [0, 1]
