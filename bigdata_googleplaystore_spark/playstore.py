@@ -16,8 +16,10 @@ Bug-for-bug behaviors deliberately preserved (SURVEY.md §7.0):
   scope, overriding the "Default null" spec comment at C:125.
 - Part 3's `K`-size branch (C:145) is dead on the real dataset (sizes use
   lowercase `k`), and is kept verbatim.
-- `dropDuplicates("App")` after `groupBy("App")` (C:166) is a no-op and
-  is kept for surface parity.
+
+Dropped as a no-op: the reference's `dropDuplicates("App")` after
+`groupBy("App")` (C:166) changes no rows, but Spark plans it as a Sort and
+two SortAggregates of `first()` over every app, so Part 3 omits it.
 
 Golden oracles: the reference's committed outputs under
 /root/reference/src/main/resources/ (best_apps.csv,
@@ -212,7 +214,8 @@ def group_by_app_and_standardize(play_store: DataFrame) -> DataFrame:
             F.max("Current Ver").alias("Current_Version"),
             F.max("Android Ver").alias("Minimum_Android_Version"),
         )
-        .dropDuplicates(["App"])  # no-op after groupBy("App"); parity (C:166)
+        # the reference's dropDuplicates("App") here (C:166) is omitted:
+        # groupBy("App") already leaves one row per App
         .select(
             "App",
             "Categories",
@@ -242,10 +245,11 @@ def clean_google_play_store_data(
     """Left-join Part 3 with Part 1 on App (dropping the right-side key by
     Column reference, C:185), sink as gzip parquet, read back. Catalyst
     broadcasts the small build side here; at scale AQE picks SMJ —
-    no engine work either way (SURVEY.md §2.5 J1)."""
+    no engine work either way (SURVEY.md §2.5 J1). The read-back takes
+    the written frame's schema, so it runs no footer-inference job."""
     joined = df_3.join(df_1, df_1["App"] == df_3["App"], "left").drop(df_1["App"])
     joined.write.option("compression", "gzip").mode("overwrite").parquet(out_dir)
-    return spark.read.parquet(out_dir)
+    return spark.read.schema(joined.schema).parquet(out_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -271,8 +275,8 @@ def metrics_by_genre(df_4: DataFrame) -> DataFrame:
 def get_google_play_store_metrics_by_genre(
     spark: SparkSession, df_4: DataFrame, out_dir: str
 ) -> DataFrame:
-    """Part 5 sink + read-back: gzip parquet (C:219-229)."""
-    metrics_by_genre(df_4).write.option("compression", "gzip").mode(
-        "overwrite"
-    ).parquet(out_dir)
-    return spark.read.parquet(out_dir)
+    """Part 5 sink + read-back: gzip parquet (C:219-229), read back with
+    the written frame's schema (no footer-inference job)."""
+    metrics = metrics_by_genre(df_4)
+    metrics.write.option("compression", "gzip").mode("overwrite").parquet(out_dir)
+    return spark.read.schema(metrics.schema).parquet(out_dir)

@@ -187,7 +187,7 @@ def write_parquet(
     df: DataFrame,
     path: str,
     *,
-    compression: str = "snappy",
+    compression: str | None = None,
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
     bucket_by: tuple[int, list[str]] | None = None,
@@ -195,12 +195,17 @@ def write_parquet(
 ) -> None:
     """Parquet sink (S5; reference writes gzip, challenge.scala:186-190).
 
+    ``compression=None`` writes with the session codec
+    (`spark.sql.parquet.compression.codec`, zstd under get_spark).
+
     At scale, prefer ``partition_by`` on low-cardinality pruning columns
     (date, region) and ``bucket_by`` on high-cardinality join keys so
     downstream equi-joins and group-bys on those keys skip the shuffle
     (bucketed writes require a table name -- saveAsTable).
     """
-    writer = df.write.option("compression", compression).mode(mode)
+    writer = df.write.mode(mode)
+    if compression is not None:
+        writer = writer.option("compression", compression)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     if bucket_by:

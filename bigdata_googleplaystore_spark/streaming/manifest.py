@@ -67,7 +67,7 @@ from __future__ import annotations
 import contextlib
 import json
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from ..sources import manifest_log
 from ..sources.storage import HadoopBackend
@@ -709,7 +709,7 @@ def read_snapshot_rows(
     advance only by manifest commits.
 
     `merge_schema=True` unions the batch schemas (parquet footer
-    union / by-name union on the sequence path) so ADDITIVE columns
+    union) so ADDITIVE columns
     that arrived in later batches surface everywhere, older rows
     reading typed nulls — without it the scan takes one footer's
     schema and a later batch's new column could silently vanish.
@@ -772,22 +772,24 @@ def _rows_with_seq(
     ids: list[int],
     merge_schema: bool = False,
 ) -> DataFrame:
-    """Union the batch partitions with a `_seq` provenance column — the
-    per-row ingestion order sequence-aware deletes join against. With
-    `merge_schema`, the by-name union fills columns missing from older
-    batches with typed nulls (additive schema evolution)."""
+    """The batch partitions in ONE scan with a `_seq` provenance column —
+    the per-row ingestion order sequence-aware deletes join against.
+    With `basePath` the scan discovers each row's `_batch_id` partition
+    value, which maps to `_seq` by manifest_log.effective_seq (an id
+    >= 0 is its own sequence, a compacted base's -(h+1) stands for h).
+    With `merge_schema`, the footer union fills columns missing from
+    older batches with typed nulls (additive schema evolution)."""
     from pyspark.sql import functions as F
 
-    parts = [
-        spark.read.parquet(manifest_log.batch_path(table_dir, b)).withColumn(
-            "_seq", F.lit(manifest_log.effective_seq(b))
-        )
-        for b in ids
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=merge_schema)
-    return out
+    reader = spark.read.option("basePath", table_dir)
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    b = F.col("_batch_id")
+    return (
+        reader.parquet(*_batch_paths(table_dir, ids))
+        .withColumn("_seq", F.when(b >= 0, b).otherwise(-b - 1))
+        .drop("_batch_id")
+    )
 
 
 def _apply_delete_groups(
@@ -854,6 +856,7 @@ def compact_rows_apply_deletes(
         ).drop("_seq")
     else:
         rows = spark.read.parquet(*_batch_paths(table_dir, subsumed))
+    rows, obs = _observe_stats(rows)
     streaming.write_compacted_base(spark, rows, table_dir, base_id)
     # the base inherits the MERGED zone-map bounds of what it replaced
     # (deletes only shrink the true range — wider bounds stay CORRECT
@@ -871,14 +874,7 @@ def compact_rows_apply_deletes(
     # so summing subsumed counts would overcount) — keeps the
     # metadata-only COUNT(*) path exact through compaction; same for
     # the on-disk bytes the stream sources' byte admission reads
-    base_stats.update(
-        _batch_stats(
-            spark,
-            spark.read.parquet(manifest_log.batch_path(table_dir, base_id)),
-            table_dir,
-            base_id,
-        )
-    )
+    base_stats.update(_batch_stats(spark, obs, table_dir, base_id))
     # a delete whose cutoff the new horizon covers is SPENT: every row it
     # could ever mask (seq <= cutoff <= upto_batch) was just rewritten out
     # of the base, and the kept batches all sit above it. Dropping it from
@@ -1099,30 +1095,38 @@ def _partition_bytes(spark: SparkSession, table_dir: str, batch_id: int) -> int:
     )
 
 
-def _batch_stats(
-    spark: SparkSession,
-    df: DataFrame,
-    table_dir: str,
-    batch_id: int,
-    stats_cols: list[str] | None = None,
-) -> dict:
-    """The manifest stats of a batch just written at `batch_id`:
-    `_rows` (the metadata-only COUNT(*) input, snapshot_row_count),
-    `_bytes` (on-disk size, the stream sources' maxBytesPerTrigger
-    input) and the zone map [min, max] of each `stats_cols` column
-    (read_snapshot_rows' skipping input). One map-side-combinable
-    aggregate pass over `df` plus one metadata listing of the partition
-    — never a re-read of the written data."""
+def _observe_stats(
+    df: DataFrame, stats_cols: list[str] | None = None
+) -> tuple[DataFrame, Observation]:
+    """Attach a batch's stats aggregates to `df`: the returned frame's
+    first action (the batch write) computes `_rows` and the zone-map
+    min/max of each `stats_cols` column as it writes, so the stats cost
+    no second pass over the batch's input. Read them with _batch_stats
+    after that action."""
     from pyspark.sql import functions as F
 
-    cols = stats_cols or []
     aggs = [F.count("*").alias("_rows")]
-    for c in cols:
+    for c in stats_cols or []:
         aggs += [F.min(c).alias(f"mn_{c}"), F.max(c).alias(f"mx_{c}")]
-    row = df.agg(*aggs).collect()[0]
+    obs = Observation()
+    return df.observe(obs, *aggs), obs
+
+
+def _batch_stats(
+    spark: SparkSession, obs: Observation, table_dir: str, batch_id: int
+) -> dict:
+    """The manifest stats of a batch just written at `batch_id` from a
+    frame _observe_stats observed: `_rows` (the metadata-only COUNT(*)
+    input, snapshot_row_count), `_bytes` (on-disk size, the stream
+    sources' maxBytesPerTrigger input) and the zone map [min, max] of
+    each `stats_cols` column (read_snapshot_rows' skipping input). The
+    aggregates come from the write itself, the bytes from one metadata
+    listing of the partition — never a re-read of the written data."""
+    row = obs.get
     stats = {
-        c: [_json_scalar(row[f"mn_{c}"]), _json_scalar(row[f"mx_{c}"])]
-        for c in cols
+        k[3:]: [_json_scalar(v), _json_scalar(row["mx_" + k[3:]])]
+        for k, v in row.items()
+        if k.startswith("mn_")
     }
     stats["_rows"] = int(row["_rows"])
     stats["_bytes"] = _partition_bytes(spark, table_dir, batch_id)
@@ -1156,13 +1160,14 @@ def write_and_commit_batch(
         cur0 = read_manifest(spark, table_dir)
         check_batch_schema(spark, table_dir, df, manifest=cur0)
         validated = cur0["version"]
-    streaming.write_batch_partition(df, table_dir, batch_id)
+    observed, obs = _observe_stats(df, stats_cols)
+    streaming.write_batch_partition(observed, table_dir, batch_id)
     # an EMPTY batch commits a version bump with the id set unchanged:
     # the publish is still observable, the snapshot still consistent
     wrote = _batch_written(spark, table_dir, batch_id)
     entries = {}  # this batch's per-batch manifest entries, by field
     if wrote:
-        entries["stats"] = _batch_stats(spark, df, table_dir, batch_id, stats_cols)
+        entries["stats"] = _batch_stats(spark, obs, table_dir, batch_id)
         if bloom_col is not None:
             entries["blooms"] = write_batch_bloom(
                 spark, df, table_dir, batch_id, bloom_col
@@ -1272,14 +1277,15 @@ def commit_upsert(
         )
     from .. import streaming
 
-    streaming.write_batch_partition(updates, table_dir, batch_id)
+    observed, obs = _observe_stats(updates, stats_cols)
+    streaming.write_batch_partition(observed, table_dir, batch_id)
     if not _batch_written(spark, table_dir, batch_id):
         # empty MERGE: nothing matched, nothing to publish
         return cur0["version"]
     updates.select(*key_cols).distinct().write.mode("overwrite").parquet(
         manifest_log.delete_path(table_dir, delete_id)
     )
-    stats = _batch_stats(spark, updates, table_dir, batch_id, stats_cols)
+    stats = _batch_stats(spark, obs, table_dir, batch_id)
     return _commit_on_latest(
         spark,
         table_dir,
