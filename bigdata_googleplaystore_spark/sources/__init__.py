@@ -187,7 +187,6 @@ def write_parquet(
     df: DataFrame,
     path: str,
     *,
-    compression: str | None = None,
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
     bucket_by: tuple[int, list[str]] | None = None,
@@ -195,8 +194,8 @@ def write_parquet(
 ) -> None:
     """Parquet sink (S5; reference writes gzip, challenge.scala:186-190).
 
-    ``compression=None`` writes with the session codec
-    (`spark.sql.parquet.compression.codec`, zstd under get_spark).
+    Writes with the session codec (`spark.sql.parquet.compression.codec`,
+    zstd under get_spark).
 
     At scale, prefer ``partition_by`` on low-cardinality pruning columns
     (date, region) and ``bucket_by`` on high-cardinality join keys so
@@ -204,8 +203,6 @@ def write_parquet(
     (bucketed writes require a table name -- saveAsTable).
     """
     writer = df.write.mode(mode)
-    if compression is not None:
-        writer = writer.option("compression", compression)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     if bucket_by:

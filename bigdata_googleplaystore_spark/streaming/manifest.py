@@ -775,19 +775,21 @@ def _rows_with_seq(
     """The batch partitions in ONE scan with a `_seq` provenance column —
     the per-row ingestion order sequence-aware deletes join against.
     With `basePath` the scan discovers each row's `_batch_id` partition
-    value, which maps to `_seq` by manifest_log.effective_seq (an id
-    >= 0 is its own sequence, a compacted base's -(h+1) stands for h).
-    With `merge_schema`, the footer union fills columns missing from
-    older batches with typed nulls (additive schema evolution)."""
+    value, which maps to `_seq` through manifest_log.effective_seq
+    evaluated over `ids`. With `merge_schema`, the footer union fills
+    columns missing from older batches with typed nulls (additive
+    schema evolution); without it the scan takes one footer's schema."""
     from pyspark.sql import functions as F
 
     reader = spark.read.option("basePath", table_dir)
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
-    b = F.col("_batch_id")
+    seq_of = F.create_map(
+        *[F.lit(x) for b in ids for x in (b, manifest_log.effective_seq(b))]
+    )
     return (
         reader.parquet(*_batch_paths(table_dir, ids))
-        .withColumn("_seq", F.when(b >= 0, b).otherwise(-b - 1))
+        .withColumn("_seq", F.element_at(seq_of, F.col("_batch_id")))
         .drop("_batch_id")
     )
 
@@ -843,6 +845,9 @@ def compact_rows_apply_deletes(
         return cur["version"]
     base_id = manifest_log.compact_base_id(upto_batch)
     dids = cur["delete_ids"]
+    # the base is rewritten from the MERGED schema of the batches it
+    # replaces: one footer's schema would drop, for good, a column an
+    # additively evolved batch brought in
     if dids:
         # sequence-aware: a delete masks only rows of batches at or
         # below its cutoff, so the base's surviving rows are exactly
@@ -851,11 +856,13 @@ def compact_rows_apply_deletes(
             spark,
             table_dir,
             cur,
-            _rows_with_seq(spark, table_dir, subsumed),
+            _rows_with_seq(spark, table_dir, subsumed, merge_schema=True),
             seq_col="_seq",
         ).drop("_seq")
     else:
-        rows = spark.read.parquet(*_batch_paths(table_dir, subsumed))
+        rows = spark.read.option("mergeSchema", "true").parquet(
+            *_batch_paths(table_dir, subsumed)
+        )
     rows, obs = _observe_stats(rows)
     streaming.write_compacted_base(spark, rows, table_dir, base_id)
     # the base inherits the MERGED zone-map bounds of what it replaced
@@ -926,7 +933,11 @@ def snapshot_diff(
     broadcast-side. Neither side ever diffs two full snapshots row by
     row — the manifest IS the change log, which is why a lakehouse CDF
     is cheap while diffing two plain parquet snapshots at 100 TB is a
-    petabyte join."""
+    petabyte join.
+
+    Both sides read the merged batch schema (one footer read per
+    scanned batch), so a column added by additive evolution appears in
+    the feed, as a typed null on rows written before it existed."""
     from pyspark.sql import functions as F
 
     if from_version > to_version:
@@ -957,7 +968,7 @@ def snapshot_diff(
             spark,
             table_dir,
             m_to,
-            _rows_with_seq(spark, table_dir, new_batches),
+            _rows_with_seq(spark, table_dir, new_batches, merge_schema=True),
             seq_col="_seq",
         ).drop("_seq")
         parts.append(inserted.withColumn("_change_type", F.lit("insert")))
@@ -966,7 +977,9 @@ def snapshot_diff(
             spark,
             table_dir,
             m_from,
-            _rows_with_seq(spark, table_dir, m_from["batch_ids"]),
+            _rows_with_seq(
+                spark, table_dir, m_from["batch_ids"], merge_schema=True
+            ),
             seq_col="_seq",
         )
         groups = manifest_log.delete_groups(
@@ -998,11 +1011,13 @@ def snapshot_diff(
             .withColumn("_change_type", F.lit("delete"))
         )
     if not parts:
-        base = read_snapshot_rows(spark, table_dir, to_version).limit(0)
+        base = read_snapshot_rows(
+            spark, table_dir, to_version, merge_schema=True
+        ).limit(0)
         return base.withColumn("_change_type", F.lit(""))
     out = parts[0]
     for p in parts[1:]:
-        out = out.unionByName(p)
+        out = out.unionByName(p, allowMissingColumns=True)
     return out
 
 

@@ -573,6 +573,65 @@ def test_schema_evolution_merge_and_deletes_compose(spark, tmp_path):
     assert after.where(F.col("tag") == "new").count() == 50
 
 
+@pytest.mark.parametrize("upsert", [False, True])
+def test_row_compaction_keeps_additively_evolved_columns(
+    spark, tmp_path, upsert
+):
+    # the compacted base is written from the merged schema of the
+    # batches it replaces, on the plain path and on the delete-applying
+    # path alike: an added column's values survive the rewrite
+    table = str(tmp_path / "tbl")
+    raw = _raw(spark)
+    streaming.write_batch_partition(raw.where(F.col("id") < 100), table, 0)
+    manifest.commit_batch(spark, table, 0)
+    evolved = raw.where(F.col("id") >= 100).withColumn("tag", F.lit("new"))
+    streaming.write_batch_partition(evolved, table, 1)
+    manifest.commit_batch(spark, table, 1)
+    upto = 1
+    if upsert:
+        updates = raw.where(F.col("id") % 50 == 0).withColumn(
+            "tag", F.lit("upd")
+        )
+        manifest.commit_upsert(spark, table, updates, ["id"], 2, 0)
+        upto = 2
+    before = manifest.read_snapshot_rows(spark, table, merge_schema=True)
+    want = sorted((r["id"], r["tag"]) for r in before.collect())
+    manifest.compact_rows_apply_deletes(spark, table, upto_batch=upto)
+    assert manifest.read_manifest(spark, table)["batch_ids"] == [-(upto + 1)]
+    after = manifest.read_snapshot_rows(spark, table, merge_schema=True)
+    assert sorted((r["id"], r["tag"]) for r in after.collect()) == want
+    assert len(want) == 200
+    assert sum(t == "new" for _, t in want) == (98 if upsert else 100)
+
+
+def test_snapshot_diff_carries_additively_evolved_columns(spark, tmp_path):
+    # both sides of the feed read the merged batch schema: rows deleted
+    # from an evolved batch keep its added column, and rows from the
+    # batch before it read it as a typed null
+    table = str(tmp_path / "tbl")
+    raw = _raw(spark)
+    streaming.write_batch_partition(raw.where(F.col("id") < 100), table, 0)
+    manifest.commit_batch(spark, table, 0)
+    evolved = raw.where(F.col("id") >= 100).withColumn("tag", F.lit("new"))
+    streaming.write_batch_partition(evolved, table, 1)
+    manifest.commit_batch(spark, table, 1)
+    v_from = manifest.latest_version(spark, table)
+    manifest.commit_deletes(
+        spark, table, raw.where(F.col("id") % 50 == 0).select("id"), 0
+    )
+    feed = manifest.snapshot_diff(
+        spark, table, v_from, manifest.latest_version(spark, table)
+    )
+    assert "tag" in feed.columns
+    got = sorted((r["id"], r["tag"], r["_change_type"]) for r in feed.collect())
+    assert got == [
+        (0, None, "delete"),
+        (50, None, "delete"),
+        (100, "new", "delete"),
+        (150, "new", "delete"),
+    ]
+
+
 def test_vacuum_refuses_zero_retention(spark, tmp_path):
     table = str(tmp_path / "tbl")
     _write_committed_batches(spark, table)
