@@ -6578,13 +6578,13 @@ def stream_incremental_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches (maxFilesPerTrigger=1 over a 4-file source, so the
     per-batch protocol genuinely crosses ≥4 batches), each batch writes
     its MERGEABLE partial aggregate into its own `_batch_id` partition
-    via foreachBatch with dynamic partition overwrite
-    (streaming.run_stream_incremental_agg — idempotent exactly-once
-    without transactions), and the read path folds all partials
-    (read_incremental_state). The folded view must hash-match the
-    oracle's direct batch aggregate over the raw table: a dropped or
-    double-applied batch partition, or a partial/merge algebra bug,
-    changes n_rows/total and fails.
+    via foreachBatch with dynamic partition overwrite and commits it to
+    the state table's manifest (streaming.run_stream_incremental_agg —
+    idempotent write + atomic publish), and the read path folds the
+    committed partials (read_incremental_state). The folded view must
+    hash-match the oracle's direct batch aggregate over the raw table: a
+    dropped or double-applied batch partition, or a partial/merge
+    algebra bug, changes n_rows/total and fails.
 
     Exactness across the batch boundary is engineered: the value column
     is staged as DECIMAL(12,2) BEFORE the per-batch partial sum, so the
@@ -6643,40 +6643,38 @@ def mv_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TIME-TRAVEL over the incremental materialized view: four ingest
     batches (event_id % 4 — SQL-derivable batch membership, the daily-
     partition-lands shape) each write their mergeable partial into
-    their own immutable `_batch_id` partition (the same per-batch
-    protocol the streaming MV gates exercise), then the gate reads the
-    view AS OF VERSION 1 — folding only batches 0–1 via
-    streaming.read_incremental_state_asof — AFTER all four batches have
-    landed. The result must hash-match the oracle's direct aggregate
-    over only the first two batches' rows: a reader that ignores the
-    version pin folds batches 2–3 and inflates every n_rows/total; a
-    writer that let a later batch clobber an earlier partition breaks
-    min/max. This is dataset REPRODUCIBILITY recovered from plain
-    partitioned parquet — pin a training run to version v and the
-    exact view it trained on stays reconstructible forever, no
-    transactional table format required.
+    their own immutable `_batch_id` partition and commit it, so
+    manifest versions 0–3 are batches 0–3 (the same protocol the
+    streaming MV gates exercise). The gate then reads the view AS OF
+    VERSION 1 — folding only batches 0–1 via
+    streaming.read_incremental_state(version=1) — AFTER all four
+    batches have landed. The result must hash-match the oracle's direct
+    aggregate over only the first two batches' rows: a reader that
+    ignores the version pin folds batches 2–3 and inflates every
+    n_rows/total; a writer that let a later batch clobber an earlier
+    partition breaks min/max: dataset REPRODUCIBILITY until vacuum
+    retires the version.
 
     Exactness across the version boundary: the value column is staged
     DECIMAL(12,2) before the per-batch partial sum (split-invariant
-    fold, same as stream_incremental_agg_view). Scale posture:
-    _batch_id is a partition column, so the as-of predicate PRUNES
-    newer partitions at the scan (plan-asserted in
-    tests/test_plans.py) — a version read costs O(partials up to v),
-    never O(all history), and each backfill batch shuffles only its
-    own |keys| partial rows."""
+    fold, same as stream_incremental_agg_view). Scale posture: the
+    version read plans its scan from the manifest, so it touches only
+    that version's partitions (asserted in tests/test_plans.py) — a
+    version read costs O(partials up to v), never O(all history), and
+    each backfill batch shuffles only its own |keys| partial rows."""
     import shutil
 
     from .. import streaming
     from ..operators import incremental
+    from ..streaming import manifest
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", dec2(F.col("value")).alias("v")
     )
     state = scratch_dir("ttravel_state", sf_dir)
     shutil.rmtree(state, ignore_errors=True)
-    # Backfill: each batch commits its own immutable partition through
-    # the SAME writer the streaming MVs use (streaming.
-    # write_batch_partition — one protocol definition, no drift).
+    # Backfill: each batch lands its own immutable partition through
+    # the SAME writer and commit the streaming MVs use.
     for bid in range(4):
         streaming.write_batch_partition(
             incremental.partial_agg(
@@ -6687,7 +6685,8 @@ def mv_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             state,
             bid,
         )
-    view = streaming.read_incremental_state_asof(spark, state, as_of_batch=1)
+        manifest.commit_batch(spark, state, bid)
+    view = streaming.read_incremental_state(spark, state, version=1)
     return view.select(
         "event_type",
         "n_rows",
@@ -6717,16 +6716,17 @@ def stream_cdc_signed_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream in single-file micro-batches (maxFilesPerTrigger=1 over a
     4-file source) through streaming.run_stream_signed_agg — each
     batch writes its SIGNED partial into an idempotent `_batch_id`
-    partition, and the read path folds them (read_signed_state). The
-    folded view must hash-match the oracle's direct aggregate over
-    the NET rows (deletes applied; null-user events never retracted).
-    The repartition(4) shuffles inserts and their cancelling deletes
-    into ARBITRARY different micro-batches, so the gate pins exactly
-    what makes signed streaming state correct: the fold is
-    split-invariant (a -1 landing two batches after its +1 nets out
-    in the merge, not in the batch), values are DECIMAL-staged so
-    partial sums are exact under any batch boundary, and a dropped or
-    double-applied batch partition changes n_rows/total and fails.
+    partition and commits it, and the read path folds the committed
+    partials (read_signed_state). The folded view must hash-match the
+    oracle's direct aggregate over the NET rows (deletes applied;
+    null-user events never retracted). The repartition(4) shuffles
+    inserts and their cancelling deletes into ARBITRARY different
+    micro-batches, so the gate pins exactly what makes signed streaming
+    state correct: the fold is split-invariant (a -1 landing two batches
+    after its +1 nets out in the merge, not in the batch), values are
+    DECIMAL-staged so partial sums are exact under any batch boundary,
+    and a dropped or double-applied batch partition changes n_rows/total
+    and fails.
 
     At 100 TB this is the streaming face of the delta-rule IVM family
     (incremental_join_view_retractions gates the batch face): CDC
@@ -6793,13 +6793,14 @@ def stream_cdc_minmax_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     triggers over a repartition(4) source, so inserts and their
     cancelling deletes land in ARBITRARY different batches) writes its
     per-(type, value) net counts into an idempotent `_batch_id`
-    partition, and read_multiset_minmax folds them. The maintained
-    min/max/count must hash-match the oracle's recompute over the net
-    rows: serving a stale pre-delete maximum (the scalar-state bug the
-    multiset tier exists to fix), losing a batch partition, or folding
-    a delete as an insert all diverge. Split-invariance is the load-
-    bearing property — a -1 arriving batches after its +1 nets out in
-    the read-side merge, not inside any single batch.
+    partition and commits it, and read_multiset_state folds the
+    committed partials. The maintained min/max/count must hash-match the
+    oracle's recompute over the net rows: serving a stale pre-delete
+    maximum (the scalar-state bug the multiset tier exists to fix),
+    losing a batch partition, or folding a delete as an insert all
+    diverge. Split-invariance is the load- bearing property — a -1
+    arriving batches after its +1 nets out in the read-side merge, not
+    inside any single batch.
 
     One state, two read faces checked here: the SAME folded multiset
     (streaming.read_multiset_state, one stream run, one state table)
@@ -6874,24 +6875,23 @@ def stream_cdc_minmax_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mv_state_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """State-table compaction closing the incremental-MV lifecycle
     (write → read → time-travel → COMPACT): four backfill batches
-    (orders split by o_orderkey % 4) land as per-batch partial-state
-    partitions via the shared write_batch_partition protocol, then
-    streaming.compact_state_partials merges partitions 0..2 into one
-    base stored at the RESERVED id `_batch_id=-3`
-    (streaming.compact_base_id(2) — negative, outside the id space
-    micro-batches write, so a post-compaction batch replay can never
-    overwrite the merged history) and deletes the three subsumed
-    directories through the Hadoop FileSystem API. The read path is
-    UNCHANGED — read_incremental_state folds (base ⊕ batch 3) by the
-    same associative merge — and must still hash-match the oracle's
-    direct aggregate over all of orders; the `partitions_pruned` flag
-    additionally pins the physical outcome (exactly 3 partitions
-    subsumed and removed, exactly {-3, 3} remaining on disk, listed
-    via the SAME streaming.list_batch_partitions helper the operator
-    uses), so a compaction that silently dropped or double-counted a
-    batch fails twice over. The documented trade — as-of reads below
-    the compaction horizon floor to the horizon version
-    (mv_time_travel_read gates the pre-compaction capability) — is the
+    (orders split by o_orderkey % 4) land as committed per-batch
+    partial-state partitions, then manifest.compact_snapshot merges
+    partitions 0..2 into one base stored at the RESERVED id
+    `_batch_id=-3` (streaming.compact_base_id(2) — negative, outside
+    the id space micro-batches write, so a post-compaction batch replay
+    can never overwrite the merged history) and swaps it in with one
+    manifest commit; vacuum(keep_versions=1) then deletes the three
+    subsumed directories. The read path is UNCHANGED —
+    read_incremental_state folds (base ⊕ batch 3) by the same
+    associative merge — and must still hash-match the oracle's direct
+    aggregate over all of orders; the `partitions_pruned` flag
+    additionally pins the physical outcome (exactly 3 directories
+    removed by vacuum, exactly {-3, 3} remaining on disk), so a
+    compaction that silently dropped or double-counted a batch fails
+    twice over. The trade: versions before the compaction are readable
+    until vacuum retires them, and a read of a retired version raises
+    (mv_time_travel_read gates the pre-compaction capability) — the
     same retention boundary a transactional format's VACUUM draws.
 
     At 100 TB: a per-micro-batch state table accumulates files without
@@ -6902,6 +6902,7 @@ def mv_state_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .. import streaming
     from ..operators import incremental
+    from ..streaming import manifest
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
@@ -6913,7 +6914,9 @@ def mv_state_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming.write_batch_partition(
             incremental.partial_agg(batch, ["o_orderpriority"], "v"), state, b
         )
-    removed = streaming.compact_state_partials(spark, state, upto_batch=2)
+        manifest.commit_batch(spark, state, b)
+    manifest.compact_snapshot(spark, state, upto_batch=2)
+    removed, _ = manifest.vacuum(spark, state, keep_versions=1)
     remaining = streaming.list_batch_partitions(spark, state)
     ok = removed == 3 and remaining == [streaming.compact_base_id(2), 3]
 
@@ -7747,14 +7750,12 @@ def hourly_seasonal_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("incremental", "compaction", "manifest", "scale"),
 )
 def mv_manifest_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MANIFEST-COMMITTED snapshots (streaming/manifest.py) — the
-    transactional upgrade over directory-listing state tables, same
+    """MANIFEST-COMMITTED snapshots (streaming/manifest.py), the same
     public design as Delta's _delta_log / Iceberg's metadata tree:
     readers plan their file set from an immutable manifest JSON and the
     snapshot advances by one atomic rename, so compaction has NO
-    double-count window (vs compact_state_partials' write-before-delete
-    ordering, whose crash window double-counts detectably) and a torn
-    writer's partition is invisible until committed.
+    double-count window and a torn writer's partition is invisible
+    until committed.
 
     The gate runs the full lifecycle on orders partials: four committed
     backfill batches (manifest v0..v3); a TORN WRITER plants a complete
@@ -7798,7 +7799,7 @@ def mv_manifest_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # materialize BEFORE compaction/vacuum delete the dirs it reads
     pre = (
-        manifest.read_snapshot_agg(spark, table)
+        streaming.read_incremental_state(spark, table)
         .select(
             "o_orderpriority",
             F.col("n_rows").alias("n1"),
@@ -7809,7 +7810,7 @@ def mv_manifest_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = manifest.compact_snapshot(spark, table, upto_batch=1)
     dirs_deleted, mans_deleted = manifest.vacuum(spark, table, keep_versions=1)
     remaining = streaming.list_batch_partitions(spark, table)
-    post = manifest.read_snapshot_agg(spark, table).localCheckpoint()
+    post = streaming.read_incremental_state(spark, table).localCheckpoint()
     mismatches = (
         pre.join(
             post.select(
@@ -7857,7 +7858,7 @@ def mv_manifest_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_manifest_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming with TRANSACTIONAL publishing
-    (streaming/manifest.run_stream_manifest_agg): the events table
+    (streaming.run_stream_incremental_agg): the events table
     replays as a bounded file stream in single-file micro-batches; each
     batch lands its mergeable partial in its own `_batch_id` partition
     (idempotent) and then COMMITS a manifest version — idempotent-write
@@ -7891,7 +7892,7 @@ def stream_manifest_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    manifest.run_stream_manifest_agg(stream, ["event_type"], "v", table, ckpt)
+    streaming.run_stream_incremental_agg(stream, ["event_type"], "v", table, ckpt)
     versions = manifest.list_versions(spark, table)
     committed = manifest.read_manifest(spark, table)["batch_ids"]
     # monotone publish: each version adds exactly its batch id
@@ -7912,7 +7913,7 @@ def stream_manifest_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         and 99 in listed
         and 99 not in committed
     )
-    view = manifest.read_snapshot_agg(spark, table)
+    view = streaming.read_incremental_state(spark, table)
     return view.select(
         "event_type",
         "n_rows",
@@ -9230,14 +9231,15 @@ def stream_cdf_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Z-weights (+1 insert / -1 delete) into the existing
     signed-aggregate streaming machinery (run_stream_signed_agg):
     per-batch signed partials land in idempotent `_batch_id`
-    partitions, and the read-side fold absorbs the deletes by the same
-    addition that absorbs inserts — no special retraction handling
-    anywhere, because the Z-set algebra is split-invariant — which is
-    also why trigger slicing is immaterial here: a fresh stream's
-    first trigger is deliberately uncapped (the reader can't see a
-    checkpoint-restored offset, manifest_stream.py), so this whole
-    log drains as ONE catch-up batch; per-version slicing of the same
-    log is pinned equivalent by tests/test_cdf_stream_model.py.
+    partitions of a second manifest-committed table, and the read-side
+    fold absorbs the deletes by the same addition that absorbs inserts —
+    no special retraction handling anywhere, because the Z-set algebra
+    is split-invariant — which is also why trigger slicing is immaterial
+    here: a fresh stream's first trigger is deliberately uncapped (the
+    reader can't see a checkpoint-restored offset, manifest_stream.py),
+    so this whole log drains as ONE catch-up batch; per-version slicing
+    of the same log is pinned equivalent by
+    tests/test_cdf_stream_model.py.
 
     The folded view must hash-match the oracle's post-delete aggregate
     AND (flag-pinned) equal the source table's own snapshot aggregate

@@ -70,6 +70,31 @@ def default_parallelism() -> int:
         return os.cpu_count() or 4
 
 
+# cgroup v2: the container's memory limit in bytes, or "max" (none)
+CGROUP_MEMORY_MAX = "/sys/fs/cgroup/memory.max"
+
+
+def default_driver_memory() -> str:
+    """The local-mode JVM heap: $SPARK_GRAFT_DRIVER_MEM, else min(16g,
+    half the memory this process may use: the host's physical memory, or
+    the container's cgroup limit when that is smaller). The other half
+    stays with the Python side (driver, workers, Arrow buffers) and the
+    page cache."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, OSError, ValueError):
+        return "16g"
+    try:
+        with open(CGROUP_MEMORY_MAX) as f:
+            phys = min(phys, int(f.read()))
+    except (OSError, ValueError):  # no cgroup v2 file, or no limit
+        pass
+    return f"{min(16 << 10, phys // 2 >> 20)}m"
+
+
 def get_spark(
     app_name: str = APP_NAME,
     master: str | None = None,
@@ -84,7 +109,8 @@ def get_spark(
 
     Whenever the resolved master is local — passed explicitly
     (``local[N]``, ``local[*]``) or defaulted — the JVM heap defaults to
-    ``$SPARK_GRAFT_DRIVER_MEM`` (16g): in local mode the driver and every
+    ``default_driver_memory()`` (``$SPARK_GRAFT_DRIVER_MEM``, else
+    min(16g, half the host's or container's memory)): in local mode the driver and every
     executor thread share ONE heap, and Spark's ~1g default OOM'd an
     inverted-index join at 4x sf0.1 on a machine with >100 GiB free. A
     cluster master sizes its executors itself, and a heap set at launch
@@ -110,9 +136,7 @@ def get_spark(
         builder = builder.master(master)
     is_local = master == "local" or master.startswith("local[")
     if is_local and not launch_conf.contains("spark.driver.memory"):
-        builder = builder.config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-        )
+        builder = builder.config("spark.driver.memory", default_driver_memory())
 
     conf = dict(_BASE_CONF)
     # Initial shuffle partition count: AQE coalesces down from here, so err

@@ -217,10 +217,9 @@ def write_parquet(
 def scratch_dir(tag: str, key: str) -> str:
     """Deterministic scratch directory keyed by (tag, key): repeated
     gate/bench invocations re-write the SAME path (mode=overwrite)
-    instead of leaking a fresh mkdtemp per run — the disk-hygiene policy
-    adopted for the streaming sources in round 4's advice fix, shared
-    here for any query that needs a derived on-disk table (partitioned
-    copies, CDC snapshots)."""
+    instead of leaking a fresh mkdtemp per run. Shared by every query
+    that needs a derived on-disk table (stream sources, state tables,
+    partitioned copies, CDC snapshots)."""
     import hashlib
     import os
     import tempfile
@@ -313,12 +312,12 @@ def _parquet_with_schema_memo(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(sch).parquet(path)
 
 
-# Resolved-DataFrame memo, one step up from the schema memo (r13 round 2,
-# guide §7.3): even with the schema supplied, every load_table call paid
-# ~24 py4j round-trips / ~65 ms re-building the reader, re-resolving the
-# DataSource relation and re-applying the NTZ fixup for an immutable
-# testdata file — a 6-table query re-derived six table references it had
-# already derived. The memo returns the SAME lazy DataFrame (an analyzed
+# Resolved-DataFrame memo, one step up from the schema memo: even with
+# the schema supplied, every load_table call paid ~24 py4j round-trips /
+# ~65 ms re-building the reader, re-resolving the DataSource relation
+# and re-applying the NTZ fixup for an immutable testdata file — a
+# 6-table query re-derived six table references it had already derived.
+# The memo returns the SAME lazy DataFrame (an analyzed
 # plan — a table reference, exactly what `spark.table()` returns against
 # a metastore after the first resolution). METADATA only: a DataFrame
 # holds no rows, every action on it re-plans and re-scans the parquet

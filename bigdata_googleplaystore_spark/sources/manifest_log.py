@@ -13,12 +13,14 @@ Layout of a manifest-committed table:
 A manifest is the complete snapshot definition: the seven fields of
 EMPTY_MANIFEST (written by streaming/manifest.commit_version).
 
-Both lakehouse tiers read the log through this module: the operator tier
-(streaming/manifest.py, streaming/__init__.py) over the session's Hadoop
-FileSystem (`storage.HadoopBackend`), the Python DataSource readers
-(manifest_stream, manifest_cdf_stream) over local, memory:// or fsspec
-backends. The CDF planner and readers also run inside Python workers, so
-this module imports only the stdlib and `storage` — never pyspark.
+This is the one table format: lakehouse row tables and streaming state
+tables alike commit and read through this log. The driver-side
+operations (streaming/manifest.py, streaming/__init__.py) read it over
+the session's Hadoop FileSystem (`storage.HadoopBackend`), the Python
+DataSource readers (manifest_stream, manifest_cdf_stream) over local,
+memory:// or fsspec backends. The CDF planner and readers also run
+inside Python workers, so this module imports only the stdlib and
+`storage` — never pyspark.
 """
 
 from __future__ import annotations

@@ -24,6 +24,7 @@ from pyspark.sql.types import StructType
 from ..sources import manifest_log
 from ..sources.manifest_log import compact_base_id  # noqa: F401  (public name)
 from ..sources.storage import HadoopBackend
+from . import manifest
 
 
 def read_event_stream(
@@ -195,9 +196,9 @@ def write_batch_partition(df: DataFrame, out_dir: str, batch_id: int) -> None:
     sink and state table here shares: the batch's rows land in their own
     `_batch_id=<id>` partition via dynamic partition overwrite, so a
     replayed batch rewrites the same directory instead of appending
-    duplicates — exactly-once without transactions. Single definition so
-    the streaming writers, the batch backfill path, and any future
-    compaction job cannot drift from each other."""
+    duplicates; readers see it once a manifest commit publishes it.
+    Single definition so the streaming writers, the batch backfill path
+    and compaction cannot drift from each other."""
     (
         df.withColumn("_batch_id", F.lit(batch_id))
         .write.mode("overwrite")
@@ -205,18 +206,6 @@ def write_batch_partition(df: DataFrame, out_dir: str, batch_id: int) -> None:
         .partitionBy("_batch_id")
         .parquet(out_dir)
     )
-
-
-def _read_state_partials(
-    spark: SparkSession, state_dir: str, as_of_batch: int | None = None
-) -> DataFrame:
-    """Per-batch partial-state rows, optionally pinned to a version
-    (_batch_id <= as_of_batch), with the partition column dropped —
-    the single read path under every latest/as-of/signed state fold."""
-    partials = spark.read.parquet(state_dir)
-    if as_of_batch is not None:
-        partials = partials.filter(F.col("_batch_id") <= as_of_batch)
-    return partials.drop("_batch_id")
 
 
 def _run_stream_to_batch_partitions(
@@ -228,15 +217,29 @@ def _run_stream_to_batch_partitions(
     """THE foreachBatch runner every batch-partitioned sink here shares:
     each micro-batch (optionally passed through `transform(batch_df)`
     first — the partial-state builders plug in there) lands in its own
-    idempotent `_batch_id` partition via write_batch_partition, then the
-    bounded stream drains and stops. One definition, so runner-level
-    changes (trigger options, error handling) cannot drift across the
-    raw-sink, scalar-, signed-, and multiset-state writers."""
+    idempotent `_batch_id` partition, then manifest.commit_batch
+    publishes it, so readers only ever see whole batches. A replay
+    before the commit rewrites the partition and commits; a replay
+    after it is harmless (the commit is a set union). An empty
+    micro-batch writes and commits nothing. A table with other batch
+    partitions but no manifest (written by write_batch_partition alone)
+    is refused: committing only the new batch would hide the older ones
+    from every reader."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         if transform is not None:
             batch_df = transform(batch_df)
+        spark = batch_df.sparkSession
+        if manifest.latest_version(spark, out_dir) is None and any(
+            b != batch_id for b in list_batch_partitions(spark, out_dir)
+        ):
+            raise ValueError(
+                f"{out_dir} holds uncommitted batch partitions and no "
+                "manifest; commit them with manifest.commit_batch first"
+            )
         write_batch_partition(batch_df, out_dir, batch_id)
+        if manifest._batch_written(spark, out_dir, batch_id):
+            manifest.commit_batch(spark, out_dir, batch_id)
 
     q = (
         stream_df.writeStream.foreachBatch(write_batch)
@@ -250,14 +253,11 @@ def _run_stream_to_batch_partitions(
 def run_stream_foreach_batch_parquet(
     stream_df: DataFrame, out_dir: str, checkpoint_dir: str
 ) -> None:
-    """Exactly-once-per-batch parquet sink via foreachBatch: each
-    micro-batch overwrites its own `_batch_id=<id>` partition, so a batch
-    replayed after a failure rewrites the same directory instead of
-    appending duplicates (idempotent writes + checkpointed offsets =
-    end-to-end exactly-once for deterministic transformations). The
-    pattern generalizes to JDBC upserts / MERGE sinks — foreachBatch is
-    the extension point Structured Streaming gives you for any sink with
-    transactional or idempotent semantics."""
+    """Exactly-once-per-batch parquet sink: the shared runner with no
+    transform (idempotent writes + atomic publish + checkpointed offsets
+    = end-to-end exactly-once for deterministic transformations). Plain
+    `spark.read.parquet(out_dir)` still reads every batch: Spark's file
+    listing hides the `_manifests/` directory."""
     _run_stream_to_batch_partitions(stream_df, out_dir, checkpoint_dir)
 
 
@@ -270,15 +270,13 @@ def run_stream_incremental_agg(
 ) -> None:
     """Streaming materialized-view maintenance: each micro-batch writes
     its MERGEABLE partial aggregate (operators/incremental.py state:
-    count/sum/min/max per key) into its own `_batch_id` partition with
-    dynamic partition overwrite.
+    count/sum/min/max per key) into its own `_batch_id` partition and
+    commits it to the state table's manifest.
 
-    Replayed batches rewrite their own partition — idempotent, so the
-    state table is exactly-once without transactions. History is never
-    re-read: each batch shuffles only its own |keys| rows. Readers call
-    `read_incremental_state` to fold the partials; a compaction job can
-    merge old partitions into a base the same way (same merge operator)
-    without changing reader semantics."""
+    History is never re-read: each batch shuffles only its own |keys|
+    rows. Readers call `read_incremental_state` to fold the committed
+    partials; manifest.compact_snapshot merges old partials into a base
+    with the same merge operator, without changing what readers see."""
     from ..operators import incremental
 
     _run_stream_to_batch_partitions(
@@ -289,39 +287,22 @@ def run_stream_incremental_agg(
     )
 
 
-def read_incremental_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Fold all per-batch partials into the current aggregate view."""
-    from ..operators import incremental
-
-    partials = _read_state_partials(spark, state_dir)
-    return incremental.finalize(incremental.merge_partials(partials))
-
-
-def read_incremental_state_asof(
-    spark: SparkSession, state_dir: str, as_of_batch: int
+def read_incremental_state(
+    spark: SparkSession, state_dir: str, version: int | None = None
 ) -> DataFrame:
-    """TIME-TRAVEL read: the aggregate view exactly as it stood after
-    `as_of_batch` was committed — fold only partials with
-    _batch_id <= as_of_batch. Because every batch owns its own
-    immutable partition, any historical version stays reconstructible
-    after later batches land; pinning a training run to a version
-    makes the dataset REPRODUCIBLE (the lineage primitive a
-    transactional table format gives you, recovered here from plain
-    partitioned parquet).
+    """Fold the committed per-batch partials into the aggregate view: the
+    latest snapshot, or the one committed as manifest `version`.
 
-    Scale posture: _batch_id is a PARTITION column, so the as-of
-    predicate prunes newer partitions at the scan — a version read
-    costs O(partials up to that version), never O(all history), and
-    the fold is the same |keys|-row shuffle as the latest-read path.
-
-    After compaction (compact_state_partials), versions below the
-    compaction horizon are gone; their as-of reads FLOOR to the
-    horizon version, because the merged base's reserved negative
-    _batch_id passes every as-of filter."""
+    A pinned version scans exactly the partitions its manifest lists,
+    O(partials in that version), and stays exact until vacuum retires
+    it; after that the read raises."""
     from ..operators import incremental
 
-    partials = _read_state_partials(spark, state_dir, as_of_batch)
-    return incremental.finalize(incremental.merge_partials(partials))
+    return incremental.finalize(
+        incremental.merge_partials(
+            manifest.snapshot_partials(spark, state_dir, version)
+        )
+    )
 
 
 def run_stream_signed_agg(
@@ -333,17 +314,16 @@ def run_stream_signed_agg(
     mult_col: str = "_mult",
 ) -> None:
     """Streaming CDC materialized view: run_stream_incremental_agg's
-    per-batch-partition protocol over a SIGNED change feed (`mult_col`
+    per-batch protocol over a SIGNED change feed (`mult_col`
     +1 insert / -1 delete — the Z-set encoding a Debezium-style CDC
-    topic delivers). Each micro-batch writes its signed partial
-    (operators/incremental.partial_agg_signed: count/sum weighted by
-    multiplicity) into its own idempotent `_batch_id` partition;
-    retractions need no special handling anywhere in the streaming
-    machinery because the signed state absorbs them by the same
-    addition that absorbs inserts — deletes arriving in a DIFFERENT
-    micro-batch than the insert they cancel fold correctly because
-    the algebra is split-invariant. History is never re-read; each
-    batch shuffles its own |keys| rows."""
+    topic delivers). Each micro-batch writes and commits its signed
+    partial (operators/incremental.partial_agg_signed: count/sum
+    weighted by multiplicity); retractions need no special handling
+    anywhere in the streaming machinery because the signed state
+    absorbs them by the same addition that absorbs inserts — deletes
+    arriving in a DIFFERENT micro-batch than the insert they cancel
+    fold correctly because the algebra is split-invariant. History is
+    never re-read; each batch shuffles its own |keys| rows."""
     from ..operators import incremental
 
     _run_stream_to_batch_partitions(
@@ -357,14 +337,15 @@ def run_stream_signed_agg(
 
 
 def read_signed_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Fold all per-batch SIGNED partials into the current view: counts
-    and sums add across batches, groups retracted to zero disappear
-    (operators/incremental.finalize_signed)."""
+    """Fold the committed SIGNED partials of the latest snapshot into
+    the view: counts and sums add across batches, groups retracted to
+    zero disappear (operators/incremental.finalize_signed)."""
     from ..operators import incremental
 
-    partials = _read_state_partials(spark, state_dir)
     return incremental.finalize_signed(
-        incremental.merge_partials_signed(partials)
+        incremental.merge_partials_signed(
+            manifest.snapshot_partials(spark, state_dir)
+        )
     )
 
 
@@ -379,12 +360,12 @@ def run_stream_multiset_agg(
     """Streaming CDC materialized view for the MULTISET-state aggregate
     tier (min/max, count-distinct, top-n — the aggregates signed scalar
     state cannot maintain because a deleted extremum has no inverse):
-    each micro-batch of the Z-weighted change feed writes its per-
-    (key, value) net counts (operators/incremental.multiset_state) into
-    its own idempotent `_batch_id` partition, exactly the protocol the
-    scalar run_stream_signed_agg uses. Retractions again need no
-    special machinery — the multiset algebra is split-invariant, so a
-    -1 landing batches after its +1 nets out in the read-side fold.
+    each micro-batch of the Z-weighted change feed writes and commits
+    its per-(key, value) net counts (operators/incremental.
+    multiset_state), exactly the protocol the scalar
+    run_stream_signed_agg uses. Retractions again need no special
+    machinery — the multiset algebra is split-invariant, so a -1
+    landing batches after its +1 nets out in the read-side fold.
     Per-batch state written is |distinct (key, value) in the batch|
     rows; history is never re-read."""
     from ..operators import incremental
@@ -400,15 +381,15 @@ def run_stream_multiset_agg(
 
 
 def read_multiset_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Fold all per-batch multiset partials into the current net
-    (keys..., value, _cnt) state: counts add across batches, rows
-    netted to zero drop out. This ONE folded frame serves every
-    multiset reader — finalize_minmax, finalize_distinct,
-    finalize_topn — so a stream maintains all the non-invertible
-    aggregates with a single state table."""
+    """Fold the committed multiset partials of the latest snapshot into
+    the net (keys..., value, _cnt) state: counts add across batches,
+    rows netted to zero drop out. This ONE
+    folded frame serves every multiset reader — finalize_minmax,
+    finalize_distinct, finalize_topn — so a stream maintains all the
+    non-invertible aggregates with a single state table."""
     from ..operators import incremental
 
-    return incremental.merge_multisets(_read_state_partials(spark, state_dir))
+    return incremental.merge_multisets(manifest.snapshot_partials(spark, state_dir))
 
 
 def read_multiset_minmax(
@@ -425,144 +406,12 @@ def read_multiset_minmax(
 
 
 def list_batch_partitions(spark: SparkSession, state_dir: str) -> list[int]:
-    """The `_batch_id=<n>` partition ids present in a state table,
-    sorted, via the session's Hadoop FileSystem (works on hdfs://s3a:
-    paths). Single definition shared by compaction and its gate so the
-    listing route cannot drift from the operator it verifies."""
+    """The `_batch_id=<n>` partition directories on disk, committed or
+    not, sorted, via the session's Hadoop FileSystem (works on
+    hdfs:// and s3a:// paths). Readers never use it — they plan from the
+    manifest; the runner's no-manifest check and the gates use it to see
+    what a writer or vacuum left on disk."""
     return manifest_log.list_batch_ids(HadoopBackend(spark), state_dir)
-
-
-def compact_state_partials(
-    spark: SparkSession, state_dir: str, upto_batch: int
-) -> int:
-    """State-table COMPACTION: merge every `_batch_id <= upto_batch`
-    partial partition (including any earlier compacted base) into ONE
-    base partition stored at the RESERVED id `compact_base_id(
-    upto_batch)` — negative, outside the id space streams write, so a
-    micro-batch replayed after compaction overwrites its own directory
-    and never the base — then delete the now-redundant older
-    partitions. Readers are untouched — the fold operators are
-    associative, so (merged base) ⊕ (newer partials) equals the
-    original chain; `read_incremental_state` and friends work unchanged
-    on the compacted table. Works on any of the three state schemas
-    (merge_state_partials).
-
-    Replay contract: compact only behind the stream's COMMITTED
-    checkpoint offset. A replay of an id <= the horizon (possible only
-    when that contract is violated) adds a duplicate partial next to
-    the base that already folded it — double-counting that one batch —
-    rather than destroying history; ids > the horizon replay
-    idempotently as always.
-
-    The TRADE, stated plainly: as-of reads BELOW `upto_batch` are no
-    longer reconstructible — compaction is the retention boundary
-    (exactly a transactional format's VACUUM horizon). Because the
-    base's negative id passes every `_batch_id <= v` as-of filter, an
-    as-of read below the horizon FLOORS to the horizon version (the
-    nearest surviving one) instead of returning empty. Pick
-    `upto_batch` behind every version any consumer still pins.
-
-    Scale posture: a state table accumulating one partition per
-    micro-batch forever pays O(batches) files and footers per read;
-    compaction caps the read fan-in at O(1) base + O(recent batches)
-    while each compaction itself shuffles only |keys| (or |distinct
-    (key, value)|) rows — never raw history. Partition removal goes
-    through the Hadoop FileSystem API, so the table may live on
-    hdfs:// or s3a:// paths, not only local disk.
-
-    Measured (COVERAGE.md, sf0.1 orders, 64 batches
-    compacted to 1 base + 7 recent): file fan-in 64 -> 8 and the
-    latest-view fold 0.515s -> 0.273s with the folded values asserted
-    identical; the 0.96s compaction amortizes over every future read.
-    At a batch-per-minute cadence an uncompacted month is ~43k
-    partitions — listing/footer overhead dominates reads long before
-    data volume does.
-
-    Returns the number of old partitions removed."""
-    base_id = compact_base_id(upto_batch)
-    listed = list_batch_partitions(spark, state_dir)
-    # an existing base at horizon H (id -(H+1)) folded batches through
-    # H, so "compacting" to an earlier upto would relabel version-H data
-    # as an older version
-    check_horizon(
-        "compact_state_partials",
-        upto_batch,
-        max((manifest_log.effective_seq(b) for b in listed if b < 0), default=None),
-    )
-    # every partition the merged base subsumes: ids <= upto_batch,
-    # including any earlier (more-negative-than-new) compacted base
-    old_ids = [b for b in listed if b <= upto_batch and b != base_id]
-    # Swap protocol (WRITE-BEFORE-DELETE): write the merged base INTO
-    # the table at its reserved negative id, and only then delete the
-    # subsumed partitions. The swap is still not atomic, but every crash
-    # window now errs toward DUPLICATION, never loss: a crash before the
-    # base write leaves the table untouched (re-run recomputes the merge
-    # from the intact partials); a crash after the base write but
-    # mid-delete leaves base + some subsumed partials coexisting — reads
-    # double-count those batches (detectable) until the re-run below
-    # notices the base partition already exists, SKIPS the merge
-    # (re-merging partials that include the base would fold it twice),
-    # and finishes the deletes. A production deployment wraps this in a
-    # manifest commit (streaming/manifest.compact_snapshot); the
-    # operator keeps the merge / retention semantics and the FS
-    # mechanics, which is what the gate checks.
-    if base_id not in listed:
-        write_compacted_base(
-            spark,
-            merge_state_partials(_read_state_partials(spark, state_dir, upto_batch)),
-            state_dir,
-            base_id,
-        )
-    # base is durable in-table; the deletes are idempotent from here
-    for b in old_ids:
-        _delete_path(spark, manifest_log.batch_path(state_dir, b))
-    return len(old_ids)
-
-
-def check_horizon(op: str, upto_batch: int, horizon: int | None) -> None:
-    """A compaction's horizon only moves forward: refuse `upto_batch`
-    behind the table's current `horizon` (None: never compacted)."""
-    if horizon is not None and upto_batch < horizon:
-        raise ValueError(
-            f"{op}: upto_batch={upto_batch} is behind the compaction "
-            f"horizon {horizon} — the horizon only moves forward"
-        )
-
-
-def merge_state_partials(partials: DataFrame) -> DataFrame:
-    """Fold partial-state rows of any of the three state schemas,
-    dispatching on the columns: multiset partials (`_cnt`) with
-    merge_multisets, scalar partials (`_min`/`_max`) with
-    merge_partials, signed partials with merge_partials_signed."""
-    from ..operators import incremental
-
-    if "_cnt" in partials.columns:
-        return incremental.merge_multisets(partials)
-    if "_min" in partials.columns:
-        return incremental.merge_partials(partials)
-    return incremental.merge_partials_signed(partials)
-
-
-def write_compacted_base(
-    spark: SparkSession, base: DataFrame, table_dir: str, base_id: int
-) -> None:
-    """Land a compaction's merged `base` at its reserved partition. The
-    merge plan reads the very partitions the base subsumes, so it is
-    materialized OUTSIDE the table first (`<table>__compact_tmp`) and
-    only then written in; the staging copy is removed afterwards."""
-    tmp = table_dir.rstrip("/") + "__compact_tmp"
-    base.write.mode("overwrite").parquet(tmp)
-    write_batch_partition(spark.read.parquet(tmp), table_dir, base_id)
-    _delete_path(spark, tmp)
-
-
-def _delete_path(spark: SparkSession, path: str) -> None:
-    """Recursive delete through the session's Hadoop FileSystem (works
-    on hdfs:// and s3a:// paths, not only local disk)."""
-    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
-    jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).delete(
-        jpath, True
-    )
 
 
 def run_stream_to_memory(

@@ -1,17 +1,17 @@
-"""Manifest-committed snapshots over batch-partitioned state tables.
+"""Manifest-committed snapshots: how every batch-partitioned table
+publishes and reads its batches.
 
 The per-batch partition protocol (streaming.write_batch_partition) gives
-idempotent exactly-once WRITES, but readers discover state by DIRECTORY
-LISTING — so a compaction swap has a window where base + subsumed
-partials coexist (double-counting reads), and a crashed writer's
-half-written partition is visible the moment its directory exists. This
-module adds the missing piece, the same idea a transactional table
-format (Delta's _delta_log, Iceberg's metadata tree — both public
-designs) is built on: **readers never list directories; they read a
-MANIFEST, and the manifest is replaced atomically.**
+idempotent exactly-once WRITES; this module makes them visible
+atomically, the same idea a transactional table format (Delta's
+_delta_log, Iceberg's metadata tree — both public designs) is built on:
+**readers never list directories; they read a MANIFEST, and the manifest
+is replaced atomically.** The streaming runners, the state-table readers
+(streaming.read_incremental_state and friends) and the lakehouse row
+tables all go through it.
 
-Layout (beside the existing partition dirs, which are unchanged; the
-format module sources/manifest_log.py owns it and every read rule):
+Layout (the format module sources/manifest_log.py owns it and every
+read rule):
 
     <table>/_batch_id=<n>/part-*.parquet     immutable once committed
     <table>/_manifests/v000000000042.json    immutable, create-only
@@ -45,17 +45,16 @@ What the manifest buys, concretely:
   both. A crash at ANY point before the rename leaves the table
   logically untouched (the orphan base dir is garbage, reclaimed by
   vacuum or overwritten by the re-run); there is no double-count window
-  at all — the property compact_state_partials' write-before-delete
-  ordering could only approximate.
+  at all.
 - **Torn-writer isolation.** A partition directory only enters the
   snapshot via a manifest commit, so a writer that died mid-parquet
   never corrupts reads.
 - **Version pinning.** Snapshot reads plan their file set FROM the
   manifest (explicit partition paths — no root directory listing, so a
   100k-partition table costs O(ids in the manifest) to plan, and
-  orphan dirs are never even statted). Any retained version stays
-  readable: time travel with real isolation, vs the `_batch_id <= v`
-  filter's floor-to-horizon semantics after compaction.
+  orphan dirs are never even statted). Any retained version reads
+  exactly; a vacuumed one raises instead of answering from another
+  snapshot.
 - **Safe GC.** vacuum(keep_versions=K) deletes partition dirs no
   retained manifest references — including crashed writers' orphans —
   while every reader pinned within the K newest versions keeps a
@@ -414,18 +413,6 @@ def snapshot_partials(
     return spark.read.parquet(*_batch_paths(table_dir, m["batch_ids"]))
 
 
-def read_snapshot_agg(
-    spark: SparkSession, table_dir: str, version: int | None = None
-) -> DataFrame:
-    """Fold a snapshot's scalar partials into the aggregate view — the
-    manifest-planned twin of streaming.read_incremental_state."""
-    from ..operators import incremental
-
-    return incremental.finalize(
-        incremental.merge_partials(snapshot_partials(spark, table_dir, version))
-    )
-
-
 def compact_snapshot(
     spark: SparkSession, table_dir: str, upto_batch: int
 ) -> int:
@@ -441,18 +428,18 @@ def compact_snapshot(
     versions still reference them; vacuum() reclaims them when those
     versions age out.
 
-    Returns the committed manifest version."""
-    from .. import streaming
+    Compact only behind the stream's COMMITTED checkpoint offset: a
+    replayed id <= the horizon double-counts that batch, never loses
+    history.
 
+    Returns the committed manifest version."""
     cur, subsumed = _compaction_plan(spark, table_dir, upto_batch, "compact_snapshot")
     if not subsumed:
         return cur["version"]
     # merge ONLY the committed subsumed partials (manifest-planned read)
-    streaming.write_compacted_base(
+    write_compacted_base(
         spark,
-        streaming.merge_state_partials(
-            spark.read.parquet(*_batch_paths(table_dir, subsumed))
-        ),
+        merge_state_partials(spark.read.parquet(*_batch_paths(table_dir, subsumed))),
         table_dir,
         manifest_log.compact_base_id(upto_batch),
     )
@@ -460,17 +447,52 @@ def compact_snapshot(
     return commit_version(spark, table_dir, _swap_in_base(cur, upto_batch))
 
 
+def merge_state_partials(partials: DataFrame) -> DataFrame:
+    """Fold partial-state rows of any of the three state schemas,
+    dispatching on the columns: multiset partials (`_cnt`) with
+    merge_multisets, scalar partials (`_min`/`_max`) with
+    merge_partials, signed partials with merge_partials_signed."""
+    from ..operators import incremental
+
+    if "_cnt" in partials.columns:
+        return incremental.merge_multisets(partials)
+    if "_min" in partials.columns:
+        return incremental.merge_partials(partials)
+    return incremental.merge_partials_signed(partials)
+
+
+def write_compacted_base(
+    spark: SparkSession, base: DataFrame, table_dir: str, base_id: int
+) -> None:
+    """Land a compaction's merged `base` at its reserved partition. The
+    merge plan reads the very partitions the base subsumes, so it is
+    materialized OUTSIDE the table first (`<table>__compact_tmp`) and
+    only then written in; the staging copy is removed afterwards."""
+    from . import write_batch_partition
+
+    tmp = table_dir.rstrip("/") + "__compact_tmp"
+    base.write.mode("overwrite").parquet(tmp)
+    write_batch_partition(spark.read.parquet(tmp), table_dir, base_id)
+    _, fs, jtmp = _fs(spark, tmp)
+    fs.delete(jtmp, True)
+
+
 def _compaction_plan(
     spark: SparkSession, table_dir: str, upto_batch: int, op: str
 ) -> tuple[dict, list[int]]:
     """The latest manifest a compaction to `upto_batch` plans against,
-    and the committed ids the base will subsume (none: nothing to do)."""
-    from .. import streaming
-
+    and the committed ids the base will subsume (none: nothing to do).
+    The horizon only moves forward: a base at horizon H folded batches
+    through H, so compacting to an earlier upto would relabel version-H
+    data as an older version."""
     cur = read_manifest(spark, table_dir)
     if not cur["batch_ids"]:
         raise ValueError(f"nothing to compact in {table_dir}")
-    streaming.check_horizon(op, upto_batch, cur["horizon"])
+    if cur["horizon"] is not None and upto_batch < cur["horizon"]:
+        raise ValueError(
+            f"{op}: upto_batch={upto_batch} is behind the compaction "
+            f"horizon {cur['horizon']} — the horizon only moves forward"
+        )
     return cur, [b for b in cur["batch_ids"] if b <= upto_batch]
 
 
@@ -600,47 +622,6 @@ def vacuum(
     if not dry_run:
         write_checkpoint(spark, table_dir, retained[-1])
     return (dirs_deleted, man_deleted)
-
-
-def run_stream_manifest_agg(
-    stream_df: DataFrame,
-    keys: list[str],
-    value_col: str,
-    table_dir: str,
-    checkpoint_dir: str,
-) -> None:
-    """Streaming MV maintenance with TRANSACTIONAL publishing: each
-    micro-batch writes its mergeable partial into its own `_batch_id`
-    partition (the shared idempotent protocol) and then COMMITS a
-    manifest — so a downstream reader never observes a half-written
-    batch, and a batch replayed after a crash-before-commit simply
-    rewrites its partition and commits the version its crash lost
-    (commit_batch is a set-union, so a replay after a successful commit
-    is also harmless: the id is already in the snapshot). This is the
-    foreachBatch + idempotent-write + atomic-publish triple that makes
-    Structured Streaming end-to-end exactly-once onto plain parquet."""
-    from ..operators import incremental
-
-    spark = stream_df.sparkSession
-
-    def write_and_commit(batch_df: DataFrame, batch_id: int) -> None:
-        from . import write_batch_partition
-
-        write_batch_partition(
-            incremental.partial_agg(batch_df, keys, value_col),
-            table_dir,
-            batch_id,
-        )
-        if _batch_written(spark, table_dir, batch_id):
-            commit_batch(spark, table_dir, batch_id)
-
-    q = (
-        stream_df.writeStream.foreachBatch(write_and_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
 
 
 # --------------------------------------------------------------------------
@@ -836,8 +817,6 @@ def compact_rows_apply_deletes(
     base is invisible until the commit. Bounds the read-time anti-join
     cost: after compaction the delete files only pay for rows newer
     than the horizon."""
-    from .. import streaming
-
     cur, subsumed = _compaction_plan(
         spark, table_dir, upto_batch, "compact_rows_apply_deletes"
     )
@@ -864,7 +843,7 @@ def compact_rows_apply_deletes(
             *_batch_paths(table_dir, subsumed)
         )
     rows, obs = _observe_stats(rows)
-    streaming.write_compacted_base(spark, rows, table_dir, base_id)
+    write_compacted_base(spark, rows, table_dir, base_id)
     # the base inherits the MERGED zone-map bounds of what it replaced
     # (deletes only shrink the true range — wider bounds stay CORRECT
     # for skipping, just less tight); kept batches keep their own

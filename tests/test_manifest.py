@@ -54,18 +54,18 @@ def test_commit_read_roundtrip_and_versions(spark, tmp_path):
     assert manifest.list_versions(spark, table) == [0, 1, 2, 3]
     m = manifest.read_manifest(spark, table)
     assert m["batch_ids"] == [0, 1, 2, 3]
-    view = manifest.read_snapshot_agg(spark, table)
+    view = streaming.read_incremental_state(spark, table)
     assert _agg_rows(view) == _direct_rows(raw)
 
 
 def test_uncommitted_partition_is_invisible(spark, tmp_path):
     table = str(tmp_path / "tbl")
     raw = _write_committed_batches(spark, table)
-    before = _agg_rows(manifest.read_snapshot_agg(spark, table))
+    before = _agg_rows(streaming.read_incremental_state(spark, table))
     # a crashed writer: partition lands on disk, commit never happens
     dup = incremental.partial_agg(raw.drop("id"), ["k"], "v")
     streaming.write_batch_partition(dup, table, 99)
-    assert _agg_rows(manifest.read_snapshot_agg(spark, table)) == before
+    assert _agg_rows(streaming.read_incremental_state(spark, table)) == before
     # directory-listing readers WOULD see it — that's the contrast
     assert 99 in streaming.list_batch_partitions(spark, table)
 
@@ -74,7 +74,7 @@ def test_version_pinned_time_travel(spark, tmp_path):
     table = str(tmp_path / "tbl")
     raw = _write_committed_batches(spark, table)
     first_two = raw.where(F.col("id") % 4 <= 1)
-    v1 = manifest.read_snapshot_agg(spark, table, version=1)
+    v1 = streaming.read_incremental_state(spark, table, version=1)
     assert _agg_rows(v1) == _direct_rows(first_two)
 
 
@@ -91,15 +91,15 @@ def test_compact_is_atomic_and_crash_safe(spark, tmp_path):
     streaming.write_batch_partition(
         base.localCheckpoint(), table, streaming.compact_base_id(2)
     )
-    assert _agg_rows(manifest.read_snapshot_agg(spark, table)) == want
+    assert _agg_rows(streaming.read_incremental_state(spark, table)) == want
     # re-run completes: overwrites the orphan base, commits the swap
     v = manifest.compact_snapshot(spark, table, upto_batch=2)
     m = manifest.read_manifest(spark, table, v)
     assert m["batch_ids"] == [streaming.compact_base_id(2), 3]
     assert m["horizon"] == 2
-    assert _agg_rows(manifest.read_snapshot_agg(spark, table)) == want
+    assert _agg_rows(streaming.read_incremental_state(spark, table)) == want
     # pre-compaction version still readable until vacuum
-    assert _agg_rows(manifest.read_snapshot_agg(spark, table, version=3)) == want
+    assert _agg_rows(streaming.read_incremental_state(spark, table, version=3)) == want
 
 
 def test_compact_horizon_only_moves_forward(spark, tmp_path):
@@ -137,7 +137,7 @@ def test_vacuum_reclaims_unreferenced_and_orphans(spark, tmp_path):
         3,
     ]
     assert manifest.list_versions(spark, table) == [4]
-    assert _agg_rows(manifest.read_snapshot_agg(spark, table)) == want
+    assert _agg_rows(streaming.read_incremental_state(spark, table)) == want
 
 
 def test_vacuum_keeps_pinned_window(spark, tmp_path):
@@ -151,11 +151,11 @@ def test_vacuum_keeps_pinned_window(spark, tmp_path):
     assert mans == 3
     # the pinned old version still folds correctly
     assert _agg_rows(
-        manifest.read_snapshot_agg(spark, table, version=3)
+        streaming.read_incremental_state(spark, table, version=3)
     ) == _direct_rows(raw)
 
 
-def test_run_stream_manifest_agg_commits_every_batch(spark, tmp_path):
+def test_stream_incremental_agg_commits_every_batch(spark, tmp_path):
     raw = _raw(spark)
     src = str(tmp_path / "src")
     raw.drop("id").repartition(4).write.mode("overwrite").parquet(src)
@@ -165,10 +165,10 @@ def test_run_stream_manifest_agg_commits_every_batch(spark, tmp_path):
     stream = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
     )
-    manifest.run_stream_manifest_agg(stream, ["k"], "v", table, ckpt)
+    streaming.run_stream_incremental_agg(stream, ["k"], "v", table, ckpt)
     versions = manifest.list_versions(spark, table)
     assert len(versions) >= 4
-    assert _agg_rows(manifest.read_snapshot_agg(spark, table)) == _direct_rows(raw)
+    assert _agg_rows(streaming.read_incremental_state(spark, table)) == _direct_rows(raw)
     # every version is a strict superset chain (atomic publish order)
     sets = [
         set(manifest.read_manifest(spark, table, v)["batch_ids"]) for v in versions
@@ -711,7 +711,7 @@ def test_stream_empty_trigger_commits_no_dangling_id(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    manifest.run_stream_manifest_agg(stream, ["k"], "v", table, ckpt)
+    streaming.run_stream_incremental_agg(stream, ["k"], "v", table, ckpt)
     m = manifest.read_manifest(spark, table)
     jvm, fs, _ = manifest._fs(spark, table)
     for b in m["batch_ids"]:
@@ -719,7 +719,7 @@ def test_stream_empty_trigger_commits_no_dangling_id(spark, tmp_path):
             jvm.org.apache.hadoop.fs.Path(f"{table}/_batch_id={b}")
         )
     # the read path survives the empty trigger and the fold is right
-    assert _agg_rows(manifest.read_snapshot_agg(spark, table)) == _direct_rows(
+    assert _agg_rows(streaming.read_incremental_state(spark, table)) == _direct_rows(
         raw
     )
 
@@ -2983,4 +2983,4 @@ def test_vacuum_dry_run_and_age_retention(spark, tmp_path):
     dirs, mans = manifest.vacuum(spark, table, keep_versions=1, keep_hours=1.0)
     assert (dirs, mans) == (3, 4)
     assert manifest.list_versions(spark, table) == [before_versions[-1]]
-    assert _agg_rows(manifest.read_snapshot_agg(spark, table)) == _direct_rows(raw)
+    assert _agg_rows(streaming.read_incremental_state(spark, table)) == _direct_rows(raw)

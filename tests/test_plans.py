@@ -666,29 +666,33 @@ def test_signed_ivm_refresh_plan_structure(spark, sf_dir):
 
 
 def test_asof_state_read_prunes_newer_batch_partitions(spark, tmp_path):
-    """streaming.read_incremental_state_asof: the version predicate must
-    reach the state scan as a PartitionFilters entry on _batch_id, and
-    the files actually listed must all live under batches <= v — the
-    physical proof that a time-travel read costs O(partials up to v),
-    not O(all history)."""
-    from pyspark.sql import functions as F
+    """streaming.read_incremental_state(version=v) plans its scan from
+    manifest v: the scan must read exactly the files of the batch
+    directories that manifest lists — the physical proof that a
+    time-travel read costs O(partials up to v), not O(all history)."""
+    import glob
+    from urllib.parse import urlparse
 
     from bigdata_googleplaystore_spark import streaming
     from bigdata_googleplaystore_spark.operators import incremental
+    from bigdata_googleplaystore_spark.streaming import manifest
 
     state = str(tmp_path / "state")
     for bid in range(4):
         base = spark.createDataFrame(
             [("a", float(bid)), ("b", float(bid) + 0.5)], "k STRING, v DOUBLE"
         )
-        (
-            incremental.partial_agg(base, ["k"], "v")
-            .withColumn("_batch_id", F.lit(bid))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(state)
+        streaming.write_batch_partition(
+            incremental.partial_agg(base, ["k"], "v"), state, bid
         )
+        manifest.commit_batch(spark, state, bid)
+    listed = manifest.read_manifest(spark, state, 1)["batch_ids"]
+    assert listed == [0, 1]
+    want_files = sorted(
+        f
+        for b in listed
+        for f in glob.glob(f"{state}/_batch_id={b}/*.parquet")
+    )
     # plan with AQE off: AdaptiveSparkPlanExec hides its final plan from
     # children() traversal (same caveat as ops._fact_scan_metric)
     from bigdata_googleplaystore_spark.catalog.ops import (
@@ -699,12 +703,12 @@ def test_asof_state_read_prunes_newer_batch_partitions(spark, tmp_path):
     saved = _save_confs(spark, ["spark.sql.adaptive.enabled"])
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        view = streaming.read_incremental_state_asof(spark, state, as_of_batch=1)
+        view = streaming.read_incremental_state(spark, state, version=1)
         plan = view._jdf.queryExecution().executedPlan().toString()
-        pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-        assert pf and any("_batch_id" in ln for ln in pf), plan
-        # physical metric: the scan must touch exactly the 2 surviving
-        # partitions (batches 0-1), not all 4
+        # the scan's file set is exactly the listed batches' files
+        got_files = sorted(urlparse(f).path for f in view.inputFiles())
+        assert got_files == want_files, plan
+        # physical metric: the scan read exactly those files
         rows = view.collect()
         total = 0
 
@@ -714,13 +718,13 @@ def test_asof_state_read_prunes_newer_batch_partitions(spark, tmp_path):
                 it = node.metrics().iterator()
                 while it.hasNext():
                     kv = it.next()
-                    if kv._1() == "numPartitions":
+                    if kv._1() == "numFiles":
                         total += kv._2().value()
             for i in range(node.children().size()):
                 walk(node.children().apply(i))
 
         walk(view._jdf.queryExecution().executedPlan())
-        assert total == 2, plan
+        assert total == len(want_files), plan
     finally:
         _restore_confs(spark, saved)
     # value check: as-of-1 folds exactly batches 0-1

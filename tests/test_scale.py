@@ -22,7 +22,9 @@ def test_explicit_local_master_gets_heap_default(spark):
     """The shared test session passes an explicit local[N] master, and
     get_spark still applies the local-mode heap default instead of
     Spark's ~1g: the configured value, and a JVM heap that size."""
-    want = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    from bigdata_googleplaystore_spark.session import default_driver_memory
+
+    want = default_driver_memory()
     sc = spark.sparkContext
     assert sc.master.startswith("local[")
     assert sc.getConf().get("spark.driver.memory") == want
@@ -30,6 +32,36 @@ def test_explicit_local_master_gets_heap_default(spark):
     want_bytes = int(want[:-1]) * units[want[-1].lower()]
     # maxMemory reports the usable heap, a little under -Xmx
     assert sc._jvm.java.lang.Runtime.getRuntime().maxMemory() > 0.8 * want_bytes
+
+
+def test_heap_default_is_sized_to_the_host(monkeypatch, tmp_path):
+    """Without $SPARK_GRAFT_DRIVER_MEM the heap default is half the
+    host's physical memory, or of a smaller cgroup `memory.max` limit,
+    capped at 16g; the variable overrides it."""
+    from bigdata_googleplaystore_spark import session
+    from bigdata_googleplaystore_spark.session import default_driver_memory
+
+    def host(gib):
+        pages = {"SC_PHYS_PAGES": gib << 18, "SC_PAGE_SIZE": 4096}
+        monkeypatch.setattr(os, "sysconf", pages.__getitem__)
+
+    limit = tmp_path / "memory.max"  # absent: no cgroup limit
+    monkeypatch.setattr(session, "CGROUP_MEMORY_MAX", str(limit))
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    host(15)
+    assert default_driver_memory() == "7680m"
+    host(4)
+    assert default_driver_memory() == "2048m"
+    host(256)
+    assert default_driver_memory() == "16384m"
+    limit.write_text("max\n")  # cgroup v2 without a limit
+    assert default_driver_memory() == "16384m"
+    limit.write_text(f"{6 << 30}\n")  # a 6 GiB container on the 256 GiB host
+    assert default_driver_memory() == "3072m"
+    host(4)  # a limit above physical memory changes nothing
+    assert default_driver_memory() == "2048m"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert default_driver_memory() == "3g"
 
 
 def test_salted_join_equals_plain_join(spark, sf_dir):

@@ -133,9 +133,15 @@ def test_stream_stream_join_matches_batch(spark, sf_dir, event_stream_dir):
 
 
 def test_foreach_batch_parquet_exactly_once_shape(spark, sf_dir, event_stream_dir, tmp_path):
-    """foreachBatch sink: batches land in _batch_id partitions, total rows
-    equal the source, and re-running the same checkpointed stream adds
-    nothing (offsets already committed)."""
+    """foreachBatch sink: batches land in _batch_id partitions, each
+    committed to the sink's manifest; total rows equal the source, and
+    re-running the same checkpointed stream adds nothing (offsets
+    already committed) and commits no new manifest version. A plain
+    parquet read of the sink skips the `_manifests/` log."""
+    import os
+
+    from bigdata_googleplaystore_spark.streaming import manifest
+
     schema = spark.read.parquet(event_stream_dir).schema
     out = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
@@ -153,8 +159,18 @@ def test_foreach_batch_parquet_exactly_once_shape(spark, sf_dir, event_stream_di
     sunk = spark.read.parquet(out)
     assert sunk.count() == total
     assert sunk.select("_batch_id").distinct().count() >= 2  # multi-batch
+    versions = manifest.list_versions(spark, out)
+    committed = manifest.read_manifest(spark, out)["batch_ids"]
+    assert len(versions) == len(committed) >= 2
+    assert committed == streaming.list_batch_partitions(spark, out)
     run()  # replay with same checkpoint: no new data, no duplicates
-    assert spark.read.parquet(out).count() == total
+    assert manifest.list_versions(spark, out) == versions
+    # the manifest log sits in the sink root, and the parquet read
+    # still sees only the data columns and rows
+    assert os.path.isdir(os.path.join(out, "_manifests"))
+    again = spark.read.parquet(out)
+    assert again.columns == sunk.columns
+    assert again.count() == total
 
 
 def test_stream_incremental_agg_matches_batch(spark, sf_dir, event_stream_dir, tmp_path):
@@ -367,31 +383,30 @@ def test_stateful_top_types_live_match_batch(spark, sf_dir, event_stream_dir):
 
 def test_stream_incremental_agg_crash_recovery(spark, sf_dir, event_stream_dir, tmp_path):
     """Exactly-once under a mid-flight crash: batch 1's partition is
-    WRITTEN but the injected failure prevents the checkpoint commit — the
-    worst-case double-write window. On restart the batch is reprocessed
-    and dynamic partition overwrite rewrites the same partition, so the
-    folded view still equals the batch aggregate and no batch appears
-    twice."""
+    WRITTEN but the injected failure prevents both its manifest commit
+    and the checkpoint commit — the worst-case double-write window. On
+    restart the batch is reprocessed, dynamic partition overwrite
+    rewrites the same partition and the commit lands, so the folded
+    view still equals the batch aggregate and no batch appears twice."""
     from pyspark.sql import functions as F
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from bigdata_googleplaystore_spark.operators import incremental
+    from bigdata_googleplaystore_spark.streaming import manifest
 
     schema = spark.read.parquet(event_stream_dir).schema
     state = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
 
     def write_batch_then_crash(batch_df, batch_id):
-        (
-            incremental.partial_agg(batch_df, ["event_type"], "value")
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(state)
+        streaming.write_batch_partition(
+            incremental.partial_agg(batch_df, ["event_type"], "value"),
+            state,
+            batch_id,
         )
         if batch_id == 1:
             raise RuntimeError("injected crash: partition written, commit pending")
+        manifest.commit_batch(spark, state, batch_id)
 
     stream = (
         spark.readStream.schema(schema)
@@ -406,8 +421,9 @@ def test_stream_incremental_agg_crash_recovery(spark, sf_dir, event_stream_dir, 
     with pytest.raises(StreamingQueryException, match="injected crash"):
         q.awaitTermination()
     q.stop()
-    # batch 1's orphan partition exists before recovery
+    # batch 1's orphan partition exists before recovery, uncommitted
     assert spark.read.parquet(state).filter(F.col("_batch_id") == 1).count() > 0
+    assert manifest.read_manifest(spark, state)["batch_ids"] == [0]
 
     restart = (
         spark.readStream.schema(schema)
@@ -427,13 +443,14 @@ def test_stream_incremental_agg_crash_recovery(spark, sf_dir, event_stream_dir, 
     w = {r["event_type"]: r for r in want.collect()}
     for r in got.collect():
         assert abs(r["total"] - w[r["event_type"]]["total"]) < 1e-6
-    # every source file became exactly one state partition — batch 1 was
-    # reprocessed in place, not duplicated
+    # every source file became exactly one committed state partition —
+    # batch 1 was reprocessed in place, not duplicated
     batch_ids = [
         r["_batch_id"]
         for r in spark.read.parquet(state).select("_batch_id").distinct().collect()
     ]
     assert sorted(batch_ids) == [0, 1, 2, 3]
+    assert manifest.read_manifest(spark, state)["batch_ids"] == [0, 1, 2, 3]
 
 
 def test_available_now_trigger_drains_and_stops(spark, sf_dir, event_stream_dir, tmp_path):
@@ -603,69 +620,106 @@ def test_top_types_processor_eviction_order_with_fake_state(spark):
     assert list(out["total_seen"]) == [7]*2  # a=3 + b=2 + d=2
 
 
-def test_compact_state_partials_scalar_roundtrip(spark, tmp_path):
-    """streaming.compact_state_partials over SCALAR partial state: the
-    folded view must be unchanged after compacting batches 0..2 into a
-    base at the reserved id _batch_id=-3 (compact_base_id(2) — outside
-    the id space micro-batches write, so a replayed batch can never
-    clobber the merged history), exactly 3 subsumed partitions must be
-    removed with {-3, 3} remaining on disk, and an as-of read at the
-    compaction horizon must still work while one BELOW it FLOORS to the
-    horizon version (the documented retention trade)."""
-    import glob
+def _write_committed(spark, state, frames):
+    """Land each partial-state frame as its own batch and commit it, the
+    way the streaming runners publish a micro-batch."""
+    from bigdata_googleplaystore_spark.streaming import manifest
 
-    from pyspark.sql import functions as F
+    for i, f in enumerate(frames):
+        streaming.write_batch_partition(f, state, i)
+        manifest.commit_batch(spark, state, i)
 
+
+def test_runner_refuses_uncommitted_partitions_without_manifest(spark, tmp_path):
+    """A state table holding batch partitions but no manifest (written
+    before tables carried one) is refused by the runner: committing only
+    the new batch would hide the older ones from every reader."""
     from bigdata_googleplaystore_spark.operators import incremental
+    from bigdata_googleplaystore_spark.streaming import manifest
 
-    state = str(tmp_path / "scalar_state")
-    rows = [("a", float(i)) for i in range(8)] + [("b", 100.0), ("b", None)]
-    df = spark.createDataFrame(rows, "grp STRING, v DOUBLE")
-    for b in range(4):
+    state = str(tmp_path / "legacy_state")
+    src = tmp_path / "legacy_src"
+    for b in range(2):
         streaming.write_batch_partition(
             incremental.partial_agg(
-                df.filter(F.abs(F.hash("grp", "v")) % 4 == b), ["grp"], "v"
+                spark.createDataFrame([("a", float(b))], "grp STRING, v DOUBLE"),
+                ["grp"],
+                "v",
             ),
             state,
             b,
         )
-    before = {
-        (r["grp"]): (r["n_rows"], r["total"], r["vmin"], r["vmax"])
-        for r in streaming.read_incremental_state(spark, state).collect()
-    }
-    removed = streaming.compact_state_partials(spark, state, upto_batch=2)
-    assert removed == 3
-    dirs = sorted(
-        int(p.rsplit("=", 1)[1])
-        for p in glob.glob(f"{state}/_batch_id=*")
+    spark.createDataFrame([("a", 9.0)], "grp STRING, v DOUBLE").write.parquet(
+        str(src / "p0")
     )
-    assert dirs == [streaming.compact_base_id(2), 3] == [-3, 3]
-    assert dirs == streaming.list_batch_partitions(spark, state)
-    after = {
-        (r["grp"]): (r["n_rows"], r["total"], r["vmin"], r["vmax"])
-        for r in streaming.read_incremental_state(spark, state).collect()
-    }
-    assert after == before
+    stream = spark.readStream.schema("grp STRING, v DOUBLE").parquet(str(src / "p0"))
+    with pytest.raises(Exception, match="uncommitted batch partitions"):
+        streaming.run_stream_incremental_agg(
+            stream, ["grp"], "v", state, str(tmp_path / "legacy_ckpt")
+        )
+    assert manifest.latest_version(spark, state) is None
+    assert streaming.list_batch_partitions(spark, state) == [0, 1]
 
-    def snap_asof(v):
+
+def test_pinned_version_is_exact_until_vacuum_then_raises(spark, tmp_path):
+    """A version read from before a compaction folds exactly that
+    version's batches, also after the compaction, and once
+    vacuum(keep_versions=1) retires the version the same read raises
+    instead of answering from the compacted snapshot. Null values go
+    through the compacted base: they count as rows but never become a
+    total, min or max."""
+    from bigdata_googleplaystore_spark.operators import incremental
+    from bigdata_googleplaystore_spark.streaming import manifest
+
+    state = str(tmp_path / "pinned_state")
+    batches = [
+        [("a", 1.0), ("b", 2.0), ("c", None)],
+        [("a", 3.0), ("b", None)],
+        [("b", 4.0)],
+        [("a", 5.0)],
+    ]
+    _write_committed(
+        spark,
+        state,
+        [
+            incremental.partial_agg(
+                spark.createDataFrame(b, "grp STRING, v DOUBLE"), ["grp"], "v"
+            )
+            for b in batches
+        ],
+    )
+
+    def snap(version=None):
         return sorted(
-            map(tuple, streaming.read_incremental_state_asof(spark, state, v).collect())
+            (r["grp"], r["n_rows"], r["total"], r["vmin"], r["vmax"])
+            for r in streaming.read_incremental_state(spark, state, version).collect()
         )
 
-    # as-of AT the horizon equals the merged base's fold; BELOW it the
-    # original versions are gone and the read FLOORS to the horizon
-    horizon = snap_asof(2)
-    assert len(horizon) > 0
-    assert snap_asof(1) == horizon
-    assert snap_asof(0) == horizon
+    # batches 0-1 only
+    v1 = [("a", 2, 4.0, 1.0, 3.0), ("b", 2, 2.0, 2.0, 2.0), ("c", 1, None, None, None)]
+    assert snap(1) == v1
+    latest = snap()
+    assert latest == [
+        ("a", 3, 9.0, 1.0, 5.0),
+        ("b", 3, 6.0, 2.0, 4.0),
+        ("c", 1, None, None, None),
+    ]
+    manifest.compact_snapshot(spark, state, upto_batch=2)
+    assert snap(1) == v1
+    assert snap() == latest
+    manifest.vacuum(spark, state, keep_versions=1)
+    with pytest.raises(FileNotFoundError):
+        streaming.read_incremental_state(spark, state, version=1)
+    assert snap() == latest
 
 
 def test_compact_state_partials_multiset_dispatch(spark, tmp_path):
-    """compact_state_partials must dispatch on the _cnt column and merge
+    """compact_snapshot must dispatch on the _cnt column and merge
     MULTISET state with merge_multisets: after compaction the min/max
     read is unchanged, including a runner-up max produced by a
     retraction whose -1 landed in a different batch than its +1."""
     from bigdata_googleplaystore_spark.operators import incremental
+    from bigdata_googleplaystore_spark.streaming import manifest
 
     state = str(tmp_path / "ms_state")
     b0 = spark.createDataFrame(
@@ -674,12 +728,14 @@ def test_compact_state_partials_multiset_dispatch(spark, tmp_path):
     )
     b1 = spark.createDataFrame([("x", 9.0, -1)], "grp STRING, v DOUBLE, _mult INT")
     b2 = spark.createDataFrame([("y", 3.0, 1)], "grp STRING, v DOUBLE, _mult INT")
-    for i, b in enumerate([b0, b1, b2]):
-        streaming.write_batch_partition(
-            incremental.multiset_state(b, ["grp"], "v", "_mult"), state, i
-        )
-    removed = streaming.compact_state_partials(spark, state, upto_batch=1)
-    assert removed == 2  # batches 0 and 1 subsumed into the -2 base
+    _write_committed(
+        spark,
+        state,
+        [incremental.multiset_state(b, ["grp"], "v", "_mult") for b in [b0, b1, b2]],
+    )
+    v = manifest.compact_snapshot(spark, state, upto_batch=1)
+    # batches 0 and 1 subsumed into the -2 base
+    assert manifest.read_manifest(spark, state, v)["batch_ids"] == [-2, 2]
     out = {
         r["grp"]: (r["n_rows"], r["vmin"], r["vmax"])
         for r in streaming.read_multiset_minmax(spark, state, "v").collect()
@@ -703,6 +759,7 @@ def test_compaction_invariant_under_random_batches_and_horizon(spark, tmp_path):
     from hypothesis import strategies as st
 
     from bigdata_googleplaystore_spark.operators import incremental
+    from bigdata_googleplaystore_spark.streaming import manifest
 
     row = st.tuples(
         st.sampled_from(["a", "b"]),
@@ -719,13 +776,18 @@ def test_compaction_invariant_under_random_batches_and_horizon(spark, tmp_path):
         )
         state = str(tmp_path / "prop_state")
         shutil.rmtree(state, ignore_errors=True)
-        for i, b in enumerate(batches):
-            df = spark.createDataFrame(
-                b, "grp STRING, v DOUBLE, _mult INT"
-            )
-            streaming.write_batch_partition(
-                incremental.partial_agg_signed(df, ["grp"], "v"), state, i
-            )
+        _write_committed(
+            spark,
+            state,
+            [
+                incremental.partial_agg_signed(
+                    spark.createDataFrame(b, "grp STRING, v DOUBLE, _mult INT"),
+                    ["grp"],
+                    "v",
+                )
+                for b in batches
+            ],
+        )
 
         def snap():
             return sorted(
@@ -734,8 +796,12 @@ def test_compaction_invariant_under_random_batches_and_horizon(spark, tmp_path):
             )
 
         before = snap()
-        removed = streaming.compact_state_partials(spark, state, horizon)
-        assert removed == horizon + 1  # partitions 0..horizon subsumed
+        v = manifest.compact_snapshot(spark, state, horizon)
+        # partitions 0..horizon subsumed into the base
+        assert manifest.read_manifest(spark, state, v)["batch_ids"] == [
+            streaming.compact_base_id(horizon),
+            *range(horizon + 1, len(batches)),
+        ]
         assert snap() == before
 
     check()
@@ -746,14 +812,13 @@ def test_compacted_base_survives_batch_replay(spark, tmp_path):
     micro-batch whose id was already folded into the compacted base
     gets replayed (checkpoint lost — a violation of the compact-only-
     behind-the-committed-offset contract). Because the base lives at a
-    reserved NEGATIVE id, the replay overwrites only its own directory:
-    the merged history must survive intact, with the replayed batch
-    double-counted (the documented worst case) — never the
-    pre-compaction batches silently destroyed, which is what storing
-    the base at _batch_id=horizon allowed."""
-    from pyspark.sql import functions as F
-
+    reserved NEGATIVE id, the replay overwrites only its own directory
+    and commits its own id: the merged history must survive intact,
+    with the replayed batch double-counted (the documented worst case) —
+    never the pre-compaction batches silently destroyed, which is what
+    storing the base at _batch_id=horizon allowed."""
     from bigdata_googleplaystore_spark.operators import incremental
+    from bigdata_googleplaystore_spark.streaming import manifest
 
     state = str(tmp_path / "replay_state")
     batches = [
@@ -767,15 +832,15 @@ def test_compacted_base_survives_batch_replay(spark, tmp_path):
         )
         for b in batches
     ]
-    for i, f in enumerate(frames):
-        streaming.write_batch_partition(f, state, i)
-    streaming.compact_state_partials(spark, state, upto_batch=2)
-    assert streaming.list_batch_partitions(spark, state) == [-3]
+    _write_committed(spark, state, frames)
+    manifest.compact_snapshot(spark, state, upto_batch=2)
+    assert manifest.read_manifest(spark, state)["batch_ids"] == [-3]
 
-    # replay batch 2: foreachBatch would call write_batch_partition with
-    # the SAME id — it must land at _batch_id=2, not over the base
+    # replay batch 2: the runner writes its partition under the SAME id
+    # and commits it — it must land at _batch_id=2, not over the base
     streaming.write_batch_partition(frames[2], state, 2)
-    assert streaming.list_batch_partitions(spark, state) == [-3, 2]
+    manifest.commit_batch(spark, state, 2)
+    assert manifest.read_manifest(spark, state)["batch_ids"] == [-3, 2]
 
     got = {
         r["grp"]: (r["n_rows"], r["total"])
@@ -783,51 +848,3 @@ def test_compacted_base_survives_batch_replay(spark, tmp_path):
     }
     # history intact; batch 2 double-counted (b gains one extra 4.0 row)
     assert got == {"a": (2, 4.0), "b": (3, 10.0)}
-
-
-def test_compaction_crash_mid_delete_recovers_without_loss(spark, tmp_path):
-    """The r08-advice crash window: compaction now writes the merged
-    base INTO the table before deleting the subsumed partitions, so a
-    crash mid-delete leaves base + leftover partials coexisting (reads
-    double-count, detectably) instead of losing history. A RE-RUN at
-    the same horizon must detect the existing base, SKIP the re-merge
-    (folding partials that include the base would double it), finish
-    the deletes, and restore the exact pre-compaction fold."""
-    from bigdata_googleplaystore_spark.operators import incremental
-
-    state = str(tmp_path / "crash_state")
-    batches = [
-        [("a", 1.0), ("b", 2.0)],   # batch 0
-        [("a", 3.0)],               # batch 1 (the delete that "crashed")
-        [("b", 4.0)],               # batch 2
-        [("a", 5.0)],               # batch 3 (beyond the horizon)
-    ]
-    frames = [
-        incremental.partial_agg(
-            spark.createDataFrame(b, "grp STRING, v DOUBLE"), ["grp"], "v"
-        )
-        for b in batches
-    ]
-    for i, f in enumerate(frames):
-        streaming.write_batch_partition(f, state, i)
-
-    def snap():
-        return sorted(
-            (r["grp"], r["n_rows"], r["total"])
-            for r in streaming.read_incremental_state(spark, state).collect()
-        )
-
-    before = snap()
-    streaming.compact_state_partials(spark, state, upto_batch=2)
-    # reconstruct the crash-mid-delete table state: base written, but
-    # batch 1's partial never got deleted
-    streaming.write_batch_partition(frames[1], state, 1)
-    assert streaming.list_batch_partitions(spark, state) == [-3, 1, 3]
-    # the window is duplication, never loss: batch 1 double-counted
-    dup = dict((g, (n, t)) for g, n, t in snap())
-    assert dup["a"] == (4, 12.0)  # a's batch-1 row (3.0) counted twice
-    # re-run at the same horizon = the recovery path
-    removed = streaming.compact_state_partials(spark, state, upto_batch=2)
-    assert removed == 1  # only the leftover partial
-    assert streaming.list_batch_partitions(spark, state) == [-3, 3]
-    assert snap() == before
