@@ -10,30 +10,10 @@ from . import llm, ops, tpch  # noqa: E402,F401
 from .tpch import flagship  # noqa: E402,F401
 
 
-# The driver records CORRECTNESS rows for only the first ~50 entries of
-# queries(), so dict order decides which queries get the hard signal.
-#
-# ROTATION POLICY (round 3+): each round the window head is
-#   (a) never-driver-checked queries, judge-flagged / bench-headline /
-#       scale-shape ones first;
-#   (b) any query whose semantics or implementation changed this round
-#       (it needs a fresh row regardless of past greens);
-#   (c) ~5 STALE-GREEN RECHECK slots — previously-green queries, oldest
-#       evidence first, so no §2 row ever rides a >2-round-old signal
-#       (VERDICT r02 item 6);
-# then the remaining never-checked (the next round's rotation head), then
-# the rest of the previously-green set, oldest evidence first.
-#
-# Round-13 window (VERDICT r12 item 1, prescription followed verbatim):
-# (a) the 4 gates that landed late in r12 and have never had a driver
-# row (judge full-sim green at r12 HEAD), plus (b) the 4 names whose
-# newest driver row is still r06 (deferred from the r12 window with a
-# committed targeted sim); then (c) 42 of the 46 r07-stale names,
-# alphabetical. 50 names total = the driver's window. The 4 r07-stale
-# names that don't fit (unpivot_measures + the three window_* shapes —
-# pure-expression gates with dense pytest coverage) head the r14
-# rotation together with gates NEW this round (registered immediately
-# after slot 50, per policy).
+# The correctness check of `__spark_entry__.queries()` covers its first
+# 50 names only, so dict order decides which queries get that check:
+# _ordered() puts the _PRIORITY names first, in list order, then every
+# other registered query in registration order.
 _PRIORITY: list[str] = [
     # ===== ROUND-13 WINDOW (the driver records exactly 50 rows) =====
     # (a) never-driver-checked (late-r12 additions):
@@ -151,96 +131,6 @@ _PRIORITY: list[str] = [
     "schema_evolution_merge",
     "embedding_pq_train_invariant",
 ]
-
-# Pre-rotation (round-2) window order, kept for the record of what r02
-# checked; everything here already has a green r01/r02 row and sorts
-# after the block above via _ordered()'s registry-order fallback.
-_R02_WINDOW: list[str] = [
-    # TPC-H shapes (never driver-checked in round 1)
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_region_supplier_volume",
-    "q6_forecast_revenue",
-    "q4_order_priority",
-    "q10_returned_items",
-    "q14_promo_revenue",
-    "q18_large_orders",
-    "q13_customer_distribution",
-    "q17_small_quantity_revenue",
-    "q19_disjunctive_predicates",
-    "q22_inactive_customers",
-    "q7_nation_volume_shipping",
-    "q15_top_supplier",
-    "q21_waiting_suppliers",
-    "q9_product_profit",
-    "q16_supplier_variety",
-    "q20_excess_stock_suppliers",
-    "q12_priority_shipping",
-    "q2_min_cost_supplier",
-    "q8_market_share",
-    "q11_important_stock",
-    # windows / time / joins / misc (never driver-checked in round 1)
-    "window_lag_delta",
-    "window_running_sum",
-    "window_range_frame_sum",
-    "window_ntile_percent_rank",
-    "time_window_tumbling",
-    "time_window_sliding",
-    "session_window_gap",
-    "asof_join_last_click",
-    "interval_join_sessions",
-    "time_bounded_self_join",
-    "agg_approx_distinct",
-    "sql_interface_revenue",
-    "cube_counts",
-    "nested_struct_map",
-    "pivot_status_counts",
-    "unpivot_measures",
-    "set_except_all",
-    "percentiles_exact",
-    "array_set_functions",
-    "string_function_suite",
-    # round-1 reds, fixed this round (need a fresh row to go green)
-    "collect_list_sorted",
-    "multimodal_frame_stats",
-    "pack_sequences",
-    # new or newly-oracled this round
-    "dedup_embedding_ann",
-    "dedup_minhash_lsh",
-    "dedup_simhash_containment",
-    # semantics changed this round (null-content exclusion) — re-check
-    "dedup_exact_docs",
-    # new training-pipeline queries (the window holds ~50; the overflow
-    # rotates in next round once the above have their green rows)
-    "text_quality_rules",
-    "decontaminate_ngram_overlap",
-    "sample_token_budget_per_source",
-    # round-2 late additions — next in line if the window extends, and the
-    # head of the round-3 rotation otherwise
-    "graph_bipartite_projection",
-    "text_dup_ngram_fraction",
-    "text_char_lm_score",
-    "regression_per_source",
-    "embedding_covariance",
-    "embedding_pca_label_means",
-    "heavy_hitter_terms",
-    "mad_robust_stats",
-    "dedup_semantic",
-    "dedup_incremental_fingerprints",
-    "sliding_distinct_users",
-    "markov_transition_matrix",
-    "source_share_gini",
-    "knn_label_accuracy",
-    "chi2_contingency_assoc",
-    "multimodal_audio_rms",
-    "percentiles_disc",
-    "running_distinct_types",
-    "grouped_agg_pandas_weighted_avg",
-    "kfold_assignment",
-    "text_linear_classifier_scores",
-    "sql_lateral_topk",
-]
-
 
 def _ordered() -> dict[str, QueryDef]:
     out = {n: QUERIES[n] for n in _PRIORITY if n in QUERIES}

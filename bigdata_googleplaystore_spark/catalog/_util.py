@@ -23,8 +23,10 @@ from __future__ import annotations
 
 import itertools
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources import scratch_dir
 
 # Unique suffixes for cache-preserving view bindings (see sql_bind).
 _BOUND_VIEW_SEQ = itertools.count()
@@ -79,3 +81,24 @@ def money_sum_sql(dec_expr_sql: str, scale: int = 2) -> str:
 def revenue_dec(ep: str = "l_extendedprice", disc: str = "l_discount") -> Column:
     """(extendedprice * (1 - discount)) as exact decimal."""
     return dec2(F.col(ep)) * dec2(F.lit(1) - F.col(disc), 4)
+
+
+def file_stream(
+    spark: SparkSession,
+    df: DataFrame,
+    tag: str,
+    sf_dir: str,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """`df` replayed as a bounded parquet file stream: written as 4 files
+    to `scratch_dir(tag, sf_dir)` (overwrite), its schema re-read from
+    the files, and a `readStream` opened over them. With
+    `max_files_per_trigger=1` the stream crosses at least 4
+    micro-batches, so per-batch state genuinely accumulates; without it
+    one trigger drains the whole source."""
+    src = scratch_dir(tag, sf_dir)
+    df.repartition(4).write.mode("overwrite").parquet(src)
+    reader = spark.readStream.schema(spark.read.parquet(src).schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(src)

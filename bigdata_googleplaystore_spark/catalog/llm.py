@@ -32,7 +32,7 @@ from ..functions.text import (
 )
 from ..functions.vectors import cosine_similarity
 from ..operators import dedup, similarity
-from ..sources import load_table, scratch_dir
+from ..sources import fresh_dirs, load_table, scratch_dir
 from .registry import register
 
 # DuckDB fragments mirroring functions/text.py exactly.
@@ -5258,23 +5258,22 @@ def sketch_cms_merge_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
     protocol: the corpus splits into four batches (doc_id % 4), each
     batch builds its own partial matrix and lands it in its own
     `_batch_id` partition via the shared write_batch_partition
-    protocol; the read path folds the partials CELL-WISE
-    (operators/sketches.cms_merge) and must answer point queries
-    IDENTICALLY to the single-shot matrix — count-min is linear, so
-    merge-then-query equals build-on-everything (the oracle IS the
-    single-shot derivation; any batch lost, duplicated, or folded with
-    min instead of sum hash-fails, and n_partials pins that four
-    partials physically existed). This is the sketch-as-incremental-
-    state shape: a day's tokens never reshuffle — each increment ships
-    a 2 KiB matrix."""
-    import shutil
-
+    protocol and commits it to the state table's manifest; the read
+    path folds the committed partials (manifest.snapshot_partials)
+    CELL-WISE (operators/sketches.cms_merge) and must answer point
+    queries IDENTICALLY to the single-shot matrix — count-min is
+    linear, so merge-then-query equals build-on-everything (the oracle
+    IS the single-shot derivation; any batch lost, duplicated, or
+    folded with min instead of sum hash-fails, and n_partials, read
+    from the manifest's batch ids, pins that four partials were
+    committed). This is the sketch-as-incremental-state shape: a day's
+    tokens never reshuffle — each increment ships a 2 KiB matrix."""
     from .. import streaming
     from ..operators import sketches
+    from ..streaming import manifest
 
     d = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    state = scratch_dir("cmsstate", sf_dir)
-    shutil.rmtree(state, ignore_errors=True)
+    [state] = fresh_dirs(sf_dir, "cmsstate")
     for b in range(4):
         batch = d.where(F.pmod(F.col("doc_id"), F.lit(4)) == b)
         btoks = batch.select(F.explode(tokens(F.col("text"))).alias("tok")).where(
@@ -5285,9 +5284,9 @@ def sketch_cms_merge_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
             bcounts, "tok", "n", depth=4, width=512, salt="cms"
         )
         streaming.write_batch_partition(bmatrix, state, b)
-    raw = spark.read.parquet(state)
-    n_partials = raw.select("_batch_id").distinct().count()
-    merged = sketches.cms_merge(raw.drop("_batch_id"))
+        manifest.commit_batch(spark, state, b)
+    n_partials = len(manifest.read_manifest(spark, state)["batch_ids"])
+    merged = sketches.cms_merge(manifest.snapshot_partials(spark, state))
 
     toks = d.select(F.explode(tokens(F.col("text"))).alias("tok")).where(
         F.col("tok") != ""
@@ -5514,31 +5513,33 @@ def sketch_kmv_merge_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV MERGEABILITY through the streaming state-table protocol: the
     corpus splits into four batches (doc_id % 4), each batch builds its
     OWN per-source KMV sketch and lands it in its own `_batch_id`
-    partition; the read path union-merges the partial sketches
-    (operators/sketches.kmv_merge — k smallest of the deduplicated
-    hash union) and must estimate IDENTICALLY to the single-shot
-    sketch, because "k smallest of a union" = "k smallest of (k
-    smallest of each part)" — the semilattice law that makes the
-    sketch a per-batch incremental state: a day's new documents ship
-    k hashes per group, never re-scan history. The oracle is the
-    single-shot SQL derivation (merge exactness means they coincide);
-    n_partials pins that four partials physically existed. Duplicate
-    texts across batches dedupe by full-hash identity at merge."""
-    import shutil
-
+    partition, committed to the manifest; the read path union-merges
+    the committed partials (manifest.snapshot_partials, then
+    operators/sketches.kmv_merge — k smallest of the deduplicated hash
+    union) and must estimate IDENTICALLY to the single-shot sketch,
+    because "k smallest of a union" = "k smallest of (k smallest of
+    each part)" — the semilattice law that makes the sketch a
+    per-batch incremental state: a day's new documents ship k hashes
+    per group, never re-scan history. The oracle is the single-shot
+    SQL derivation (merge exactness means they coincide); n_partials,
+    read from the manifest's batch ids, pins that four partials were
+    committed. Duplicate texts across batches dedupe by full-hash
+    identity at merge."""
     from .. import streaming
     from ..operators import sketches
+    from ..streaming import manifest
 
     d = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    state = scratch_dir("kmvstate", sf_dir)
-    shutil.rmtree(state, ignore_errors=True)
+    [state] = fresh_dirs(sf_dir, "kmvstate")
     for b in range(4):
         batch = d.where(F.pmod(F.col("doc_id"), F.lit(4)) == b)
         sk = sketches.kmv_sketch(batch, ["source"], "text", k=64)
         streaming.write_batch_partition(sk, state, b)
-    raw = spark.read.parquet(state)
-    n_partials = raw.select("_batch_id").distinct().count()
-    merged = sketches.kmv_merge([raw.drop("_batch_id")], ["source"], k=64)
+        manifest.commit_batch(spark, state, b)
+    n_partials = len(manifest.read_manifest(spark, state)["batch_ids"])
+    merged = sketches.kmv_merge(
+        [manifest.snapshot_partials(spark, state)], ["source"], k=64
+    )
     est = sketches.kmv_estimate(merged, ["source"], k=64)
     exact = d.groupBy("source").agg(F.countDistinct("text").alias("n_exact"))
     return exact.join(est, "source").select(
@@ -5597,10 +5598,7 @@ def sim_ann_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = e.filter(F.col("vec_id") % 3 != 0)
     delta = e.filter(F.col("vec_id") % 3 == 0)
-    idx = scratch_dir("ivf_index_append", sf_dir)
-    import shutil
-
-    shutil.rmtree(idx, ignore_errors=True)
+    [idx] = fresh_dirs(sf_dir, "ivf_index_append")
     similarity.write_ivf_index(base, idx, "vec_id", "embedding", n_cells=8, iters=2)
     similarity.append_ivf_assignments(spark, idx, delta, "vec_id", "embedding")
     cents, assigned = similarity.read_ivf_index(spark, idx)
@@ -5839,7 +5837,6 @@ def dedup_ingest_on_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape that keeps ingestion O(delta): the corpus is never
     re-shingled, the index append is O(|survivors|), and the admission
     decision reads only the buckets the batch touches."""
-    import shutil
     from ..streaming import manifest
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -5859,10 +5856,7 @@ def dedup_ingest_on_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    idx = scratch_dir("ingest_idx", sf_dir)
-    table = scratch_dir("ingest_tbl", sf_dir)
-    for p in (idx, table):
-        shutil.rmtree(p, ignore_errors=True)
+    idx, table = fresh_dirs(sf_dir, "ingest_idx", "ingest_tbl")
     dedup.write_jaccard_index(base, idx, "doc_id", "text", n=3, buckets=8)
     manifest.write_and_commit_batch(spark, base, table, 0)
     dedup.ingest_unless_duplicate(

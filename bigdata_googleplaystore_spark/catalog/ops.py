@@ -14,9 +14,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources import load_table, manifest_log, scratch_dir
+from ..sources import fresh_dirs, load_table, manifest_log, scratch_dir
 from ..sources.storage import HadoopBackend
-from ._util import REVENUE_DEC_SQL, dec2, money_sum, money_sum_sql, revenue_dec
+from ._util import (
+    REVENUE_DEC_SQL,
+    dec2,
+    file_stream,
+    money_sum,
+    money_sum_sql,
+    revenue_dec,
+)
 from .registry import register
 
 
@@ -484,15 +491,11 @@ def pydatasource_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     atomic renames at commit — task retries overwrite their own temp
     file and abort() removes stragglers, so speculative execution and
     failure replay never produce torn or duplicate output."""
-    import shutil
-
     from ..sources import pydatasource
 
     pydatasource.register(spark)
-    # (tag, sf)-keyed scratch dir; cleared so a re-run can't read stale
-    # part files from a previous layout
-    out = scratch_dir("pydsw", sf_dir)
-    shutil.rmtree(out, ignore_errors=True)
+    # the sink appends: a re-run must not read a previous run's files
+    [out] = fresh_dirs(sf_dir, "pydsw")
     src = (
         spark.read.format("docgen")
         .option("rows", 2000)
@@ -2004,10 +2007,7 @@ def stream_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .. import streaming
 
     batch = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    src = scratch_dir("sess", sf_dir)
-    batch.repartition(4).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
+    stream = file_stream(spark, batch, "sess", sf_dir)
     sessions = streaming.sessionized(stream, "10 minutes", watermark="1 hour")
     return streaming.run_stream_to_memory(sessions, "cat_stream_sessions")
 
@@ -5361,11 +5361,9 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded drain, so complete-mode output == the batch aggregate."""
     from .. import streaming
 
-    batch = load_table(spark, sf_dir, "events")
-    src = scratch_dir("tumbling", sf_dir)
-    batch.repartition(4).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
+    stream = file_stream(
+        spark, load_table(spark, sf_dir, "events"), "tumbling", sf_dir
+    )
     counts = streaming.windowed_counts(stream, "1 hour", watermark="87600 hours")
     drained = streaming.run_stream_to_memory(
         counts, "cat_stream_tumbling", "complete"
@@ -5403,18 +5401,10 @@ def stream_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions (one per shuffle partition of the stateful operator),
     so inspection parallelizes like any other scan and never replays
     the stream; cost is O(|distinct keys|), not O(events)."""
-    import shutil
-
     batch = load_table(spark, sf_dir, "events").select("event_type")
-    src = scratch_dir("statestore_src", sf_dir)
-    ckpt = scratch_dir("statestore_ckpt", sf_dir)
-    # a reused checkpoint pins the OLD run's offsets/state; the gate
-    # measures a fresh drain
-    shutil.rmtree(ckpt, ignore_errors=True)
-    batch.repartition(4).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
+    [ckpt] = fresh_dirs(sf_dir, "statestore_ckpt")
     counts = (
-        spark.readStream.schema(schema).parquet(src)
+        file_stream(spark, batch, "statestore_src", sf_dir)
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
@@ -5478,8 +5468,6 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs O(1) (a counter bump) instead of a state rebuild. The gate
     pins that eviction is REAL (the straggler finds no state to rejoin)
     and exact-once emission holds across watermark advances."""
-    import shutil
-
     from .. import streaming
 
     e = load_table(spark, sf_dir, "events").select("ts")
@@ -5516,8 +5504,7 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             "assumption is violated (not an engine bug)"
         )
 
-    src = scratch_dir("wmlate", sf_dir)
-    shutil.rmtree(src, ignore_errors=True)
+    [src] = fresh_dirs(sf_dir, "wmlate")
     # micro-batch 1: day-one events + the newest event (advances the
     # watermark to mx - 1h once the batch commits)
     e.filter((F.col("ts") < F.lit(cutoff)) | (F.col("ts") == F.lit(mx))).write.parquet(
@@ -6468,10 +6455,7 @@ def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type"
     )
-    src = scratch_dir("dedup", sf_dir)
-    batch.unionByName(batch).repartition(4).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
+    stream = file_stream(spark, batch.unionByName(batch), "dedup", sf_dir)
     dd = streaming.dedup_events(stream, ["event_id"], watermark="87600 hours")
     counts = dd.groupBy("event_type").agg(F.count("*").alias("n_events"))
     drained = streaming.run_stream_to_memory(
@@ -6540,14 +6524,7 @@ def stream_stateful_topk_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .. import streaming
 
     batch = load_table(spark, sf_dir, "events").select("user_id", "event_type")
-    src = scratch_dir("topk", sf_dir)
-    batch.repartition(4).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = file_stream(spark, batch, "topk", sf_dir, max_files_per_trigger=1)
     snaps = streaming.user_top_types_stream_v1(stream, k=3)
     drained = streaming.run_stream_to_memory(
         snaps, "cat_stream_topk", "update"
@@ -6593,27 +6570,13 @@ def stream_incremental_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     order). History is never re-read: each refresh shuffles |keys| rows
     per batch — the same contract incremental_agg_merge gates in
     batch."""
-    import shutil
-
     from .. import streaming
 
     batch = load_table(spark, sf_dir, "events").select(
         "event_type", dec2(F.col("value")).alias("v")
     )
-    src = scratch_dir("incrview", sf_dir)
-    batch.repartition(4).write.mode("overwrite").parquet(src)
-    state = scratch_dir("incrview_state", sf_dir)
-    ckpt = scratch_dir("incrview_ckpt", sf_dir)
-    # fresh state/checkpoint per invocation: a stale checkpoint against a
-    # rewritten source would mark every file already-committed
-    shutil.rmtree(state, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = file_stream(spark, batch, "incrview", sf_dir, max_files_per_trigger=1)
+    state, ckpt = fresh_dirs(sf_dir, "incrview_state", "incrview_ckpt")
     streaming.run_stream_incremental_agg(stream, ["event_type"], "v", state, ckpt)
     view = streaming.read_incremental_state(spark, state)
     return view.select(
@@ -6662,8 +6625,6 @@ def mv_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     that version's partitions (asserted in tests/test_plans.py) — a
     version read costs O(partials up to v), never O(all history), and
     each backfill batch shuffles only its own |keys| partial rows."""
-    import shutil
-
     from .. import streaming
     from ..operators import incremental
     from ..streaming import manifest
@@ -6671,8 +6632,7 @@ def mv_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", dec2(F.col("value")).alias("v")
     )
-    state = scratch_dir("ttravel_state", sf_dir)
-    shutil.rmtree(state, ignore_errors=True)
+    [state] = fresh_dirs(sf_dir, "ttravel_state")
     # Backfill: each batch lands its own immutable partition through
     # the SAME writer and commit the streaming MVs use.
     for bid in range(4):
@@ -6733,8 +6693,6 @@ def stream_cdc_signed_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeds are the norm, not append-only streams, and the signed state
     means retractions cost the same |keys|-row shuffle per batch as
     inserts — no compensating reprocessing, no history re-read."""
-    import shutil
-
     from .. import streaming
 
     events = load_table(spark, sf_dir, "events").select(
@@ -6745,20 +6703,8 @@ def stream_cdc_signed_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         "_mult", F.lit(-1)
     )
     feed = inserts.unionByName(deletes).drop("user_id")
-    src = scratch_dir("cdcview", sf_dir)
-    feed.repartition(4).write.mode("overwrite").parquet(src)
-    state = scratch_dir("cdcview_state", sf_dir)
-    ckpt = scratch_dir("cdcview_ckpt", sf_dir)
-    # fresh state/checkpoint per invocation: a stale checkpoint against a
-    # rewritten source would mark every file already-committed
-    shutil.rmtree(state, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = file_stream(spark, feed, "cdcview", sf_dir, max_files_per_trigger=1)
+    state, ckpt = fresh_dirs(sf_dir, "cdcview_state", "cdcview_ckpt")
     streaming.run_stream_signed_agg(stream, ["event_type"], "v", state, ckpt)
     view = streaming.read_signed_state(spark, state)
     return view.select(
@@ -6816,8 +6762,6 @@ def stream_cdc_minmax_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch| rows and the fold shuffles state rows only (the
     batch-face siblings: incremental_minmax/distinct/topn_view_
     retractions)."""
-    import shutil
-
     from .. import streaming
 
     events = load_table(spark, sf_dir, "events").select("event_type", "value")
@@ -6826,18 +6770,8 @@ def stream_cdc_minmax_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         "_mult", F.lit(-1)
     )
     feed = inserts.unionByName(deletes)
-    src = scratch_dir("cdcminmax", sf_dir)
-    feed.repartition(4).write.mode("overwrite").parquet(src)
-    state = scratch_dir("cdcminmax_state", sf_dir)
-    ckpt = scratch_dir("cdcminmax_ckpt", sf_dir)
-    shutil.rmtree(state, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = file_stream(spark, feed, "cdcminmax", sf_dir, max_files_per_trigger=1)
+    state, ckpt = fresh_dirs(sf_dir, "cdcminmax_state", "cdcminmax_ckpt")
     streaming.run_stream_multiset_agg(
         stream, ["event_type"], "value", state, ckpt
     )
@@ -6898,8 +6832,6 @@ def mv_state_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound; compaction caps read fan-in at O(1 base + recent batches)
     while itself shuffling only |keys| partial rows, never raw
     history."""
-    import shutil
-
     from .. import streaming
     from ..operators import incremental
     from ..streaming import manifest
@@ -6907,8 +6839,7 @@ def mv_state_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    state = scratch_dir("compactstate", sf_dir)
-    shutil.rmtree(state, ignore_errors=True)
+    [state] = fresh_dirs(sf_dir, "compactstate")
     for b in range(4):
         batch = o.filter(F.col("o_orderkey") % 4 == b).drop("o_orderkey")
         streaming.write_batch_partition(
@@ -6969,10 +6900,7 @@ def stream_static_enrich_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("user_id") % 4 == 0, "gold").otherwise("basic"),
         )
     )
-    src = scratch_dir("enrich", sf_dir)
-    e.repartition(4).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
+    stream = file_stream(spark, e, "enrich", sf_dir)
     enriched = streaming.enrich_stream_static(stream, dim, "user_id", ["tier"])
     drained = streaming.run_stream_to_memory(
         enriched, "cat_stream_enrich", "append"
@@ -7774,8 +7702,6 @@ def mv_manifest_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     committers resolve by rename-wins optimistic concurrency; GC is
     safe-by-construction because retention is defined over manifests,
     not mtimes."""
-    import shutil
-
     from .. import streaming
     from ..operators import incremental
     from ..streaming import manifest
@@ -7783,8 +7709,7 @@ def mv_manifest_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = scratch_dir("manifeststate", sf_dir)
-    shutil.rmtree(table, ignore_errors=True)
+    [table] = fresh_dirs(sf_dir, "manifeststate")
     for b in range(4):
         batch = o.filter(F.col("o_orderkey") % 4 == b).drop("o_orderkey")
         streaming.write_batch_partition(
@@ -7871,8 +7796,6 @@ def stream_manifest_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     per micro-batch, each version's id set a strict superset of the
     previous (monotone publish order), and the orphan visible to the
     directory listing but absent from the snapshot."""
-    import shutil
-
     from .. import streaming
     from ..operators import incremental
     from ..streaming import manifest
@@ -7880,17 +7803,11 @@ def stream_manifest_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = load_table(spark, sf_dir, "events").select(
         "event_type", dec2(F.col("value")).alias("v")
     )
-    src = scratch_dir("manifeststream", sf_dir)
-    batch.repartition(4).write.mode("overwrite").parquet(src)
-    table = scratch_dir("manifeststream_state", sf_dir)
-    ckpt = scratch_dir("manifeststream_ckpt", sf_dir)
-    shutil.rmtree(table, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    stream = file_stream(
+        spark, batch, "manifeststream", sf_dir, max_files_per_trigger=1
+    )
+    table, ckpt = fresh_dirs(
+        sf_dir, "manifeststream_state", "manifeststream_ckpt"
     )
     streaming.run_stream_incremental_agg(stream, ["event_type"], "v", table, ckpt)
     versions = manifest.list_versions(spark, table)
@@ -7958,16 +7875,13 @@ def mv_manifest_row_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the difference between deleting a user's rows by
     rewriting a petabyte table and landing a kilobyte key file — with
     the anti-join cost bounded by periodic copy-on-write catch-up."""
-    import shutil
-
     from .. import streaming
     from ..streaming import manifest
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = scratch_dir("mordeletes", sf_dir)
-    shutil.rmtree(table, ignore_errors=True)
+    [table] = fresh_dirs(sf_dir, "mordeletes")
     for b in range(3):
         streaming.write_batch_partition(
             o.filter(F.col("o_orderkey") % 3 == b), table, b
@@ -8060,16 +7974,13 @@ def mv_manifest_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     any leakage across the version boundary — a batch-0/1 row as
     insert, a batch-2 row as delete, a masked insert surfacing —
     changes a group count and hash-fails."""
-    import shutil
-
     from .. import streaming
     from ..streaming import manifest
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
-    table = scratch_dir("changefeed", sf_dir)
-    shutil.rmtree(table, ignore_errors=True)
+    [table] = fresh_dirs(sf_dir, "changefeed")
     for b in range(2):
         streaming.write_batch_partition(
             o.filter(F.col("o_orderkey") % 3 == b), table, b
@@ -8132,15 +8043,12 @@ def mv_manifest_zone_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: a year-partitioned-by-arrival table answers a one-month
     query by opening 1/48th of its batches, decided in O(|manifest|)
     driver time."""
-    import shutil
-
     from ..streaming import manifest
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderdate", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = scratch_dir("zoneskip", sf_dir)
-    shutil.rmtree(table, ignore_errors=True)
+    [table] = fresh_dirs(sf_dir, "zoneskip")
     bounds = ["1997-01-01", "1999-01-01", "2000-07-01"]
     conds = [
         F.col("o_orderdate") < bounds[0],
@@ -8208,16 +8116,13 @@ def mv_manifest_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     matched rows mask at read and drop physically at the next
     copy-on-write catch-up — vs rewriting every file containing a
     matched key."""
-    import shutil
-
     from .. import streaming
     from ..streaming import manifest
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = scratch_dir("morupsert", sf_dir)
-    shutil.rmtree(table, ignore_errors=True)
+    [table] = fresh_dirs(sf_dir, "morupsert")
     for b in range(2):
         streaming.write_batch_partition(
             o.filter(F.col("o_orderkey") % 2 == b), table, b
@@ -8294,15 +8199,12 @@ def mv_manifest_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: the needle query reads O(matching batches) with the
     decision made from kilobyte sidecars — no data I/O at all for the
     skipped 87.5%."""
-    import shutil
-
     from ..streaming import manifest
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = scratch_dir("bloomlookup", sf_dir)
-    shutil.rmtree(table, ignore_errors=True)
+    [table] = fresh_dirs(sf_dir, "bloomlookup")
     for b in range(8):
         manifest.write_and_commit_batch(
             spark,
@@ -8359,15 +8261,12 @@ def mv_manifest_metadata_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-upsert truth. `metadata_exact` folds all four phase checks;
     n_rows is phase-1's metadata answer against the oracle's real
     count."""
-    import shutil
-
     from ..streaming import manifest
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = scratch_dir("metacount", sf_dir)
-    shutil.rmtree(table, ignore_errors=True)
+    [table] = fresh_dirs(sf_dir, "metacount")
     for b in range(4):
         manifest.write_and_commit_batch(
             spark, o.filter(F.col("o_orderkey") % 4 == b), table, b
@@ -8388,8 +8287,7 @@ def mv_manifest_metadata_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # second table: the UPSERT path (finite cutoff) + compaction DOES
     # restore metadata-exactness
-    table2 = scratch_dir("metacount2", sf_dir)
-    shutil.rmtree(table2, ignore_errors=True)
+    [table2] = fresh_dirs(sf_dir, "metacount2")
     for b in range(2):
         manifest.write_and_commit_batch(
             spark, o.filter(F.col("o_orderkey") % 2 == b), table2, b
@@ -8452,16 +8350,13 @@ def mv_manifest_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: recovery from a bad MERGE/DELETE is one metadata
     commit, not a restore-from-backup — the operational property that
     justifies the manifest layer's existence on the worst day."""
-    import shutil
-
     from .. import streaming
     from ..streaming import manifest
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = scratch_dir("rollback", sf_dir)
-    shutil.rmtree(table, ignore_errors=True)
+    [table] = fresh_dirs(sf_dir, "rollback")
     for b in range(2):
         streaming.write_batch_partition(
             o.filter(F.col("o_orderkey") % 2 == b), table, b
@@ -8531,16 +8426,13 @@ def mv_manifest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     read of the same snapshot does NOT see o_channel when batch 0's
     footer wins (or sees it when batch 1's wins) — either way its
     schema is one batch's, not the union."""
-    import shutil
-
     from .. import streaming
     from ..streaming import manifest
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
-    table = scratch_dir("schemaevo", sf_dir)
-    shutil.rmtree(table, ignore_errors=True)
+    [table] = fresh_dirs(sf_dir, "schemaevo")
     streaming.write_batch_partition(
         o.filter(F.col("o_orderkey") % 2 == 0), table, 0
     )
@@ -8607,16 +8499,13 @@ def mv_manifest_forget_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle. At 100 TB the flow is: a kilobyte key file now, one
     rewrite of the affected data at the next maintenance window, GC —
     never an emergency full-table rewrite in the request path."""
-    import shutil
-
     from .. import streaming
     from ..streaming import manifest
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = scratch_dir("forget", sf_dir)
-    shutil.rmtree(table, ignore_errors=True)
+    [table] = fresh_dirs(sf_dir, "forget")
     for b in range(3):
         streaming.write_batch_partition(
             o.filter(F.col("o_orderkey") % 3 == b), table, b
@@ -8700,8 +8589,6 @@ def stream_from_manifest_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     resumption, compaction-skip on the tail, initial-snapshot-after-
     compaction, retention-loss errors, and the delete refusal are
     unit-gated in tests/test_manifest.py."""
-    import shutil
-
     from .. import streaming
     from ..sources import manifest_stream
     from ..streaming import manifest
@@ -8709,37 +8596,63 @@ def stream_from_manifest_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = scratch_dir("msrc", sf_dir)
-    sink = scratch_dir("msrc_sink", sf_dir)
-    ckpt = scratch_dir("msrc_ckpt", sf_dir)
-    for d in (table, sink, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
+    table, sink, ckpt = fresh_dirs(sf_dir, "msrc", "msrc_sink", "msrc_ckpt")
     for b in range(3):
         streaming.write_batch_partition(
             o.filter(F.col("o_orderkey") % 3 == b), table, b
         )
         manifest.commit_batch(spark, table, b)
     manifest_stream.register(spark)
-    q = (
+    source = (
         spark.readStream.format("manifest_stream")
-        .schema("o_orderkey bigint, o_orderpriority string, v decimal(12,2)")
+        .schema(_ORDERS_LOG_COLS)
         .option("path", table)
         .load()
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .start()
     )
-    q.processAllAvailable()
-    q.stop()
     return (
-        spark.read.parquet(sink)
+        streaming.run_stream_to_parquet(source, sink, ckpt)
         .groupBy("o_orderpriority")
         .agg(
             F.count("*").cast("bigint").alias("n_rows"),
             F.round(F.sum("v"), 2).cast("double").alias("total_price"),
         )
     )
+
+
+# Schema of the orders rows stream_from_manifest_source and
+# _commit_orders_change_log commit.
+_ORDERS_LOG_COLS = "o_orderkey bigint, o_orderpriority string, v decimal(12,2)"
+
+
+def _commit_orders_change_log(spark: SparkSession, sf_dir: str, table: str) -> None:
+    """Commit the orders change log the change-feed gates read, as
+    versions 0-3 of the empty manifest table `table`: batches 0 and 1
+    (o_orderkey % 3), then a cutoff-1 delete of every o_orderkey ending
+    in 7, which masks only those two batches, then batch 2, which the
+    delete must not touch. Rows carry `_ORDERS_LOG_COLS`."""
+    from .. import streaming
+    from ..streaming import manifest
+
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
+    )
+
+    def add_batch(b: int) -> None:
+        streaming.write_batch_partition(
+            o.filter(F.col("o_orderkey") % 3 == b), table, b
+        )
+        manifest.commit_batch(spark, table, b)
+
+    add_batch(0)
+    add_batch(1)
+    manifest.commit_deletes(
+        spark,
+        table,
+        o.filter(F.col("o_orderkey") % 10 == 7).select("o_orderkey"),
+        delete_id=0,
+        cutoff=1,
+    )
+    add_batch(2)
 
 
 @register(
@@ -8788,55 +8701,21 @@ def stream_cdf_from_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrival, upsert replay parity with the batch feed, compaction
     skip, and the initial-snapshot mode are unit-gated in
     tests/test_manifest.py."""
-    import shutil
-
     from .. import streaming
     from ..sources import manifest_cdf_stream
-    from ..streaming import manifest
 
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
-    )
-    table = scratch_dir("mcdf", sf_dir)
-    sink = scratch_dir("mcdf_sink", sf_dir)
-    ckpt = scratch_dir("mcdf_ckpt", sf_dir)
-    for d in (table, sink, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    for b in range(2):
-        streaming.write_batch_partition(
-            o.filter(F.col("o_orderkey") % 3 == b), table, b
-        )
-        manifest.commit_batch(spark, table, b)
-    manifest.commit_deletes(
-        spark,
-        table,
-        o.filter(F.col("o_orderkey") % 10 == 7).select("o_orderkey"),
-        delete_id=0,
-        cutoff=1,
-    )
-    streaming.write_batch_partition(
-        o.filter(F.col("o_orderkey") % 3 == 2), table, 2
-    )
-    manifest.commit_batch(spark, table, 2)
+    table, sink, ckpt = fresh_dirs(sf_dir, "mcdf", "mcdf_sink", "mcdf_ckpt")
+    _commit_orders_change_log(spark, sf_dir, table)
     manifest_cdf_stream.register(spark)
-    q = (
+    changes = (
         spark.readStream.format("manifest_cdf_stream")
-        .schema(
-            "o_orderkey bigint, o_orderpriority string, v decimal(12,2),"
-            " _change_type string"
-        )
+        .schema(f"{_ORDERS_LOG_COLS}, _change_type string")
         .option("path", table)
         .option("startingVersion", "0")
         .load()
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .start()
     )
-    q.processAllAvailable()
-    q.stop()
     return (
-        spark.read.parquet(sink)
+        streaming.run_stream_to_parquet(changes, sink, ckpt)
         .groupBy("_change_type", "o_orderpriority")
         .agg(
             F.count("*").cast("bigint").alias("n_rows"),
@@ -8903,8 +8782,6 @@ def stream_cdf_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic bumps; a mispaired image, a lost preimage, or a
     wrong interval boundary shifts a (valid_from, is_current) bucket
     and hash-fails."""
-    import shutil
-
     from .. import streaming
     from ..sources import manifest_cdf_stream
     from ..streaming import manifest
@@ -8913,11 +8790,7 @@ def stream_cdf_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("k"),
         dec2(F.col("o_totalprice")).alias("v"),
     )
-    table = scratch_dir("scd2", sf_dir)
-    sink = scratch_dir("scd2_sink", sf_dir)
-    ckpt = scratch_dir("scd2_ckpt", sf_dir)
-    for d in (table, sink, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
+    table, sink, ckpt = fresh_dirs(sf_dir, "scd2", "scd2_sink", "scd2_ckpt")
     streaming.write_batch_partition(o.filter(F.col("k") % 3 == 0), table, 0)
     manifest.commit_batch(spark, table, 0)
     manifest.commit_upsert(
@@ -8931,7 +8804,7 @@ def stream_cdf_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["k"], batch_id=2, delete_id=1,
     )
     manifest_cdf_stream.register(spark)
-    q = (
+    changes = (
         spark.readStream.format("manifest_cdf_stream")
         .schema("k bigint, v decimal(12,2), _change_type string,"
                 " _commit_version long")
@@ -8939,14 +8812,8 @@ def stream_cdf_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("startingVersion", "0")
         .option("keyColumns", "k")
         .load()
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .start()
     )
-    q.processAllAvailable()
-    q.stop()
-    log = spark.read.parquet(sink).withColumn(
+    log = streaming.run_stream_to_parquet(changes, sink, ckpt).withColumn(
         "is_open",
         F.col("_change_type").isin("insert", "update_postimage"),
     )
@@ -9009,40 +8876,14 @@ def batch_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (orderkeys ending in 7 from the first two batches only) and
     version 3's append must emit the third batch — rows from versions
     0-1 must NOT appear, which the two-branch oracle hash-pins."""
-    import shutil
-
-    from .. import streaming
     from ..sources import manifest_cdf_stream
-    from ..streaming import manifest
 
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
-    )
-    table = scratch_dir("btc", sf_dir)
-    shutil.rmtree(table, ignore_errors=True)
-    for b in range(2):
-        streaming.write_batch_partition(
-            o.filter(F.col("o_orderkey") % 3 == b), table, b
-        )
-        manifest.commit_batch(spark, table, b)
-    manifest.commit_deletes(
-        spark,
-        table,
-        o.filter(F.col("o_orderkey") % 10 == 7).select("o_orderkey"),
-        delete_id=0,
-        cutoff=1,
-    )
-    streaming.write_batch_partition(
-        o.filter(F.col("o_orderkey") % 3 == 2), table, 2
-    )
-    manifest.commit_batch(spark, table, 2)
+    [table] = fresh_dirs(sf_dir, "btc")
+    _commit_orders_change_log(spark, sf_dir, table)
     manifest_cdf_stream.register(spark)
     changes = (
         spark.read.format("manifest_cdf_stream")
-        .schema(
-            "o_orderkey bigint, o_orderpriority string, v decimal(12,2),"
-            " _change_type string"
-        )
+        .schema(f"{_ORDERS_LOG_COLS}, _change_type string")
         .option("path", table)
         .option("startingVersion", "2")
         .option("endingVersion", "3")
@@ -9089,15 +8930,12 @@ def mv_manifest_timestamp_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates and hash-fails the union oracle."""
     import time
 
-    import shutil
-
     from ..streaming import manifest
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = scratch_dir("tstravel", sf_dir)
-    shutil.rmtree(table, ignore_errors=True)
+    [table] = fresh_dirs(sf_dir, "tstravel")
     manifest.write_and_commit_batch(
         spark, o.filter(F.col("o_orderkey") % 2 == 0), table, 0
     )
@@ -9155,16 +8993,13 @@ def mv_manifest_conditional_put(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this backend is the difference between a commit protocol
     that needs HDFS rename semantics and one that runs on any object
     store with a conditional PUT."""
-    import shutil
-
     from .. import streaming
     from ..streaming import manifest
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = scratch_dir("cput", sf_dir)
-    shutil.rmtree(table, ignore_errors=True)
+    [table] = fresh_dirs(sf_dir, "cput")
     store = manifest.MockObjectStore()
     backend = manifest.ConditionalPutCommitBackend(store)
     rival = manifest.ConditionalPutCommitBackend(store)
@@ -9248,43 +9083,16 @@ def stream_cdf_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate(current snapshot), with the change feed costing O(delta)
     per trigger while a snapshot recompute costs O(table). At 100 TB
     that difference is the reason change feeds exist."""
-    import shutil
-
     from .. import streaming
     from ..sources import manifest_cdf_stream
     from ..streaming import manifest
 
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
-    )
-    table = scratch_dir("cdfmv", sf_dir)
-    state = scratch_dir("cdfmv_state", sf_dir)
-    ckpt = scratch_dir("cdfmv_ckpt", sf_dir)
-    for d in (table, state, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    for b in range(2):
-        streaming.write_batch_partition(
-            o.filter(F.col("o_orderkey") % 3 == b), table, b
-        )
-        manifest.commit_batch(spark, table, b)
-    manifest.commit_deletes(
-        spark,
-        table,
-        o.filter(F.col("o_orderkey") % 10 == 7).select("o_orderkey"),
-        delete_id=0,
-        cutoff=1,
-    )
-    streaming.write_batch_partition(
-        o.filter(F.col("o_orderkey") % 3 == 2), table, 2
-    )
-    manifest.commit_batch(spark, table, 2)
+    table, state, ckpt = fresh_dirs(sf_dir, "cdfmv", "cdfmv_state", "cdfmv_ckpt")
+    _commit_orders_change_log(spark, sf_dir, table)
     manifest_cdf_stream.register(spark)
     changes = (
         spark.readStream.format("manifest_cdf_stream")
-        .schema(
-            "o_orderkey bigint, o_orderpriority string, v decimal(12,2),"
-            " _change_type string"
-        )
+        .schema(f"{_ORDERS_LOG_COLS}, _change_type string")
         .option("path", table)
         .option("startingVersion", "0")
         .load()
@@ -9356,43 +9164,17 @@ def stream_cdf_table_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag-pinned by comparing replica rows to the source snapshot read
     directly. At 100 TB the feed ships O(changed rows + delete keys)
     per trigger; the naive alternative ships the table."""
-    import shutil
-
-    from .. import streaming
     from ..sources import manifest_cdf_stream
     from ..streaming import manifest
 
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
+    table, replica, ckpt = fresh_dirs(
+        sf_dir, "cdfrep_src", "cdfrep_dst", "cdfrep_ckpt"
     )
-    table = scratch_dir("cdfrep_src", sf_dir)
-    replica = scratch_dir("cdfrep_dst", sf_dir)
-    ckpt = scratch_dir("cdfrep_ckpt", sf_dir)
-    for d in (table, replica, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    for b in range(2):
-        streaming.write_batch_partition(
-            o.filter(F.col("o_orderkey") % 3 == b), table, b
-        )
-        manifest.commit_batch(spark, table, b)
-    manifest.commit_deletes(
-        spark,
-        table,
-        o.filter(F.col("o_orderkey") % 10 == 7).select("o_orderkey"),
-        delete_id=0,
-        cutoff=1,
-    )
-    streaming.write_batch_partition(
-        o.filter(F.col("o_orderkey") % 3 == 2), table, 2
-    )
-    manifest.commit_batch(spark, table, 2)
+    _commit_orders_change_log(spark, sf_dir, table)
     manifest_cdf_stream.register(spark)
     changes = (
         spark.readStream.format("manifest_cdf_stream")
-        .schema(
-            "o_orderkey bigint, o_orderpriority string, v decimal(12,2),"
-            " _change_type string, _commit_version long"
-        )
+        .schema(f"{_ORDERS_LOG_COLS}, _change_type string, _commit_version long")
         .option("path", table)
         .option("startingVersion", "0")
         .load()
@@ -9497,8 +9279,6 @@ def stream_cdf_update_pairing(spark: SparkSession, sf_dir: str) -> DataFrame:
     1) as 'update_postimage' — a mispair, a missed preimage, or a
     postimage carrying the old value all hash-fail against the
     three-branch oracle."""
-    import shutil
-
     from .. import streaming
     from ..sources import manifest_cdf_stream
     from ..streaming import manifest
@@ -9506,11 +9286,7 @@ def stream_cdf_update_pairing(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = scratch_dir("cdfpair", sf_dir)
-    sink = scratch_dir("cdfpair_sink", sf_dir)
-    ckpt = scratch_dir("cdfpair_ckpt", sf_dir)
-    for d in (table, sink, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
+    table, sink, ckpt = fresh_dirs(sf_dir, "cdfpair", "cdfpair_sink", "cdfpair_ckpt")
     streaming.write_batch_partition(
         o.filter(F.col("o_orderkey") % 3 == 0), table, 0
     )
@@ -9526,22 +9302,16 @@ def stream_cdf_update_pairing(spark: SparkSession, sf_dir: str) -> DataFrame:
         delete_id=0,
     )
     manifest_cdf_stream.register(spark)
-    q = (
+    changes = (
         spark.readStream.format("manifest_cdf_stream")
         .schema("o_orderkey bigint, v decimal(12,2), _change_type string")
         .option("path", table)
         .option("startingVersion", "0")
         .option("keyColumns", "o_orderkey")
         .load()
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .start()
     )
-    q.processAllAvailable()
-    q.stop()
     return (
-        spark.read.parquet(sink)
+        streaming.run_stream_to_parquet(changes, sink, ckpt)
         .groupBy("_change_type")
         .agg(
             F.count("*").cast("bigint").alias("n_rows"),
@@ -9583,16 +9353,13 @@ def mv_manifest_schema_enforcement(spark: SparkSession, sf_dir: str) -> DataFram
     silently let the flip through would poison every later merged read
     at 100 TB, which is exactly why table formats validate at the
     writer."""
-    import shutil
-
     from .. import streaming
     from ..streaming import manifest
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec2(F.col("o_totalprice")).alias("v")
     )
-    table = scratch_dir("schenf", sf_dir)
-    shutil.rmtree(table, ignore_errors=True)
+    [table] = fresh_dirs(sf_dir, "schenf")
     manifest.write_and_commit_batch(
         spark, o.filter(F.col("o_orderkey") % 2 == 0), table, 0,
         enforce_schema=True,

@@ -219,7 +219,9 @@ def scratch_dir(tag: str, key: str) -> str:
     gate/bench invocations re-write the SAME path (mode=overwrite)
     instead of leaking a fresh mkdtemp per run. Shared by every query
     that needs a derived on-disk table (stream sources, state tables,
-    partitioned copies, CDC snapshots)."""
+    partitioned copies, CDC snapshots). A table that is appended to,
+    committed to or checkpointed must start empty: take it from
+    `fresh_dirs` instead."""
     import hashlib
     import os
     import tempfile
@@ -229,6 +231,21 @@ def scratch_dir(tag: str, key: str) -> str:
     path = os.path.join(root, f"{tag}_{digest}")
     os.makedirs(path, exist_ok=True)
     return path
+
+
+def fresh_dirs(sf_dir: str, *tags: str) -> list[str]:
+    """The `scratch_dir(tag, sf_dir)` paths for `tags`, each removed, so
+    the path is absent until a writer creates it. Every manifest table,
+    checkpoint and streaming sink a gate builds starts here: a stale
+    checkpoint against a rewritten source marks every file as already
+    committed (the stream reads nothing), and a leftover manifest,
+    batch partition or compaction horizon double-counts the re-run."""
+    import shutil
+
+    paths = [scratch_dir(tag, sf_dir) for tag in tags]
+    for path in paths:
+        shutil.rmtree(path, ignore_errors=True)
+    return paths
 
 
 def compact_parquet(

@@ -431,6 +431,24 @@ def run_stream_to_memory(
     return stream_df.sparkSession.table(name)
 
 
+def run_stream_to_parquet(
+    stream_df: DataFrame, sink: str, checkpoint: str
+) -> DataFrame:
+    """Drain a bounded stream through Spark's checkpointed parquet file
+    sink (append mode) and return a batch read of the sink. The sink's
+    `_spark_metadata` log lists only committed files, so the read sees
+    each micro-batch exactly once."""
+    q = (
+        stream_df.writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", checkpoint)
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    return stream_df.sparkSession.read.parquet(sink)
+
+
 def enrich_stream_static(
     events_stream: DataFrame,
     dim: DataFrame,

@@ -274,3 +274,23 @@ def test_cms_absent_item_reports_zero(spark, token_counts):
     assert set(res) == {"never-seen", "t5"}
     assert res["never-seen"] == 0
     assert res["t5"] == 6
+
+
+@pytest.mark.parametrize(
+    "name, tag",
+    [
+        ("sketch_cms_merge_partials", "cmsstate"),
+        ("sketch_kmv_merge_partials", "kmvstate"),
+    ],
+)
+def test_merge_partials_gates_commit_every_partial(spark, sf_dir, name, tag):
+    """The two sketch-merge gates publish their four per-batch partials
+    through the state table's manifest, and read n_partials from it."""
+    from bigdata_googleplaystore_spark.catalog.registry import QUERIES
+    from bigdata_googleplaystore_spark.sources import scratch_dir
+    from bigdata_googleplaystore_spark.streaming import manifest
+
+    rows = QUERIES[name].fn(spark, sf_dir).collect()
+    assert rows and {r["n_partials"] for r in rows} == {4}
+    state = scratch_dir(tag, sf_dir)
+    assert manifest.read_manifest(spark, state)["batch_ids"] == [0, 1, 2, 3]

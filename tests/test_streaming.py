@@ -848,3 +848,25 @@ def test_compacted_base_survives_batch_replay(spark, tmp_path):
     }
     # history intact; batch 2 double-counted (b gains one extra 4.0 row)
     assert got == {"a": (2, 4.0), "b": (3, 10.0)}
+
+
+def test_stateful_gates_rerun_to_the_same_rows(spark, sf_dir):
+    """A gate that commits to a manifest table, checkpoints a stream or
+    drains into a file sink starts from `fresh_dirs`, so running it
+    twice in one session gives the same rows. Without the reset the
+    streaming view re-reads the rewritten source into the old state and
+    the compaction gate commits its batches over the old ones: both
+    double-count."""
+    from collections import Counter
+
+    from bigdata_googleplaystore_spark.catalog.registry import QUERIES
+
+    for name in (
+        "stream_incremental_agg_view",
+        "mv_state_compaction",
+        "stream_cdf_from_manifest",
+    ):
+        fn = QUERIES[name].fn
+        first = Counter(map(tuple, fn(spark, sf_dir).collect()))
+        second = Counter(map(tuple, fn(spark, sf_dir).collect()))
+        assert first and first == second, name
