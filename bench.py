@@ -142,19 +142,15 @@ def _scd2_drain_bench(spark, sf_dir):
     from bigdata_googleplaystore_spark.sources import manifest_cdf_stream
 
     table = _ensure_bench_scd2_table(spark, sf_dir)
-    manifest_cdf_stream.register(spark)
     ckpt = tempfile.mkdtemp(prefix="bench_scd2_ckpt_")
     sink = tempfile.mkdtemp(prefix="bench_scd2_sink_")
     try:
         q = (
-            spark.readStream.format("manifest_cdf_stream")
-            .schema(
-                "k bigint, v double, _change_type string, _commit_version long"
+            manifest_cdf_stream.load(
+                spark, table,
+                "k bigint, v double, _change_type string, _commit_version long",
+                startingVersion=0, keyColumns="k",
             )
-            .option("path", table)
-            .option("startingVersion", "0")
-            .option("keyColumns", "k")
-            .load()
             .writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
@@ -245,18 +241,15 @@ def _cdf_drain_bench(spark, sf_dir):
     from bigdata_googleplaystore_spark.sources import manifest_cdf_stream
 
     table = _ensure_bench_manifest_table(spark, sf_dir)
-    manifest_cdf_stream.register(spark)
     ckpt = tempfile.mkdtemp(prefix="bench_cdf_ckpt_")
     q = (
-        spark.readStream.format("manifest_cdf_stream")
-        .schema(
+        manifest_cdf_stream.load(
+            spark, table,
             "o_orderkey bigint, o_orderdate timestamp,"
             " o_orderpriority string, o_totalprice double,"
-            " _change_type string"
+            " _change_type string",
+            startingVersion=0,
         )
-        .option("path", table)
-        .option("startingVersion", "0")
-        .load()
         .writeStream.format("noop")
         .option("checkpointLocation", ckpt)
         .start()

@@ -8578,8 +8578,8 @@ def stream_from_manifest_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted — append-only survives OPTIMIZE-style maintenance) and a
     version that commits equality deletes is REFUSED unless
     ignoreDeletes=true, because an append-only stream cannot
-    represent retractions (the CDF path manifest.snapshot_diff is the
-    retraction-capable feed).
+    represent retractions (the change-feed source manifest_cdf_stream
+    is the retraction-capable feed; see stream_cdf_from_manifest).
 
     The gate builds a 3-batch committed orders table, drains the
     source through a real Structured Streaming query into a parquet
@@ -8706,13 +8706,9 @@ def stream_cdf_from_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     table, sink, ckpt = fresh_dirs(sf_dir, "mcdf", "mcdf_sink", "mcdf_ckpt")
     _commit_orders_change_log(spark, sf_dir, table)
-    manifest_cdf_stream.register(spark)
-    changes = (
-        spark.readStream.format("manifest_cdf_stream")
-        .schema(f"{_ORDERS_LOG_COLS}, _change_type string")
-        .option("path", table)
-        .option("startingVersion", "0")
-        .load()
+    changes = manifest_cdf_stream.load(
+        spark, table, f"{_ORDERS_LOG_COLS}, _change_type string",
+        startingVersion=0,
     )
     return (
         streaming.run_stream_to_parquet(changes, sink, ckpt)
@@ -8803,15 +8799,10 @@ def stream_cdf_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.filter(F.col("k") % 60 == 0).withColumn("v", dec2(F.col("v") + 2)),
         ["k"], batch_id=2, delete_id=1,
     )
-    manifest_cdf_stream.register(spark)
-    changes = (
-        spark.readStream.format("manifest_cdf_stream")
-        .schema("k bigint, v decimal(12,2), _change_type string,"
-                " _commit_version long")
-        .option("path", table)
-        .option("startingVersion", "0")
-        .option("keyColumns", "k")
-        .load()
+    changes = manifest_cdf_stream.load(
+        spark, table,
+        "k bigint, v decimal(12,2), _change_type string, _commit_version long",
+        startingVersion=0, keyColumns="k",
     )
     log = streaming.run_stream_to_parquet(changes, sink, ckpt).withColumn(
         "is_open",
@@ -8880,14 +8871,9 @@ def batch_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     [table] = fresh_dirs(sf_dir, "btc")
     _commit_orders_change_log(spark, sf_dir, table)
-    manifest_cdf_stream.register(spark)
-    changes = (
-        spark.read.format("manifest_cdf_stream")
-        .schema(f"{_ORDERS_LOG_COLS}, _change_type string")
-        .option("path", table)
-        .option("startingVersion", "2")
-        .option("endingVersion", "3")
-        .load()
+    changes = manifest_cdf_stream.load(
+        spark, table, f"{_ORDERS_LOG_COLS}, _change_type string",
+        stream=False, startingVersion=2, endingVersion=3,
     )
     return changes.groupBy("_change_type", "o_orderpriority").agg(
         F.count("*").cast("bigint").alias("n_rows"),
@@ -9089,13 +9075,11 @@ def stream_cdf_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     table, state, ckpt = fresh_dirs(sf_dir, "cdfmv", "cdfmv_state", "cdfmv_ckpt")
     _commit_orders_change_log(spark, sf_dir, table)
-    manifest_cdf_stream.register(spark)
     changes = (
-        spark.readStream.format("manifest_cdf_stream")
-        .schema(f"{_ORDERS_LOG_COLS}, _change_type string")
-        .option("path", table)
-        .option("startingVersion", "0")
-        .load()
+        manifest_cdf_stream.load(
+            spark, table, f"{_ORDERS_LOG_COLS}, _change_type string",
+            startingVersion=0,
+        )
         .withColumn(
             "_mult",
             F.when(F.col("_change_type") == "delete", F.lit(-1)).otherwise(
@@ -9171,13 +9155,10 @@ def stream_cdf_table_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir, "cdfrep_src", "cdfrep_dst", "cdfrep_ckpt"
     )
     _commit_orders_change_log(spark, sf_dir, table)
-    manifest_cdf_stream.register(spark)
-    changes = (
-        spark.readStream.format("manifest_cdf_stream")
-        .schema(f"{_ORDERS_LOG_COLS}, _change_type string, _commit_version long")
-        .option("path", table)
-        .option("startingVersion", "0")
-        .load()
+    changes = manifest_cdf_stream.load(
+        spark, table,
+        f"{_ORDERS_LOG_COLS}, _change_type string, _commit_version long",
+        startingVersion=0,
     )
 
     def apply_changes(batch_df, batch_id: int) -> None:
@@ -9301,14 +9282,9 @@ def stream_cdf_update_pairing(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_id=1,
         delete_id=0,
     )
-    manifest_cdf_stream.register(spark)
-    changes = (
-        spark.readStream.format("manifest_cdf_stream")
-        .schema("o_orderkey bigint, v decimal(12,2), _change_type string")
-        .option("path", table)
-        .option("startingVersion", "0")
-        .option("keyColumns", "o_orderkey")
-        .load()
+    changes = manifest_cdf_stream.load(
+        spark, table, "o_orderkey bigint, v decimal(12,2), _change_type string",
+        startingVersion=0, keyColumns="o_orderkey",
     )
     return (
         streaming.run_stream_to_parquet(changes, sink, ckpt)

@@ -62,16 +62,13 @@ per-version-step logic, evaluated at PLANNING time):
   not globally — a physically duplicated row visible in multiple
   files emits one delete row per containing file.
 
-Option contract mirrors `manifest_stream`: absent `startingVersion`
-the first micro-batch is the CURRENT snapshot as 'insert' rows (the
-Delta CDF initial-snapshot contract), `startingVersion=N` replays
-changes inclusive of version N, `startingTimestamp=T` resolves to the
-first version whose manifest mtime >= T (mutually exclusive with
-startingVersion; O(log versions) probes), `maxVersionsPerTrigger` /
-`maxBytesPerTrigger` bound catch-up (bytes count the new data
-batches' recorded `_bytes` stat — delete key files are kilobyte-scale
-and uncounted; first post-restart trigger uncapped, same floor
-discipline).
+Options: the contract shared with `manifest_stream` (startingVersion,
+startingTimestamp, maxVersionsPerTrigger, maxBytesPerTrigger,
+strictSchemaCheck) lives in `manifest_stream.ManifestTailReader`, this
+reader's base; an absent start makes the first micro-batch the CURRENT
+snapshot as 'insert' rows (the Delta CDF initial-snapshot contract).
+This source adds `keyColumns` (above) and `maxKeyFrameBytes`.
+
 The declared schema must contain a `_change_type` string column and
 may contain a `_commit_version` long column (Delta CDF parity): when
 declared, every row carries the commit version its change belongs to
@@ -79,17 +76,12 @@ declared, every row carries the commit version its change belongs to
 lets a consumer ORDER changes inside a multi-version catch-up trigger
 — apply-to-replica flows are ambiguous without it. The remaining
 columns read the data files with the same additive-schema-evolution
-tolerance as `manifest_stream` (missing columns -> typed nulls;
-opt-in `strictSchemaCheck=true` validates the declared data columns
-against one footer per batch at first plan and raises on
-never-carried names). All storage I/O routes through
-`sources/storage.py`.
+tolerance as `manifest_stream` (missing columns -> typed nulls). All
+storage I/O routes through `sources/storage.py`.
 
 Execution is arrow-native end to end, and a plan decodes each data
 file ONCE however many versions touch it: partitions are per FILE,
-carrying every version-step's masks (r13 optimization — a 9-version
-upsert-table replay planned 45 file decodes as (version, file) pairs,
-9 as files; same Acero join work, 5x less parquet decode + I/O). The
+carrying every version-step's masks (see `_CDFPartition`). The
 unmasked-insert hot path streams RecordBatch-to-RecordBatch, and the
 MASKED paths (excluded inserts, delete steps) process
 RecordBatch-at-a-time through Acero semi/anti joins against the
@@ -107,23 +99,12 @@ streaming surface is console output, challenge.scala C:26-44).
 
 from __future__ import annotations
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
 from . import manifest_log
-from .manifest_stream import (
-    _byte_capped_end,
-    _parse_timestamp,
-    _read_evolved_batches,
-    resolve_starting_timestamp,
-    validate_declared_columns,
-)
-from .storage import StorageBackend, get_backend
+from .manifest_stream import ManifestTailReader, _read_evolved_batches
+from .storage import StorageBackend
 
 CHANGE_COL = "_change_type"
 VERSION_COL = "_commit_version"
@@ -161,15 +142,10 @@ class _CDFPartition(InputPartition):
     """One data FILE plus every version-step that touches it in this
     plan, masks resolved at planning time.
 
-    A multi-version catch-up plan used to emit one partition per
-    (version, file) pair, re-decoding the same parquet file once per
-    version that deletes from it — O(versions x files) reads for a
-    replay over an upsert-heavy log. Grouping by file makes the plan
-    O(files) reads: the file streams through Arrow once and every
-    step's (kilobyte) key-frame joins run against the same decoded
-    batches. Join work is unchanged; only the redundant decode+I/O
-    goes away (r13 measured: the 9-version SCD2 replay planned 36
-    delete file-reads before, 9 after).
+    Grouping by file makes a multi-version plan O(files) reads rather
+    than O(versions x files): the file streams through Arrow once and
+    every step's (kilobyte) key-frame joins run against the same
+    decoded batches.
 
     `insert`: None, or (exclude, version, pair_match) — emit the
     file's rows minus `exclude` key frames; rows whose key appears in
@@ -190,45 +166,18 @@ class _CDFPartition(InputPartition):
         self.deletes = deletes or []  # [(exclude, match, version, pair)]
 
 
-class ManifestCDFStreamReader(DataSourceStreamReader):
+class ManifestCDFStreamReader(ManifestTailReader):
+    source = "manifest_cdf_stream"
+    meta_columns = (CHANGE_COL, VERSION_COL)
+
     def __init__(self, schema: StructType, options: dict):
-        self.table_dir = options["path"].rstrip("/")
-        self.fs = get_backend(self.table_dir)
         if CHANGE_COL not in schema.fieldNames():
             raise ValueError(
                 f"manifest_cdf_stream requires a `{CHANGE_COL} string` "
                 "column in the declared schema — it carries the feed's "
                 "insert/delete tag"
             )
-        sv_opt = options.get("startingversion")
-        st_opt = options.get("startingtimestamp")
-        if sv_opt is not None and st_opt is not None:
-            raise ValueError(
-                "manifest_cdf_stream: startingVersion and "
-                "startingTimestamp are mutually exclusive (Delta "
-                "parity) — pick one"
-            )
-        if st_opt is not None:
-            n = resolve_starting_timestamp(
-                self.fs, self.table_dir, _parse_timestamp(st_opt)
-            )
-            self.starting = n - 1
-            self.snapshot_mode = False
-        elif sv_opt is None:
-            self.starting = -1
-            self.snapshot_mode = True
-        else:
-            n = int(sv_opt)
-            if n < 0:
-                raise ValueError(
-                    f"manifest_cdf_stream: startingVersion={n} — versions "
-                    "start at 0; omit the option for initial-snapshot "
-                    "semantics"
-                )
-            self.starting = n - 1
-            self.snapshot_mode = False
-        self.max_versions = int(options.get("maxversionspertrigger", 0))
-        self.max_bytes = int(options.get("maxbytespertrigger", 0))
+        super().__init__(schema, options)
         self.max_key_bytes = int(
             options.get("maxkeyframebytes", DEFAULT_MAX_KEY_FRAME_BYTES)
         )
@@ -240,8 +189,7 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
             bad = [
                 c
                 for c in cols
-                if c in (CHANGE_COL, VERSION_COL)
-                or c not in schema.fieldNames()
+                if c in self.meta_columns or c not in schema.fieldNames()
             ]
             if not cols or bad:
                 raise ValueError(
@@ -250,60 +198,8 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
                     f"{CHANGE_COL}/{VERSION_COL}); offending: {bad}"
                 )
             self.key_columns = cols
-        self.strict_schema = (
-            str(options.get("strictschemacheck", "false")).lower() == "true"
-        )
-        self._strict_checked = False
-        self._floor: int | None = None
-        self.schema = schema
-
-    # ---- offsets ------------------------------------------------------
-    def initialOffset(self) -> dict:
-        return {"version": self.starting}
-
-    def latestOffset(self) -> dict:
-        v = manifest_log.latest_version(self.fs, self.table_dir)
-        if v is None:
-            return {"version": self.starting}
-        if self._floor is None:
-            return {"version": v}
-        if self.max_versions > 0:
-            v = min(v, self._floor + self.max_versions)
-        if self.max_bytes > 0 and v > self._floor:
-            # byte admission counts NEW data batches' recorded `_bytes`
-            # (the insert volume); delete key files are kilobyte-scale
-            # and uncounted — pacing, not accounting
-            v = _byte_capped_end(
-                self.fs, self.table_dir, self._floor, v, self.max_bytes
-            )
-        return {"version": v}
-
-    def commit(self, end: dict) -> None:
-        v = end["version"]
-        self._floor = max(v, self._floor if self._floor is not None else v)
 
     # ---- planning (driver, metadata + key files only) ------------------
-    def _manifest(self, version: int) -> dict:
-        try:
-            return manifest_log.read_manifest(self.fs, self.table_dir, version)
-        except FileNotFoundError:
-            raise ValueError(
-                f"manifest_cdf_stream: manifest v{version} of "
-                f"{self.table_dir} no longer exists — the stream fell "
-                "behind the table's vacuum retention. Widen keep_versions "
-                "or restart from a fresh checkpoint."
-            ) from None
-
-    def _data_files(self, batch_id: int) -> list[str]:
-        files = manifest_log.batch_files(self.fs, self.table_dir, batch_id)
-        if not files:
-            raise ValueError(
-                f"manifest_cdf_stream: batch {batch_id} of "
-                f"{self.table_dir} has no files on disk — vacuumed past "
-                "this stream's offset; restart from a fresh checkpoint"
-            )
-        return files
-
     def _keys_cached(self, ds: list[int], memo: dict):
         """Per-plan memo over delete-group key frames: a group's key
         file is read ONCE per partitions() call however many batches it
@@ -328,7 +224,7 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
     ) -> None:
         for b in sorted(batch_ids):
             masks = self._mask_frames(m, b, memo)
-            for f in self._data_files(b):
+            for f in self._batch_files(b):
                 self._part(parts_by_file, f).insert = (
                     masks, version, pair_match or []
                 )
@@ -382,30 +278,15 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
             )
         return parts
 
-    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        sv, ev = start["version"], end["version"]
-        self._floor = max(ev, self._floor if self._floor is not None else ev)
-        if ev <= sv:
-            return []
-        m_end: dict | None = None
-        if self.strict_schema and not self._strict_checked:
-            m_end = self._manifest(ev)
-            validate_declared_columns(
-                self.fs,
-                self.table_dir,
-                m_end,
-                self.schema,
-                skip=(CHANGE_COL, VERSION_COL),
-            )
-            self._strict_checked = True
+    def _plan(self, sv: int, ev: int, m_end: dict | None) -> list:
         memo: dict = {}
         parts_by_file: dict[str, _CDFPartition] = {}
         if sv < 0 and self.snapshot_mode:
             # initial snapshot: the CURRENT visible rows, all 'insert'
-            m = m_end if m_end is not None else self._manifest(ev)
+            m = m_end or self._manifest(ev)
             self._insert_step(parts_by_file, m, m["batch_ids"], memo, ev)
             return self._guard_key_bytes(list(parts_by_file.values()))
-        m_prev = self._manifest(sv) if sv >= 0 else manifest_log.EMPTY_MANIFEST
+        m_prev = self._manifest(sv)
         for v in range(max(sv + 1, 0), ev + 1):
             m_v = self._manifest(v)
             prev_ids = set(m_prev["batch_ids"])
@@ -475,7 +356,7 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
                     if not match:
                         continue
                     exclude = self._mask_frames(m_prev, b, memo)
-                    for f in self._data_files(b):
+                    for f in self._batch_files(b):
                         self._part(parts_by_file, f).deletes.append(
                             (exclude, match, v, pair_v)
                         )
@@ -718,3 +599,17 @@ class ManifestCDFStreamSource(DataSource):
 
 def register(spark) -> None:
     spark.dataSource.register(ManifestCDFStreamSource)
+
+
+def load(spark, path: str, schema: str, *, stream: bool = True, **options):
+    """The change feed of the table at `path`: a streaming read, or the
+    batch table_changes read with `stream=False`; `options` by name."""
+    register(spark)
+    reader = spark.readStream if stream else spark.read
+    return (
+        reader.format("manifest_cdf_stream")
+        .schema(schema)
+        .option("path", path)
+        .options(**options)
+        .load()
+    )

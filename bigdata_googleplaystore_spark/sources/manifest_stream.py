@@ -32,40 +32,21 @@ Why this composes into end-to-end exactly-once pipelines:
   retractions read the CDF source (manifest_cdf_stream) or the batch
   feed (manifest.snapshot_diff) instead.
 
-Option contract (Delta-parity where Delta has the option):
+Options: the contract both manifest readers share (startingVersion,
+startingTimestamp, maxVersionsPerTrigger, maxBytesPerTrigger,
+strictSchemaCheck) is documented on `ManifestTailReader`, their common
+base in this module. This source adds two:
 
-- `startingVersion=N` is INCLUSIVE of N, like Delta's: the first
-  micro-batch replays the changes version N itself committed (the
-  baseline is N-1). Absent, the first batch is the current snapshot.
-  As in Delta, a startingVersion replay is a LOG replay: compaction
-  bases stay skipped, so rows that exist only inside a base rewritten
-  before N are not re-emitted.
-- `startingTimestamp=T` (mutually exclusive with startingVersion;
-  ISO date/datetime, naive = UTC, or epoch seconds) resolves to the
-  first version whose manifest file mtime >= T and tails from there —
-  O(log versions) metadata probes by binary search, sound because
-  manifest mtimes are monotone with version (the invariant vacuum's
-  age-based retention already rests on). Every commit older than T ->
-  the stream reads only future commits; a backend without mtimes
-  refuses loudly.
+- `ignoreDeletes=true` emits a change commit's raw inserts and
+  ignores its deletes (masks NOT applied).
 - `skipChangeCommits=true` (the modern Delta option that replaced
   ignoreChanges): a tail version that adds equality deletes is a
   CHANGE commit and is skipped WHOLE — its deletes AND the inserts
   committed beside them (an upsert's new rows are updates, not
   appends) — while pure-append versions stream through. Mutually
-  exclusive with `ignoreDeletes` (which emits a change commit's raw
-  inserts and ignores only its deletes). Governs the TAIL only: an
-  initial snapshot over a table with delete groups still refuses
-  (applying masks is the CDF source's job, not this source's).
-- `maxVersionsPerTrigger` / `maxBytesPerTrigger` — admission control
-  (Delta's maxFilesPerTrigger/maxBytesPerTrigger analog at this
-  layer's version granularity). Bytes come from the `_bytes` zone-map
-  stat `manifest.write_and_commit_batch` records per batch; a batch
-  committed without stats counts 0 bytes (admission is backlog
-  PACING — planning still walks every admitted version, so
-  correctness never depends on the stat being present). At least one
-  version is always admitted, so a single over-cap commit cannot
-  stall the stream.
+  exclusive with `ignoreDeletes`. Governs the TAIL only: an initial
+  snapshot over a table with delete groups still refuses (applying
+  masks is the CDF source's job, not this source's).
 
 Storage: the log is read through the format module
 (`sources/manifest_log.py`) and all file access routes through
@@ -327,80 +308,94 @@ def validate_declared_columns(
         )
 
 
-class _ParquetFilePartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
+def _flag(options: dict, key: str) -> bool:
+    return str(options.get(key, "false")).lower() == "true"
 
 
-class ManifestStreamReader(DataSourceStreamReader):
+class ManifestTailReader(DataSourceStreamReader):
+    """What the append-only (`manifest_stream`) and change-feed
+    (`manifest_cdf_stream`) readers share: the option contract, the
+    version offsets with their admission control, and the retention
+    lookups. A subclass names its feed in `source` (every error it
+    raises carries that name), lists the declared columns it
+    synthesizes in `meta_columns` (strictSchemaCheck skips them), and
+    supplies `_plan(sv, ev, m_end)` and `read()`.
+
+    Option contract (Delta-parity where Delta has the option):
+
+    - `startingVersion=N` is INCLUSIVE of N, like Delta's: the first
+      micro-batch replays the changes version N itself committed (the
+      baseline is N-1). Absent, the first batch is the current
+      snapshot. As in Delta, a startingVersion replay is a LOG replay:
+      compaction bases stay skipped, so rows that exist only inside a
+      base rewritten before N are not re-emitted.
+    - `startingTimestamp=T` (mutually exclusive with startingVersion;
+      ISO date/datetime, naive = UTC, or epoch seconds) resolves to the
+      first version whose manifest file mtime >= T and tails from there
+      — O(log versions) metadata probes by binary search, sound because
+      manifest mtimes are monotone with version (the invariant vacuum's
+      age-based retention already rests on). Every commit older than T
+      -> the stream reads only future commits; a backend without mtimes
+      refuses loudly.
+    - `maxVersionsPerTrigger` / `maxBytesPerTrigger` — admission control
+      (Delta's maxFilesPerTrigger/maxBytesPerTrigger analog at this
+      layer's version granularity). Bytes count the NEW data batches'
+      `_bytes` zone-map stat that `manifest.write_and_commit_batch`
+      records; a batch committed without stats, and every delete key
+      file, counts 0 (admission is backlog PACING — planning still walks
+      every admitted version, so correctness never depends on the
+      stat). At least one version is always admitted, so a single
+      over-cap commit cannot stall the stream. 0/absent = unlimited.
+    - `strictSchemaCheck=true` — the first plan validates the declared
+      data columns against one parquet footer per committed batch and
+      raises naming any column no batch has ever carried (see
+      `validate_declared_columns`)."""
+
+    source: str
+    meta_columns: tuple[str, ...] = ()
+
     def __init__(self, schema: StructType, options: dict):
         # Python DataSource options arrive lower-cased
         self.table_dir = options["path"].rstrip("/")
         self.fs = get_backend(self.table_dir)
-        self.ignore_deletes = (
-            str(options.get("ignoredeletes", "false")).lower() == "true"
-        )
-        self.skip_change_commits = (
-            str(options.get("skipchangecommits", "false")).lower() == "true"
-        )
-        if self.ignore_deletes and self.skip_change_commits:
-            raise ValueError(
-                "manifest_stream: ignoreDeletes and skipChangeCommits "
-                "are mutually exclusive — the first emits a change "
-                "commit's raw inserts (masks not applied), the second "
-                "skips the commit whole; pick the semantics you mean"
-            )
-        # startingVersion=N tails INCLUSIVE of N (Delta parity): the
-        # offset baseline is N-1, whose ids are treated as already
-        # seen. startingTimestamp=T resolves to the first version whose
-        # manifest mtime >= T (O(log versions) probes) and tails from
-        # there. Absent both -> baseline -1 + snapshot mode (first
-        # batch = current snapshot). N=0 is the whole-log replay.
+        self.schema = schema
+        # `starting` is the offset baseline: N-1 for startingVersion=N
+        # (its ids count as already seen), resolved-1 for
+        # startingTimestamp, and -1 + snapshot mode when both are
+        # absent. N=0 is the whole-log replay.
         sv_opt = options.get("startingversion")
         st_opt = options.get("startingtimestamp")
         if sv_opt is not None and st_opt is not None:
             raise ValueError(
-                "manifest_stream: startingVersion and startingTimestamp "
+                f"{self.source}: startingVersion and startingTimestamp "
                 "are mutually exclusive (Delta parity) — pick one"
             )
+        self.snapshot_mode = sv_opt is None and st_opt is None
         if st_opt is not None:
             n = resolve_starting_timestamp(
                 self.fs, self.table_dir, _parse_timestamp(st_opt)
             )
-            self.starting = n - 1
-            self.snapshot_mode = False
-        elif sv_opt is None:
-            self.starting = -1
-            self.snapshot_mode = True
         else:
-            n = int(sv_opt)
+            n = int(sv_opt or 0)
             if n < 0:
                 raise ValueError(
-                    f"manifest_stream: startingVersion={n} — versions "
+                    f"{self.source}: startingVersion={n} — versions "
                     "start at 0; omit the option for initial-snapshot "
                     "semantics"
                 )
-            self.starting = n - 1
-            self.snapshot_mode = False
-        # admission control (the maxFilesPerTrigger analog): bound how
-        # many commit-log versions / how many committed bytes one
-        # micro-batch may span while the query runs, so a stream on a
-        # hot table never falls unbounded behind its own sink.
-        # 0/absent = unlimited. The caps engage only AFTER the first
-        # planned batch reveals the authoritative start offset: this
-        # API's latestOffset() never sees the checkpoint-restored
-        # offset, so capping from a guessed floor could return an
-        # offset BELOW the restored one and stall (or regress) the
-        # stream — the first trigger after any (re)start is therefore
-        # uncapped, same size as an initial snapshot.
+        self.starting = n - 1
+        # The caps engage only AFTER the first planned batch reveals the
+        # authoritative start offset: this API's latestOffset() never
+        # sees the checkpoint-restored offset, so capping from a guessed
+        # floor could return an offset BELOW the restored one and stall
+        # (or regress) the stream — the first trigger after any
+        # (re)start is therefore uncapped, same size as an initial
+        # snapshot.
         self.max_versions = int(options.get("maxversionspertrigger", 0))
         self.max_bytes = int(options.get("maxbytespertrigger", 0))
-        self.strict_schema = (
-            str(options.get("strictschemacheck", "false")).lower() == "true"
-        )
+        self.strict_schema = _flag(options, "strictschemacheck")
         self._strict_checked = False
         self._floor: int | None = None  # authoritative once partitions() runs
-        self.schema = schema
 
     # ---- offsets ------------------------------------------------------
     def initialOffset(self) -> dict:
@@ -420,22 +415,94 @@ class ManifestStreamReader(DataSourceStreamReader):
             )
         return {"version": v}
 
-    # ---- planning (driver, metadata-only) -----------------------------
-    def _manifest_loud(self, version: int) -> dict:
+    def _advance_floor(self, v: int) -> None:
+        self._floor = max(v, self._floor if self._floor is not None else v)
+
+    def commit(self, end: dict) -> None:
+        # offsets live in the engine's checkpoint; the admission-control
+        # floor advances in partitions() (commit() callbacks are not
+        # guaranteed to reach the planning worker), so belt-and-braces
+        self._advance_floor(end["version"])
+
+    # ---- planning (driver) --------------------------------------------
+    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
+        sv, ev = start["version"], end["version"]
+        # advance the admission-control floor to this batch's END here,
+        # in planning — the engine's runner process is not guaranteed
+        # to route commit() callbacks to the same worker, and a floor
+        # stuck below the running offset would cap latestOffset at an
+        # already-processed version and stall the stream
+        self._advance_floor(ev)
+        if ev <= sv:
+            return []
+        return self._plan(sv, ev, self._check_schema_once(ev))
+
+    def _plan(self, sv: int, ev: int, m_end: dict | None) -> list:
+        """Partitions for versions (sv, ev]; `m_end` is v{ev}'s manifest
+        when this plan already read it, else None."""
+        raise NotImplementedError
+
+    def _check_schema_once(self, ev: int) -> dict | None:
+        """strictSchemaCheck on the first non-empty plan. Returns the
+        manifest it read (None when no check ran) for the plan to reuse."""
+        if not self.strict_schema or self._strict_checked:
+            return None
+        m = self._manifest(ev)
+        validate_declared_columns(
+            self.fs, self.table_dir, m, self.schema, skip=self.meta_columns
+        )
+        self._strict_checked = True
+        return m
+
+    def _manifest(self, version: int) -> dict:
+        """Version `version`'s manifest; -1, the baseline before the
+        first commit, reads as the empty manifest."""
+        if version < 0:
+            return manifest_log.EMPTY_MANIFEST
         try:
             return manifest_log.read_manifest(self.fs, self.table_dir, version)
         except FileNotFoundError:
             raise ValueError(
-                f"manifest_stream: manifest v{version} of "
-                f"{self.table_dir} no longer exists — the stream fell "
-                "behind the table's vacuum retention. Widen "
-                "keep_versions or restart from a fresh checkpoint."
+                f"{self.source}: manifest v{version} of {self.table_dir} "
+                "no longer exists — the stream fell behind the table's "
+                "vacuum retention. Widen keep_versions or restart from a "
+                "fresh checkpoint."
             ) from None
 
-    def _ids_at(self, version: int) -> tuple[set, set]:
-        if version < 0:
-            return set(), set()
-        m = self._manifest_loud(version)
+    def _batch_files(self, batch_id: int) -> list[str]:
+        files = manifest_log.batch_files(self.fs, self.table_dir, batch_id)
+        if not files:
+            raise ValueError(
+                f"{self.source}: batch {batch_id} of {self.table_dir} has "
+                "no files on disk — vacuumed past this stream's offset; "
+                "restart from a fresh checkpoint"
+            )
+        return files
+
+
+class _ParquetFilePartition(InputPartition):
+    def __init__(self, path: str):
+        self.path = path
+
+
+class ManifestStreamReader(ManifestTailReader):
+    source = "manifest_stream"
+
+    def __init__(self, schema: StructType, options: dict):
+        self.ignore_deletes = _flag(options, "ignoredeletes")
+        self.skip_change_commits = _flag(options, "skipchangecommits")
+        if self.ignore_deletes and self.skip_change_commits:
+            raise ValueError(
+                "manifest_stream: ignoreDeletes and skipChangeCommits "
+                "are mutually exclusive — the first emits a change "
+                "commit's raw inserts (masks not applied), the second "
+                "skips the commit whole; pick the semantics you mean"
+            )
+        super().__init__(schema, options)
+
+    # ---- planning (driver, metadata-only) -----------------------------
+    @staticmethod
+    def _ids(m: dict) -> tuple[set, set]:
         return set(m["batch_ids"]), set(m.get("delete_ids") or [])
 
     def _refuse_deletes(self, sv: int, ev: int, dels: set) -> None:
@@ -448,23 +515,7 @@ class ManifestStreamReader(DataSourceStreamReader):
             "masks NOT applied)."
         )
 
-    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        sv, ev = start["version"], end["version"]
-        # advance the admission-control floor to this batch's END here,
-        # in planning — the engine's runner process is not guaranteed
-        # to route commit() callbacks to the same worker, and a floor
-        # stuck below the running offset would cap latestOffset at an
-        # already-processed version and stall the stream
-        self._floor = max(ev, self._floor if self._floor is not None else ev)
-        if ev <= sv:
-            return []
-        if self.strict_schema and not self._strict_checked:
-            # one manifest GET: _manifest_loud both probes retention
-            # (the descriptive vacuum error) and feeds the validation
-            validate_declared_columns(
-                self.fs, self.table_dir, self._manifest_loud(ev), self.schema
-            )
-            self._strict_checked = True
+    def _plan(self, sv: int, ev: int, m_end: dict | None) -> list:
         if sv < 0 and self.snapshot_mode:
             # INITIAL SNAPSHOT (the Delta streaming-source contract): a
             # fresh stream's first batch is the CURRENT snapshot's full
@@ -472,7 +523,7 @@ class ManifestStreamReader(DataSourceStreamReader):
             # stream has never emitted — then the log is tailed from
             # there. Replaying dead history versions instead would read
             # vacuumed directories.
-            ids_e, dels_e = self._ids_at(ev)
+            ids_e, dels_e = self._ids(m_end or self._manifest(ev))
             if dels_e and not self.ignore_deletes:
                 self._refuse_deletes(sv, ev, dels_e)
             return self._parts_for(sorted(ids_e))
@@ -481,10 +532,10 @@ class ManifestStreamReader(DataSourceStreamReader):
         # interval appears in no endpoint diff, and a delete added then
         # GC'd inside one interval must still refuse. (sv < 0 here is
         # startingVersion=0: an empty baseline walked the same way.)
-        seen, dels_seen = self._ids_at(sv)
+        seen, dels_seen = self._ids(self._manifest(sv))
         emit: list[int] = []
         for v in range(max(sv + 1, 0), ev + 1):
-            ids_v, dels_v = self._ids_at(v)
+            ids_v, dels_v = self._ids(self._manifest(v))
             new_dels = dels_v - dels_seen
             if new_dels and self.skip_change_commits:
                 # CHANGE commit (Delta skipChangeCommits): skip the
@@ -507,31 +558,13 @@ class ManifestStreamReader(DataSourceStreamReader):
         return self._parts_for(emit)
 
     def _parts_for(self, ids: list[int]) -> list[InputPartition]:
-        parts: list[InputPartition] = []
-        for b in ids:
-            files = manifest_log.batch_files(self.fs, self.table_dir, b)
-            if not files:
-                raise ValueError(
-                    f"manifest_stream: batch {b} of {self.table_dir} has "
-                    "no files on disk — vacuumed past this stream's "
-                    "offset; restart from a fresh checkpoint"
-                )
-            parts += [_ParquetFilePartition(f) for f in files]
-        return parts
+        return [
+            _ParquetFilePartition(f) for b in ids for f in self._batch_files(b)
+        ]
 
     # ---- execution (executors, arrow-batched) -------------------------
     def read(self, partition: _ParquetFilePartition):
-        for rb in _read_evolved_batches(
-            self.fs, partition.path, self.schema
-        ):
-            yield rb
-
-    def commit(self, end: dict) -> None:
-        # offsets live in the engine's checkpoint; the admission-control
-        # floor advances in partitions() (commit() callbacks are not
-        # guaranteed to reach the planning worker), so belt-and-braces
-        v = end["version"]
-        self._floor = max(v, self._floor if self._floor is not None else v)
+        yield from _read_evolved_batches(self.fs, partition.path, self.schema)
 
 
 def _read_evolved_batches(

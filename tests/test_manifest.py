@@ -11,6 +11,12 @@ from pyspark.sql import functions as F
 from bigdata_googleplaystore_spark import streaming
 from bigdata_googleplaystore_spark.operators import incremental
 from bigdata_googleplaystore_spark.sources import manifest_log
+from bigdata_googleplaystore_spark.sources.manifest_cdf_stream import (
+    ManifestCDFStreamReader,
+)
+from bigdata_googleplaystore_spark.sources.manifest_stream import (
+    ManifestStreamReader,
+)
 from bigdata_googleplaystore_spark.streaming import manifest
 
 
@@ -1957,7 +1963,7 @@ def test_cdf_stream_plans_through_memory_backend_and_fails_loud():
     # vacuumed manifest -> loud, named error
     mem.delete(f"{tbl}/_manifests/v000000000000.json")
     r2 = mc.ManifestCDFStreamReader(schema, {"path": tbl, "startingversion": "0"})
-    with pytest.raises(ValueError, match="vacuum retention"):
+    with pytest.raises(ValueError, match="^manifest_cdf_stream: .*vacuum retention"):
         r2.partitions({"version": -1}, {"version": 1})
     # vacuumed delete keys -> loud, named error
     mem.put(
@@ -2945,8 +2951,48 @@ def test_byte_capped_end_mid_walk_vacuum_returns_latest():
 
     schema = StructType([StructField("id", IntegerType())])
     r = ms.ManifestStreamReader(schema, {"path": tbl, "startingversion": "0"})
-    with pytest.raises(ValueError, match="vacuum retention"):
+    with pytest.raises(ValueError, match="^manifest_stream: .*vacuum retention"):
         r.partitions({"version": 0}, {"version": 3})
+    mem.clear()
+
+
+@pytest.mark.parametrize(
+    "reader_cls",
+    [ManifestStreamReader, ManifestCDFStreamReader],
+    ids=lambda cls: cls.source,
+)
+def test_tail_readers_share_option_contract_and_retention_errors(reader_cls):
+    # both manifest feeds take the option contract and the retention
+    # lookups from ManifestTailReader, and every refusal names the feed
+    # that raised it. (The vacuumed-MANIFEST error is pinned per feed in
+    # test_cdf_stream_plans_through_memory_backend_and_fails_loud and
+    # test_byte_capped_end_mid_walk_vacuum_returns_latest.)
+    import json as _json
+
+    from bigdata_googleplaystore_spark.sources import storage
+
+    tbl = f"memory://tailcontract_{reader_cls.source}"
+    mem = storage.get_backend(tbl)
+    mem.clear()
+    for v in range(2):
+        mem.put(
+            f"{tbl}/_manifests/v{v:012d}.json",
+            _json.dumps({"version": v, "batch_ids": list(range(v + 1))}).encode(),
+        )
+    # batch 1's directory is gone (vacuumed) while v1 still lists it
+    mem.put(f"{tbl}/_batch_id=0/part-0.parquet", b"PAR1")
+    feed = f"^{reader_cls.source}: "
+    schema = _cdf_schema()
+    with pytest.raises(ValueError, match=feed + "startingVersion=-1 .*start at 0"):
+        reader_cls(schema, {"path": tbl, "startingversion": "-1"})
+    with pytest.raises(ValueError, match=feed + ".*mutually exclusive"):
+        reader_cls(
+            schema,
+            {"path": tbl, "startingversion": "0", "startingtimestamp": "9"},
+        )
+    r = reader_cls(schema, {"path": tbl, "startingversion": "0"})
+    with pytest.raises(ValueError, match=feed + "batch 1 of .*no files on disk"):
+        r.partitions({"version": -1}, {"version": 1})
     mem.clear()
 
 
