@@ -34,7 +34,7 @@ _BOUND_VIEW_SEQ = itertools.count()
 
 def sql_bind(spark, sql: str, **dfs):
     """`spark.sql` with `{name}` DataFrame bindings that PRESERVES caller
-    caches (r13 advice): pyspark's parameter formatter registers each
+    caches: pyspark's parameter formatter registers each
     bound frame under an auto temp view and DROPS it after parsing, and
     that drop also UNCACHES the frame's plan if it was persisted — so a
     caller's `persist()` of a shared `load_table` frame would silently

@@ -142,11 +142,10 @@ _BOILERPLATE = " all rights reserved contact support for information"
 )
 def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The `max_shingle_df` hot-shingle cap under a planted-hot-shingle
-    oracle (r07 verdict item 6 — the knob COVERAGE.md names as THE
-    100 TB bound on the inverted-index join was previously exercised
-    only un-capped). Every document gets the same boilerplate footer
-    appended, planting shingles with document frequency = |corpus|
-    (500 at sf0.01, 5000 at sf0.1) — the stop-phrase pathology that
+    oracle (the knob COVERAGE.md names as THE 100 TB bound on the
+    inverted-index join, exercised capped). Every document gets the same
+    boilerplate footer appended, planting shingles with document frequency =
+    |corpus| (500 at sf0.01, 5000 at sf0.1) — the stop-phrase pathology that
     makes the self-join quadratic: one df=d shingle alone contributes
     d²/2 ≈ 12.5M joined rows at sf0.1. With max_shingle_df=30 the cap
     must drop exactly those planted shingles (the natural corpus
@@ -289,8 +288,8 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash-64 near-dup pairs at Hamming <= 8 via pigeonhole
-    block-rotation candidates, under a planted exact-copy gate (round-5
-    verdict item 4; was rows-only): the corpus is 3 exact copies (ids
+    block-rotation candidates, under a planted exact-copy gate: the
+    corpus is 3 exact copies (ids
     offset by 1M*c) of 16 spaced anchor documents. Exact copies share
     the shingle multiset, so their signatures are bit-identical —
     every within-anchor pair MUST surface (all 9 rotation blocks
@@ -566,7 +565,7 @@ def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     = cosine >= 0.9, which pairs every original with its copy and nothing
     else — so the expected output is the FULLY DETERMINED planted-pair set,
     and the oracle re-derives it (pair ids + exact rounded cosine) in plain
-    SQL (round-3 verdict item 3; was rows-only). Binding this oracle encodes
+    SQL. Binding this oracle encodes
     recall = 1 on planted near-identical pairs as a hash-checked gate: the
     8-table 4-plane index collides every >= 0.9 pair on this corpus
     (verified at sf0.001/0.01/0.1), and precision is structural (exact
@@ -602,7 +601,7 @@ def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH ANN top-k (buckets + 1-bit multiprobe, exact
     cosine rank within candidates) under a planted-exact-duplicate
-    recall gate (round-3 verdict item 3; was rows-only): the query set
+    recall gate: the query set
     is exact copies of every 50th corpus vector (id + 100000), and the
     returned top-1 per query MUST be its source at rounded cosine 1.0.
     That expectation is structural, not empirical: an identical vector
@@ -786,7 +785,7 @@ def doc_fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "multimodal"),
 )
 def multimodal_bytes_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL container decode, oracle-checked (round-3 verdict item 2):
+    """REAL container decode, oracle-checked:
     each doc's text bytes are encoded into an actual PNG / BMP / WAV
     file (round-robin by id, operators/codecs.py), then
     multimodal.decode_features sniffs magic bytes, parses the container
@@ -906,10 +905,10 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN (deterministic k-means coarse quantizer — iterative
     Lloyd's on DataFrames, only centroids touch the driver; queries
     probe their 6 nearest of 16 cells, exact rank within candidates)
-    under the same planted-exact-duplicate recall gate as sim_ann_lsh
-    (round-3 verdict item 3; was rows-only): planted queries are exact
-    copies of every 50th corpus vector, and top-1 MUST be the source at
-    rounded cosine 1.0 — structural, because an identical vector scores
+    under the same planted-exact-duplicate recall gate as sim_ann_lsh:
+    planted queries are exact copies of every 50th corpus vector, and top-1
+    MUST be the source at rounded cosine 1.0 — structural, because an
+    identical vector scores
     every centroid identically (same argmax cell, deterministic
     tiebreak), so the source is always inside the probed cells. Ranks
     2..k stay approximate by design (recall floor asserted in
@@ -950,10 +949,9 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "similarity", "ann", "eval"),
 )
 def sim_ann_ivf_full_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF's deterministic recall ENDPOINT as an oracle gate (promoted
-    from an assert in the r07 recall probe, as the Lloyd invariant was
-    in r06): with n_probe = n_cells, probing every cell IS exact search,
-    so the full IVF pipeline — deterministic Lloyd k-means training,
+    """IVF's deterministic recall ENDPOINT as an oracle gate: with n_probe =
+    n_cells, probing every cell IS exact search, so the full IVF pipeline —
+    deterministic Lloyd k-means training,
     cell assignment, probe-cell selection, candidate generation, exact
     cosine rank — must reproduce the brute-force top-5 VALUE-FOR-VALUE
     on the real corpus, and the oracle recomputes that brute-force
@@ -1073,8 +1071,8 @@ def sim_ann_ivf_index_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "similarity", "ann", "eval", "index"),
 )
 def sim_ann_ivf_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full IVF index LIFECYCLE across a process boundary (r08
-    verdict item 3 — sim_ann_ivf_index_reuse pins the stored-index
+    """The full IVF index LIFECYCLE across a process boundary
+    (sim_ann_ivf_index_reuse pins the stored-index
     query path within one session; this gate adds the disk round
     trip): write_ivf_index trains and persists both halves (centroids
     parquet + cid-partitioned assignments parquet), read_ivf_index
@@ -1088,7 +1086,7 @@ def sim_ann_ivf_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     read_ivf_index plus value equality here), double-precision
     fidelity through write/read, and the partitionBy(cid) layout
     serving the same rows it was handed. The stored-index consistency
-    check (assigned cids must fit the centroid count, r08 advice) is
+    check (assigned cids must fit the centroid count) is
     unit-tested in tests/test_llm_batch2.py."""
 
     e = load_table(spark, sf_dir, "embeddings").filter(
@@ -1181,10 +1179,10 @@ def sim_ann_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ann_multitable_recall_bound(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Multi-table LSH recall lower bound AT THE PRODUCTION THRESHOLD
-    (r07 verdict item 5b): dedup_embedding_ann's planted pairs sit at
-    cosine ~0.999 where per-plane collision is near-certain, so it
-    can't distinguish a healthy 8-table index from a degraded one.
+    """Multi-table LSH recall lower bound AT THE PRODUCTION THRESHOLD:
+    dedup_embedding_ann's planted pairs sit at cosine ~0.999 where per-plane
+    collision is near-certain, so it can't distinguish a healthy 8-table
+    index from a degraded one.
     This gate plants pairs ON the 0.9 operating point instead — each
     vector gets a +0.1-on-every-3rd-dim copy (unit-norm corpus, so
     planted cosines land in ~[0.88, 0.94] straddling the threshold;
@@ -1297,7 +1295,7 @@ def multimodal_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel sum from the source text (pixel = text byte; the last row's
     zero padding drops out of both sums), so the decode + fan-out is
     value-checked end-to-end. Historically scanlines stood in for
-    video keyframes; since r13 the real container tier lives in
+    video keyframes; the real container tier lives in
     `multimodal_video_frames` (AVI parse) and this gate keeps covering
     the still-image fan-out shape."""
     from ..operators import multimodal
@@ -1329,8 +1327,7 @@ def multimodal_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "multimodal", "video"),
 )
 def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video frame extraction (r12 verdict item 6 — retires the
-    last declared multimodal stand-in): documents -> real AVI
+    """REAL video frame extraction: documents -> real AVI
     containers (text-byte tiles as uncompressed 16x4 DIB frames,
     capped at 6 — operators/codecs.encode_avi_gray) -> full RIFF-tree
     parse back (decode_avi_gray: strh/strf validation, bottom-up DIB
@@ -2442,8 +2439,8 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "text", "lang", "source", "n_words")
     )
-    # Exact dedup keyed on md5(text), not text (r13, guide §2.3 —
-    # shuffle narrower keys): grouping by the raw string shuffled the
+    # Exact dedup keyed on md5(text), not text, to shuffle narrower
+    # keys: grouping by the raw string shuffled the
     # whole corpus text as exchange KEYS; the 16-byte fingerprint cuts
     # that stage's shuffle width ~10-30x at corpus text lengths while
     # keeping the min-doc_id representative per identical text — the
@@ -2495,8 +2492,8 @@ def text_dup_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape for scale: shingles are distinct-per-doc rows (shingle_exploded,
     linear staged pipeline), document frequency is one map-side-combinable
-    group-by on the shingle key, and the df verdict rejoins on that same
-    key — two shuffles of the shingle frame total, no pair fan-out
+    group-by on the shingle key, and the per-shingle df rejoins on that
+    same key — two shuffles of the shingle frame total, no pair fan-out
     anywhere (unlike the O(candidates) near-dup tiers). Hot shingles skew
     the rejoin; AQE skew-join splits those partitions at runtime. Docs
     with <3 tokens have no shingles and drop out in both engines."""
@@ -2942,10 +2939,9 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     N^2 — what makes embedding dedup run at web scale), drop the higher
     id of each duplicate pair.
 
-    Planted-exact-duplicate gate (round-3 verdict item 3; was
-    rows-only): the corpus is unioned with an exact copy of every
-    vector (id + 1_000_000) and the threshold set to 0.999 — above any
-    natural pair (max ~0.51) — so the only duplicates are the planted
+    Planted-exact-duplicate gate: the corpus is unioned with an exact copy
+    of every vector (id + 1_000_000) and the threshold set to 0.999 — above
+    any natural pair (max ~0.51) — so the only duplicates are the planted
     ones, and finding them is STRUCTURAL: an identical vector scores
     every centroid identically, lands in the same cell, and verifies at
     rounded cosine 1.0. Expected output is therefore exactly one
@@ -3933,8 +3929,8 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer training: the REAL 16-merge BPE trainer (Sennrich et al.
     2016 word-frequency formulation; operators/bpe.py for the 100 TB
     shape) under a planted tie-free vocab whose full merge SEQUENCE is
-    SQL-derivable (round-5 verdict item 4; was rows-only — this extends
-    bpe_first_merge_invariant from merge #1 to all 16).
+    SQL-derivable (this extends bpe_first_merge_invariant from merge #1
+    to all 16).
 
     The vocab is 8 disjoint two-letter words ab, cd, ..., op with
     strictly decreasing frequencies f_i = C + (8 - i), where
@@ -4046,7 +4042,7 @@ def bpe_first_merge_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization (IVF-PQ's storage half) under a planted
-    k-means FIXPOINT gate (round-4 verdict item 3; was rows-only): the
+    k-means FIXPOINT gate: the
     training/encoding corpus is 3 exact copies of each of the 16
     lowest-id embeddings (anchors, copy ids offset by 10M*c). The
     trainer's deterministic seeding picks exactly the anchors as the 16
@@ -4100,7 +4096,7 @@ def sim_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC (asymmetric distance) top-5 retrieval over PQ codes — M table
     lookups per candidate instead of a 64-dim dot product, corpus scan
     reads 8 small ints per row instead of 64 floats — under a planted
-    exact-duplicate gate (round-4 verdict item 3; was rows-only): the
+    exact-duplicate gate: the
     corpus is 6 exact copies of each of the 32 lowest-id embeddings
     (copy ids offset by 10M*c), codebooks train to the anchor fixpoint
     (see embedding_pq_codes), and the query set is the anchors
@@ -4700,7 +4696,7 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     - spans are (doc_id, pos, xxhash64(span_text)) rows — the corpus is
       scanned once, each doc emitting n-K+1 spans (map-side, no state);
     - duplicated occurrences are found with ONE count(*) window over the
-      8-byte span hash (r14; only hashes, never span strings, shuffle):
+      8-byte span hash (only hashes, never span strings, shuffle):
       a span survives iff its hash's global count exceeds 1. The prior
       groupBy(h) + rejoin shape computed the span explode TWICE (its two
       consumers' exchanges differ, so exchange reuse never fires) and
@@ -4754,7 +4750,7 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "s.pos", "s.h"
     )
     # Duplicated spans via ONE count window over the span hash instead of
-    # groupBy(h) + rejoin (r14, guide §2.4): the join shape computed the
+    # groupBy(h) + rejoin: the join shape computed the
     # span explode TWICE (its two consumers' exchanges differ — partial
     # agg vs join probe — so exchange reuse never fires) and shuffled sp
     # once for the join on top of the distinct-hash aggregate's shuffle.
@@ -4789,7 +4785,7 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("filter(ws, (x, i) -> NOT array_contains(covc, i + 1))"), " "
         ).alias("kept_text"),
     )
-    # Returned LAZY (r13 optimization): the former
+    # Returned LAZY: the former
     # localCheckpoint(eager=True) + unpersist tail materialized the whole
     # scrubbed corpus into driver-local RDD blocks inside fn() and then
     # made every consumer re-scan those blocks — paying compute + store +
@@ -4970,8 +4966,8 @@ def logreg_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every step re-scans and re-tokenizes the full corpus (A/B measured
     # 2.4 s -> 1.65 s at sf0.1). Unpersisted before return: the result
     # is a driver-side LocalRelation, nothing downstream needs the cache.
-    # r13 construction-cost + plan-stability rework (the round-3 iterative
-    # -operator rule, applied late to this operator): weights now ride in
+    # Construction cost and plan stability (the iterative-operator rule:
+    # per-iteration constants are data, not literals): weights ride in
     # as DATA — a 1-row VALUES relation crossJoined broadcast — instead
     # of per-step plan literals, and the step aggregate is built ONCE as
     # parsed SQL referencing the w1..w4 columns. Two effects, both
@@ -5015,7 +5011,7 @@ def logreg_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats.unpersist()
     # One parsed VALUES relation instead of createDataFrame: the model is
     # 21 scalars, but createDataFrame's row conversion + schema plumbing
-    # cost ~0.25 s of driver time per call (measured r13) — a VALUES
+    # cost ~0.25 s of driver time per call (measured) — a VALUES
     # clause is one py4j round-trip for the same typed LocalRelation.
     vals = ", ".join(
         f"({s}, CAST({a!r} AS DOUBLE), CAST({b!r} AS DOUBLE),"
@@ -5030,7 +5026,7 @@ def logreg_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Mergeable sketches: KMV/theta cardinality, count-min frequency (r09)
+# Mergeable sketches: KMV/theta cardinality, count-min frequency
 # --------------------------------------------------------------------------
 # Exact COUNT(DISTINCT) and exact heavy hitters shuffle the full key
 # space; at 100 TB the production tier is a mergeable sketch built

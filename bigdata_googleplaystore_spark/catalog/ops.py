@@ -32,7 +32,7 @@ def _save_confs(spark: SparkSession, keys) -> dict[str, str | None]:
     never set maps to None (restore = unset), NOT the engine-default
     string `spark.conf.get()` would serve — pinning a default as an
     explicit value would mask later default changes and convert
-    previously-unset confs into set ones (advisor r07). Uses
+    previously-unset confs into set ones. Uses
     SQLConf.contains, which consults only the explicitly-set settings
     map, never the registered defaults."""
     sqlconf = spark._jsparkSession.sessionState().conf()
@@ -85,8 +85,8 @@ def scan_project_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scan", "partitioning", "layout"),
 )
 def partitioned_scan_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Read-side STATIC partition pruning end-to-end (round-3 verdict
-    item 5): lineitem is written out hive-partitioned by a derived
+    """Read-side STATIC partition pruning end-to-end: lineitem is
+    written out hive-partitioned by a derived
     ship_year column (sources.write_parquet partition_by — the at-rest
     layout a 100 TB fact table would use), re-read, and filtered on the
     partition column. Catalyst turns the filter into a PartitionFilters
@@ -742,8 +742,8 @@ def dpp_partition_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     execution only (its wrapper hides the final plan from metric
     traversal); the pruning itself works under either setting. The
     returned frame is driver-constructed from the probe's 2 collected
-    rows (advisor r07: re-executing build() under session conf doubled
-    the gate's cost for identical values)."""
+    rows (re-executing build() under session conf would double the
+    gate's cost for identical values)."""
     ev = load_table(spark, sf_dir, "events")
     path = scratch_dir("events_by_type_dpp", sf_dir)
     ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
@@ -1010,7 +1010,7 @@ def zorder_pruning_payoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         Files are enumerated via the Hadoop FileSystem API (the same
         route parquet_file_stats uses — correct for hdfs://, s3a://,
-        file:// alike, advisor r07); the footer read itself is pyarrow,
+        file:// alike); the footer read itself is pyarrow,
         which needs a LOCAL path, so a remote scratch root fails loudly
         here instead of silently listing 0 segments."""
         jvm = spark.sparkContext._jvm
@@ -1291,9 +1291,9 @@ def json_corrupt_record_permissive(spark: SparkSession, sf_dir: str) -> DataFram
     dirty-data contract every event pipeline needs (the CSV twin lives
     in sources/__init__.py's PERMISSIVE/DROPMALFORMED/FAILFAST reader):
     every 7th event's props payload is prefixed with '{]' — GUARANTEED
-    invalid JSON for any suffix, since ']' can never follow '{' (the
-    r08 advice: the earlier 4-char truncation was only
-    corrupt-by-coincidence of the generator's payload shape) — and
+    invalid JSON for any suffix, since ']' can never follow '{' (a
+    truncation would be corrupt only by coincidence of the generator's
+    payload shape) — and
     parsed with from_json under PERMISSIVE mode with a declared
     _corrupt_record column. The contract, all three clauses
     value-checked: a malformed row is NOT dropped (PERMISSIVE ≠
@@ -1771,7 +1771,7 @@ def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.7: EXCEPT (customers with no 1-URGENT order).
 
-    Operand choice (round-5 verdict item 5): the previous pair —
+    Operand choice: the previous pair —
     nation keys minus supplier nation keys — was EMPTY at sf>=0.01
     (every nation has a supplier), so the green driver row was
     vacuous: an over-filtering bug would still have matched the 0-row
@@ -2444,7 +2444,7 @@ def analyze_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Every statistic is harvested; drop the scratch catalog entry so
     # repeated gate runs don't accumulate one metastore table per sf_dir
-    # (advisor r07 — a later scratch-dir cleanup would otherwise leave a
+    # (a later scratch-dir cleanup would otherwise leave a
     # dangling external-table entry). The parquet data under scratch_dir
     # is unaffected (external table: DROP removes metadata only).
     spark.sql(f"DROP TABLE IF EXISTS {tname}")
@@ -2983,8 +2983,8 @@ def incremental_join_view_maintenance(spark: SparkSession, sf_dir: str) -> DataF
 def incremental_join_view_retractions(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Retraction-capable join-view maintenance (the r07 verdict's named
-    gap: delta_join was insert-only), driver-checked end-to-end: the
+    """Retraction-capable join-view maintenance (delta_join is
+    insert-only), driver-checked end-to-end: the
     per-priority quantity rollup over orders ⋈ lineitem absorbs a CDC
     batch containing DELETES on one side and UPDATES on the other —
     every 13th order is deleted (ΔO = those rows at multiplicity -1)
@@ -4813,7 +4813,7 @@ def pagerank_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     are verified against a hand-rolled reference implementation in
     tests/test_graph.py.
 
-    Oracle (round-3 verdict item 3, was rows-only): the event-type graph
+    Oracle: the event-type graph
     is model-sized, so the 10-step damped fixpoint IS SQL-expressible as
     a recursive CTE — each recursive step is the same join-aggregate the
     Spark loop runs, with zero-weight self-loops standing in for the
@@ -5478,7 +5478,7 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cutoff, mx = row["d0"] + dt.timedelta(days=1), row["mx"]
 
-    # DATA-ASSUMPTION GUARD (r08 advice): the gate's constant-TRUE oracle
+    # DATA-ASSUMPTION GUARD: the gate's constant-TRUE oracle
     # presumes (a) a second-day straggler exists and (b) its 1-hour
     # window is already finalized at the batch-1 watermark (mx - 1h) so
     # the drop is forced. If a scale factor ever violates either, fail
@@ -9238,8 +9238,8 @@ def stream_cdf_table_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "manifest", "cdf", "upsert", "scale"),
 )
 def stream_cdf_update_pairing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UPDATE-IMAGE PAIRING on the CDF stream (Delta CDF parity,
-    closing the one documented divergence r11 left): the manifest
+    """UPDATE-IMAGE PAIRING on the CDF stream (Delta CDF parity for
+    updates): the manifest
     protocol stores a MERGE physically as batch+delete in one commit
     (manifest.commit_upsert), and by default the feed surfaces it as
     delete(old)+insert(new). With `keyColumns`, the source pairs the

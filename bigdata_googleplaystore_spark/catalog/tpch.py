@@ -35,8 +35,8 @@ from .registry import register
 _CUTOFF = "1998-09-02 00:00:00"
 
 # The 8 BENCH-tagged queries below are built as ONE parsed SQL statement
-# via spark.sql(..., {table}=df) instead of composed Column objects (r13
-# optimization, guide §7.3 "driver-side cost"): the Column form of q1
+# via spark.sql(..., {table}=df) instead of composed Column objects, for
+# driver-side construction cost: the Column form of q1
 # alone issued ~700 py4j round-trips per construction (~0.25-0.5 s of
 # driver latency inside the timed bench region; measured with cProfile —
 # every lit/cast/operator is a socket round-trip), the parsed form ~60.

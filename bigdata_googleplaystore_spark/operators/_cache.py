@@ -1,5 +1,5 @@
 """Keep-latest cache bookkeeping for operators that persist a shared
-intermediate and return a LAZY result (r14, verdict item 7).
+intermediate and return a LAZY result.
 
 These operators (heavy_hitters' stats fold, the media-dedup hash frames,
 the scrub-corpus token frame, minhash's shingle frame) persist a frame

@@ -1,10 +1,9 @@
 """Pure-stdlib media codecs: PNG (8-bit grayscale), BMP (24-bit), WAV
 (PCM16 mono), AVI (uncompressed 24-bit DIB video).
 
-Round-3 verdict item 2: the multimodal operators' decode step was a
-declared stub because PIL/ffmpeg are absent from this container. These
-codecs remove the stub without adding a dependency — real, spec-conformant
-parsers/writers over ``zlib`` + ``struct``:
+The multimodal operators decode real media without PIL or ffmpeg: these
+codecs are spec-conformant parsers/writers over ``zlib`` + ``struct``,
+so decoding adds no dependency:
 
 - PNG: writes 8-bit grayscale with per-row filter bytes and CRC'd chunks;
   the decoder validates the signature, every chunk CRC, and un-filters all
@@ -19,9 +18,8 @@ parsers/writers over ``zlib`` + ``struct``:
   BI_RGB 24-bit DIB frames ('00db' chunks in the 'movi' list, BMP's
   bottom-up padded row layout) with a spec-complete keyframed 'idx1';
   the parser walks the RIFF tree (tolerating JUNK/INFO and the '00dc'
-  tag real muxers use) and REFUSES compressed codecs (MJPG etc.) —
-  this retires the last declared multimodal stand-in (r12 verdict
-  item 6): frame extraction parses a real video container now.
+  tag real muxers use) and REFUSES compressed codecs (MJPG etc.), so
+  frame extraction parses a real video container.
 
 These run inside Arrow-batched ``mapInPandas`` workers
 (operators/multimodal.py): per-payload Python is the irreducible cost of

@@ -208,8 +208,8 @@ def jaccard_pairs(
         return _jaccard_pairs_staged(
             df, id_col, text_col, n, threshold, max_shingle_df
         )
-    # ONE parsed SQL statement (r13 round 2, guide §7.3): the staged
-    # Column composition below issued ~800 py4j round-trips / ~10 eager
+    # ONE parsed SQL statement, for driver-side construction cost: the
+    # staged Column composition below issued ~800 py4j round-trips / ~10 eager
     # Dataset re-analyses per construction (~0.3 s driver time inside the
     # bench row); one parse builds the same stages. The CTE structure
     # preserves both staging properties from shingle_arrays/
@@ -406,10 +406,10 @@ def minhash_signatures(
     # Built as ONE parsed SQL string, not composed Column objects: the
     # Column form issued ~1,900 py4j round-trips (64 coefficient
     # structs x lits + the HOF lambdas), ~250 ms of driver latency per
-    # construction; the parsed string is one round-trip for the
-    # identical expression tree (r13 optimization — every coefficient
-    # fits in INT, matching F.lit's former IntegerType, so hash inputs
-    # and arithmetic promotion are bit-identical).
+    # construction; the parsed string is one round-trip for the identical
+    # expression tree (every coefficient fits in INT, matching F.lit's
+    # former IntegerType, so hash inputs and arithmetic promotion are
+    # bit-identical).
     return s.filter(F.col("set_size") > 0).select(
         "doc", "set_size", F.expr(_signature_sql(num_hashes)).alias("signature")
     )
@@ -443,7 +443,7 @@ def band_buckets(sig: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     (minhash_lsh_pairs_incremental), and the single definition keeps
     full and incremental banding bit-identical.
 
-    One parsed SQL expression (same r13 construction-cost rationale as
+    One parsed SQL expression (the same construction-cost rationale as
     minhash_signatures: the Column form was bands x (rows+2) py4j
     round-trips; band literals are INT and signature elements BIGINT in
     both forms, so every xxhash64 input type — and therefore every
@@ -490,11 +490,11 @@ def lsh_candidate_pairs(
     )
 
 
-# Per-invocation temp-view bookkeeping for minhash_lsh_pairs (r14, verdict
-# item 6 / advice): each invocation registers its persisted shingle frame
-# under a UNIQUE view name, so a second invocation — even from another
-# thread — can never rebind an in-flight invocation's view between its
-# registration and its spark.sql analysis (the wrong-results race a fixed
+# Per-invocation temp-view bookkeeping for minhash_lsh_pairs: each
+# invocation registers its persisted shingle frame under a UNIQUE view name,
+# so a second invocation — even from another thread — can never rebind an
+# in-flight invocation's view between its registration and its spark.sql
+# analysis (the wrong-results race a fixed
 # session-global name allows). Hygiene stays replace-equivalent: when a new
 # invocation has finished ANALYZING its statement, it releases the previous
 # invocation's view+cache (the prior result's plan is already analyzed, so
@@ -570,7 +570,7 @@ def minhash_lsh_pairs(
     # cached footprint and lets the signature stage skip the explode
     # entirely (map-only array_min/transform — no signature shuffle).
     # Everything downstream of the persisted shingle frame is ONE parsed
-    # SQL statement (r13 round 2, guide §7.3): the staged Column
+    # SQL statement, for driver-side construction cost: the staged Column
     # composition (kept as _minhash_lsh_pairs_staged) issued ~1,000 py4j
     # round-trips / ~15 eager Dataset re-analyses per construction. The
     # persisted frame is referenced BY TEMP VIEW NAME, not as a spark.sql
@@ -584,7 +584,7 @@ def minhash_lsh_pairs(
     # resolves to (measured — dropping right after parsing silently lost
     # the cache and the shingle pipeline re-ran per consumer, 1.8 s ->
     # 12 s e2e). Each invocation registers a UNIQUE engine-prefixed name
-    # (r14: a fixed name let a concurrent invocation rebind the view
+    # (a fixed name would let a concurrent invocation rebind the view
     # between registration and analysis — wrong results) and releases
     # the PREVIOUS invocation's view+cache after its own analysis
     # completes (bench/sim clear cache per query anyway).

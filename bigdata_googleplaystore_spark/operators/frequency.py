@@ -44,7 +44,7 @@ def heavy_hitters(items: DataFrame, col: str, k: int) -> DataFrame:
     # per-batch row totals (item=NULL marker rows), so the global N no
     # longer needs its own third scan of `items` — at scale `items` is
     # the tokenized corpus, and the extra pass re-ran the whole
-    # tokenize/explode (r13, guide §1.2: remove a full input pass).
+    # tokenize/explode.
     # The folded (item, sum) frame is persisted because its two
     # consumers prune different columns, so their aggregates (and
     # exchanges) diverge and exchange reuse cannot dedup the scan

@@ -138,8 +138,8 @@ def triangle_count(
     # cache population + memory pressure for work the shuffle files
     # already hold) and costs executor storage memory at 100 TB.
     if method == "edge_iter":
-        # The default path is built as ONE parsed SQL statement (r13,
-        # guide §7.3): the Column form issued ~1,250 py4j round-trips
+        # The default path is built as ONE parsed SQL statement: the
+        # Column form issued ~1,250 py4j round-trips
         # and re-analyzed the growing tree on every of its ~15 eager
         # Dataset ops — 0.29 s of driver time per construction vs
         # 0.11 s for one parse + one analysis. CTE for CTE it is the

@@ -451,7 +451,7 @@ def audio_window_rms(media: DataFrame, window_samples: int = 256) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Video (AVI container — real frames, r12 verdict item 6)
+# Video (AVI container — real frames)
 # ----------------------------------------------------------------------
 
 VIDEO_FRAME_W = 16  # fixture convention: video frames are 16x4 gray px

@@ -34,7 +34,7 @@ def cosine_topk(
     """Exact brute-force top-k: broadcast queries x corpus, JVM-side
     zip_with/aggregate dot products, rank window per query.
 
-    Built as ONE parsed SQL statement (r13, guide §7.3 construction
+    Built as ONE parsed SQL statement (for driver-side construction
     cost) with `_cosine_sql` mirroring functions/vectors.py's
     cosine_similarity tree exactly — same left-to-right double
     accumulation, so the rounded sims match DuckDB's sequential
@@ -395,7 +395,7 @@ def ivf_topk(
             "pass both halves of the stored index"
         )
     if assigned is not None:
-        # consistency check (r08 advice): an `assigned` trained against a
+        # consistency check: an `assigned` trained against a
         # DIFFERENT (larger) centroid set carries cids no probe can ever
         # select — catch the detectable half of the mismatch instead of
         # returning arbitrary neighbors. Column-pruned single-agg pass
@@ -709,7 +709,7 @@ def top_principal_component(df: DataFrame, vec_col: str):
 def top_pc_power_iteration(df: DataFrame, vec_col: str, iters: int = 400):
     """Top principal component via a FIXED-STEP power iteration on the
     exact moment matrix — the oracle-bindable variant of
-    top_principal_component (round-3 verdict item 3).
+    top_principal_component.
 
     Same distributed shape (covariance_moments reduces cluster-side;
     only the d x d model reaches the driver), but the driver-side

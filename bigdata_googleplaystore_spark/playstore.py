@@ -35,8 +35,8 @@ from pyspark.sql import functions as F
 CSV_DELIMITER = "§"  # C:11 csvWritingProperties
 
 # Inferred-schema memo for read_playstore_csv, keyed on the file identity
-# (path, mtime_ns, size) — the load_table schema-memo pattern (r14,
-# verdict item 4): CSV schema inference reads the whole file an extra
+# (path, mtime_ns, size) — the load_table schema-memo pattern: CSV
+# schema inference reads the whole file an extra
 # time PER CALL, and the inference RESULT is what is load-bearing for
 # reference parity (on the real file it yields all-string columns, which
 # drives Part 2's lexicographic sort), not the act of re-inferring an

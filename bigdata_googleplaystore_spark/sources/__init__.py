@@ -195,7 +195,7 @@ def write_parquet(
     """Parquet sink (S5; reference writes gzip, challenge.scala:186-190).
 
     Writes with the session codec (`spark.sql.parquet.compression.codec`,
-    zstd under get_spark).
+    zstd under get_spark) and page format (`parquet.writer.version`, v2).
 
     At scale, prefer ``partition_by`` on low-cardinality pruning columns
     (date, region) and ``bucket_by`` on high-cardinality join keys so

@@ -1,7 +1,8 @@
 """What the engine's Parquet writes cost and produce: the session codec
-(zstd) reaches every engine writer while the reference-parity sinks keep
-gzip, a lakehouse batch commit runs one Spark job (its stats are observed
-on the write), and the Part 4/5 read-backs plan without a footer job."""
+(zstd) and v2 data pages reach every engine writer while the
+reference-parity sinks keep gzip, a lakehouse batch commit runs one Spark
+job (its stats are observed on the write), and the Part 4/5 read-backs
+plan without a footer job."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import glob
 import itertools
 
 import duckdb
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -21,14 +23,48 @@ from bigdata_googleplaystore_spark.streaming import manifest
 _GROUPS = itertools.count()
 
 
-def _codecs(path: str) -> set[str]:
-    """The codec of the first column chunk of every data file under `path`."""
+def _files(path: str) -> list[str]:
     files = glob.glob(f"{path}/**/*.parquet", recursive=True)
     assert files, f"no parquet files under {path}"
+    return files
+
+
+def _codecs(path: str) -> set[str]:
+    """The codec of the first column chunk of every data file under `path`."""
     return {
         pq.ParquetFile(f).metadata.row_group(0).column(0).compression
-        for f in files
+        for f in _files(path)
     }
+
+
+def _encodings(path: str, column: str | None = None) -> set[str]:
+    """Every encoding in the footers under `path`, of one column or of all."""
+    out = set()
+    for f in _files(path):
+        md = pq.ParquetFile(f).metadata
+        for g in range(md.num_row_groups):
+            for c in range(md.num_columns):
+                chunk = md.row_group(g).column(c)
+                if column in (None, chunk.path_in_schema):
+                    out.update(chunk.encodings)
+    return out
+
+
+# Encodings only the v2 page writer uses: where a dictionary does not pay
+# off, the v1 writer falls back to PLAIN instead.
+_V2_ONLY = {"DELTA_BINARY_PACKED", "DELTA_LENGTH_BYTE_ARRAY", "DELTA_BYTE_ARRAY"}
+
+
+def _count_and_sum(spark, path: str, column: str) -> set[tuple[int, int]]:
+    """(rows, sum of `column`) as Spark, pyarrow (the change-feed source's
+    executors) and DuckDB (the oracles) read `path`: one pair when the
+    three agree."""
+    t = pq.read_table(path)
+    s = spark.read.parquet(path).agg(F.count("*"), F.sum(column)).first()
+    d = duckdb.sql(
+        f"SELECT count(*), sum({column}) FROM read_parquet('{path}/*.parquet')"
+    ).fetchone()
+    return {(t.num_rows, pc.sum(t[column]).as_py()), tuple(s), tuple(d)}
 
 
 def _group_jobs(spark, group: str) -> list[int]:
@@ -82,6 +118,9 @@ def _play_store(spark):
 
 
 def test_engine_parquet_is_zstd_and_parity_sinks_stay_gzip(spark, tmp_path):
+    """Every engine writer stores zstd with v2 pages, so the unique
+    `o_orderkey` longs are delta-packed rather than PLAIN; Parts 4 and 5
+    keep gzip under v2 pages; Spark, pyarrow and DuckDB read them all."""
     table = str(tmp_path / "tbl")
     o = _orders(spark)
     manifest.write_and_commit_batch(spark, o, table, 0)
@@ -90,25 +129,58 @@ def test_engine_parquet_is_zstd_and_parity_sinks_stay_gzip(spark, tmp_path):
     )
     plain = str(tmp_path / "plain")
     o.write.parquet(plain)
-    for path, n in (
-        (manifest_log.batch_path(table, 0), 300),
-        (manifest_log.delete_path(table, 0), 10),
-        (plain, 300),
+    for path, n, total in (
+        (manifest_log.batch_path(table, 0), 300, 299 * 300 // 2),
+        (manifest_log.delete_path(table, 0), 10, 9 * 10 // 2),
+        (plain, 300, 299 * 300 // 2),
     ):
         assert _codecs(path) == {"ZSTD"}, path
-        # the engine's other readers: pyarrow (the change-feed source's
-        # executors) and DuckDB (the oracles)
-        assert pq.read_table(path).num_rows == n
-        got = duckdb.sql(f"SELECT count(*) FROM read_parquet('{path}/*.parquet')")
-        assert got.fetchone()[0] == n
+        enc = _encodings(path, "o_orderkey")
+        assert "DELTA_BINARY_PACKED" in enc and "PLAIN" not in enc, (path, enc)
+        assert _count_and_sum(spark, path, "o_orderkey") == {(n, total)}, path
 
     df3 = playstore.group_by_app_and_standardize(_play_store(spark))
     df1 = df3.select("App").withColumn("Average_Sentiment_Polarity", F.lit(0.5))
     part4, part5 = str(tmp_path / "cleaned.gz"), str(tmp_path / "metrics.gz")
     df4 = playstore.clean_google_play_store_data(spark, df1, df3, part4)
-    playstore.get_google_play_store_metrics_by_genre(spark, df4, part5)
-    assert _codecs(part4) == {"GZIP"}
-    assert _codecs(part5) == {"GZIP"}
+    df5 = playstore.get_google_play_store_metrics_by_genre(spark, df4, part5)
+    for path, df, column in ((part4, df4, "Reviews"), (part5, df5, "Count")):
+        assert _codecs(path) == {"GZIP"}, path
+        assert _encodings(path) & _V2_ONLY, path
+        want = df.agg(F.count("*"), F.sum(column)).first()
+        assert _count_and_sum(spark, path, column) == {tuple(want)}, path
+
+
+def test_v2_pages_reach_a_live_session_and_yield_to_a_write_option(spark, tmp_path):
+    """`get_spark` over a session that was created without the engine's
+    conf (a caller's own session) switches its writes to v2 pages; a write
+    that asks for v1 pages gets them under the v2 default."""
+    from bigdata_googleplaystore_spark.session import get_spark
+
+    o = _orders(spark)
+    v1, v2, opt = (str(tmp_path / d) for d in ("v1", "v2", "opt"))
+    sc = spark.sparkContext
+    same_session = dict(
+        app_name=sc.appName,
+        master=sc.master,
+        shuffle_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")),
+    )
+    version = spark.conf.get("parquet.writer.version", None)
+    spark.conf.unset("parquet.writer.version")
+    try:
+        o.write.parquet(v1)
+        assert get_spark(**same_session) is spark
+        o.write.parquet(v2)
+    finally:
+        if version is None:
+            spark.conf.unset("parquet.writer.version")
+        else:
+            spark.conf.set("parquet.writer.version", version)
+    o.write.option("parquet.writer.version", "v1").parquet(opt)
+    assert "PLAIN" in _encodings(v1, "o_orderkey")
+    assert "DELTA_BINARY_PACKED" in _encodings(v2, "o_orderkey")
+    assert "PLAIN" in _encodings(opt, "o_orderkey")
+    assert not _encodings(opt) & _V2_ONLY
 
 
 def test_batch_commit_runs_one_job_and_records_observed_stats(spark, tmp_path):

@@ -1,6 +1,7 @@
 """Scale-path operators: salted/split joins must equal their plain
 equivalents, and bucketed tables must join with zero shuffle; the
-local-mode session gets a heap sized for them."""
+local-mode session gets a heap sized for them and a codegen cache that
+holds a workload's generated classes."""
 
 from __future__ import annotations
 
@@ -62,6 +63,26 @@ def test_heap_default_is_sized_to_the_host(monkeypatch, tmp_path):
     assert default_driver_memory() == "2048m"
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     assert default_driver_memory() == "3g"
+
+
+def test_second_run_of_a_150_plan_query_set_compiles_nothing(spark):
+    """150 plans that differ only in an integer literal (codegen inlines
+    it, so each is its own generated class) run twice: the second run is
+    served from the codegen cache, where Spark's default 100 entries
+    would evict and recompile them."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    count = lambda: metrics.METRIC_COMPILATION_TIME().getCount()  # noqa: E731
+    # literals no other test plans with, so the first run compiles them all
+    plans = [spark.range(10).where(F.col("id") > 7_000_003 + i) for i in range(150)]
+
+    before = count()
+    for df in plans:
+        assert df.collect() == []
+    first = count()
+    for df in plans:
+        df.collect()
+    assert first - before >= 150
+    assert count() == first
 
 
 def test_salted_join_equals_plain_join(spark, sf_dir):
